@@ -6,6 +6,13 @@
   pass 2 (per-page map):   broadcast phrase index -> Arrow-batched strip ->
                            (url, extracted_text, removed_spans)
 
+One strip function, `_strip_batches` (parse html when non-null, else take
+`text`, then strip), serves `strip_pass`, `strip_text_pass`,
+`extract_main_content` and streaming's `stream_strip`.  A fresh pipeline
+run parses html once: `_parse_and_mine` persists the parsed `text_repr` (a
+string column - cache-friendly, unlike token arrays) and mines it, and
+pass 2 strips from that same frame.
+
 Scale notes:
   * Pass 2 is a pure map - NO shuffle; parallelism is input-partition bound.
     `repartition_by_url` adds an explicit repartition(xxhash64(url)) when the
@@ -16,10 +23,6 @@ Scale notes:
     batch matcher (core/extract_vec.py) inside mapInPandas Arrow batches -
     rolling-hash window matching, no per-row per-phrase Python loops.  The
     pure-Python kernel (core/extract.py) remains the golden oracle.
-  * HTML parses ONCE: pass 1 persists the parsed `text_repr` (string column -
-    cache-friendly, unlike token arrays) and pass 2 strips from that same
-    persisted frame.  Pages with html=NULL never enter Python (the null
-    branch stays JVM-side).
 """
 
 from __future__ import annotations
@@ -28,6 +31,7 @@ from collections.abc import Iterator
 
 import pandas as pd
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -82,87 +86,74 @@ def with_text_repr(pages: DataFrame) -> DataFrame:
     return with_html.unionByName(text_only)
 
 
-def mine_boilerplate(
-    spark: SparkSession,
-    pages: DataFrame,
-    min_docs: int,
-    ngrams: int,
-    min_l: int | None = None,
-    **mine_kw,
-) -> list[str]:
-    """Pass 1 standalone: corpus-global boilerplate phrase list (small,
-    driver-side).  `extract_main_content` inlines this so the parsed text
-    cache survives into pass 2; use this entry when only the phrase list is
-    needed."""
-    from pyspark import StorageLevel
+def _strip_batches(
+    batches: Iterator[pd.DataFrame], by_len: dict
+) -> Iterator[pd.DataFrame]:
+    """The one strip body: (url, html, text) batches -> EXTRACTED_SCHEMA
+    batches.  A page's text is its parsed html when html is non-null, else
+    `text` ("" when both are NULL)."""
+    for pdf in batches:
+        texts = [
+            html_to_text(h) if h is not None else (t or "")
+            for h, t in zip(pdf["html"], pdf["text"])
+        ]
+        out_text, spans = strip_batch(texts, by_len)
+        yield pd.DataFrame(
+            {
+                "url": pdf["url"],
+                "extracted_text": out_text,
+                "removed_spans": [
+                    [{"start": s, "end": e, "phrase": p} for s, e, p in sp]
+                    for sp in spans
+                ],
+            }
+        )
 
-    # cache the STRING text representation (html parse runs once); token
-    # ARRAYS are recomputed per pass - array<string> columnar cache reads
-    # are far slower than split()-on-scan (see bloomspan.mine note)
-    text_repr = with_text_repr(pages).select("url", "text_repr").persist(
-        StorageLevel.MEMORY_AND_DISK
+
+def strip_pass(pages: DataFrame, phrases: list[str]) -> DataFrame:
+    """Pass 2 from raw pages (url, html, text): parse + strip in one map;
+    returns EXTRACTED_SCHEMA rows.  `phrases` rides the closure -> task
+    broadcast; the by-length index is built once, on the driver."""
+    by_len = index_phrases(phrases)
+    return pages.select("url", "html", "text").mapInPandas(
+        lambda batches: _strip_batches(batches, by_len), EXTRACTED_SCHEMA
     )
-    try:
-        docs = text_repr.select(
-            F.col("url").alias("doc_id"), tokens("text_repr").alias("tokens")
-        )
-        phrases = bloomspan.mine(
-            spark, docs, min_docs=min_docs, ngrams=ngrams, min_l=min_l, **mine_kw
-        )
-        return [p.text for p in phrases]
-    finally:
-        text_repr.unpersist()
 
 
 def strip_text_pass(
     df: DataFrame, phrases: list[str], text_col: str = "text_repr"
 ) -> DataFrame:
-    """Pass 2 over an already-parsed text column: vectorized batch strip;
-    returns EXTRACTED_SCHEMA rows.  `phrases` rides the closure -> task
-    broadcast; the by-length index is built once per Python worker."""
-    by_len = index_phrases(phrases)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out_text, spans = strip_batch(list(pdf[text_col]), by_len)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "extracted_text": out_text,
-                    "removed_spans": [
-                        [{"start": s, "end": e, "phrase": p} for s, e, p in sp]
-                        for sp in spans
-                    ],
-                }
-            )
-
-    return df.select("url", text_col).mapInPandas(run, EXTRACTED_SCHEMA)
+    """Pass 2 over an already-parsed text column: `strip_pass` with no
+    html, so nothing parses again."""
+    no_html = F.lit(None).cast(T.BinaryType()).alias("html")
+    return strip_pass(df.select("url", no_html, F.col(text_col).alias("text")), phrases)
 
 
-def strip_pass(pages: DataFrame, phrases: list[str]) -> DataFrame:
-    """Pass 2 from raw pages (url, html, text): parse + strip in one map.
-    Prefer `extract_main_content`, which reuses the pass-1 parse cache."""
-    by_len = index_phrases(phrases)
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            texts = [
-                html_to_text(h) if h is not None else (t or "")
-                for h, t in zip(pdf["html"], pdf["text"])
-            ]
-            out_text, spans = strip_batch(texts, by_len)
-            yield pd.DataFrame(
-                {
-                    "url": pdf["url"],
-                    "extracted_text": out_text,
-                    "removed_spans": [
-                        [{"start": s, "end": e, "phrase": p} for s, e, p in sp]
-                        for sp in spans
-                    ],
-                }
-            )
-
-    return pages.select("url", "html", "text").mapInPandas(run, EXTRACTED_SCHEMA)
+def _parse_and_mine(
+    spark: SparkSession, pages: DataFrame, min_docs: int, ngrams: int,
+    min_l: int | None, repartition_by_url: bool, **mine_kw,
+) -> tuple[DataFrame, list[bloomspan.WCandidate]]:
+    """Pass 1: parse every page once into a persisted (url, text_repr) frame
+    and mine it -> (that frame, mined phrases).  The caller strips from the
+    frame and unpersists it; a failed mine releases it here."""
+    text_repr = with_text_repr(pages).select("url", "text_repr")
+    if repartition_by_url:
+        text_repr = text_repr.repartition(F.xxhash64("url"))
+    # cache the STRING text representation; token ARRAYS are recomputed per
+    # mine scan - array<string> columnar cache reads are far slower than
+    # split()-on-scan (see bloomspan.mine note)
+    text_repr = text_repr.persist(StorageLevel.MEMORY_AND_DISK)
+    docs = text_repr.select(
+        F.col("url").alias("doc_id"), tokens("text_repr").alias("tokens")
+    )
+    try:
+        mined = bloomspan.mine(
+            spark, docs, min_docs=min_docs, ngrams=ngrams, min_l=min_l, **mine_kw
+        )
+    except BaseException:
+        text_repr.unpersist()
+        raise
+    return text_repr, mined
 
 
 def extract_main_content(
@@ -181,19 +172,8 @@ def extract_main_content(
     alive because the returned DataFrame is lazy; Spark evicts it under
     pressure, and callers may `.unpersist()` the input lineage after
     materializing."""
-    from pyspark import StorageLevel
-
-    text_repr = with_text_repr(pages).select("url", "text_repr")
-    if repartition_by_url:
-        text_repr = text_repr.repartition(F.xxhash64("url"))
-    text_repr = text_repr.persist(StorageLevel.MEMORY_AND_DISK)
-    docs = text_repr.select(
-        F.col("url").alias("doc_id"), tokens("text_repr").alias("tokens")
+    text_repr, mined = _parse_and_mine(
+        spark, pages, min_docs, ngrams, min_l, repartition_by_url, **mine_kw
     )
-    phrases = [
-        p.text
-        for p in bloomspan.mine(
-            spark, docs, min_docs=min_docs, ngrams=ngrams, min_l=min_l, **mine_kw
-        )
-    ]
+    phrases = [p.text for p in mined]
     return strip_text_pass(text_repr, phrases), phrases

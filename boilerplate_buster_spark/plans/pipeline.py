@@ -35,12 +35,10 @@ import os
 import time
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from boilerplate_buster_spark.operators import bloomspan
-from boilerplate_buster_spark.operators.extraction import strip_pass, with_text_repr
-from boilerplate_buster_spark.functions.tokenizer import tokens
+from boilerplate_buster_spark.operators import bloomspan, extraction
 
 
 class CheckpointStore:
@@ -228,8 +226,12 @@ def run_extraction_pipeline(
     """Two-stage checkpointed extraction:
 
       stage `phrases`: corpus-global mining -> phrase table + df metrics
-      stage `extract`: Arrow strip pass -> extracted table + per-partition
-                       lineage table
+      stage `extract`: Arrow strip pass -> extracted table (its n_pages /
+                       extracted_chars totals from an Observation on the
+                       write) + per-partition lineage of the written table
+
+    A fresh run mines and strips one persisted parse, released before
+    return; a resume with phrases committed strips the raw pages.
 
     Re-running with the same checkpoint_dir skips committed stages (resume
     from last snapshot).  Returns a summary dict incl. which stages ran.
@@ -237,55 +239,64 @@ def run_extraction_pipeline(
     store = make_checkpoint_store(spark, checkpoint_dir, iceberg_catalog)
     done = store.completed_stages()
     ran = []
+    text_repr = None  # the fresh run's persisted parse
 
-    if "phrases" in done:
-        phrases = [
-            r["phrase"] for r in store.read_table(spark, "phrases").collect()
-        ]
-    else:
-        docs = with_text_repr(pages).select(
-            F.col("url").alias("doc_id"), tokens("text_repr").alias("tokens")
-        )
-        # M5 mining-statistics table (bloom_gram_miner.cpp:447-454,710-718):
-        # seed totals + accepted/rejected/%reduction + phrase counts land in
-        # the snapshot manifest alongside the df-count metrics
-        mine_stats: dict = {}
-        mined = bloomspan.mine(
-            spark, docs, min_docs=min_docs, ngrams=ngrams, min_l=min_l,
-            stats=mine_stats, **mine_kw,
-        )
-        phrases = [p.text for p in mined]
-        phrase_tbl = bloomspan.phrases_to_df(spark, mined)
-        path = store.write_table(phrase_tbl, "phrases")
-        store.commit(
-            "phrases",
-            {"phrases": path},
-            {
-                "n_phrases": len(phrases),
-                "min_docs": min_docs,
-                "ngrams": ngrams,
-                "max_phrase_len": max((len(p.split()) for p in phrases), default=0),
-                **mine_stats,
-            },
-        )
-        ran.append("phrases")
+    try:
+        if "phrases" in done:
+            phrases = [
+                r["phrase"] for r in store.read_table(spark, "phrases").collect()
+            ]
+        else:
+            # M5 mining-statistics table (bloom_gram_miner.cpp:447-454,710-718):
+            # seed totals + accepted/rejected/%reduction + phrase counts land
+            # in the snapshot manifest alongside the df-count metrics
+            mine_stats: dict = {}
+            text_repr, mined = extraction._parse_and_mine(
+                spark, pages, min_docs, ngrams, min_l, repartition_by_url,
+                stats=mine_stats, **mine_kw,
+            )
+            phrases = [p.text for p in mined]
+            phrase_tbl = bloomspan.phrases_to_df(spark, mined)
+            path = store.write_table(phrase_tbl, "phrases")
+            store.commit(
+                "phrases",
+                {"phrases": path},
+                {
+                    "n_phrases": len(phrases),
+                    "min_docs": min_docs,
+                    "ngrams": ngrams,
+                    "max_phrase_len": max((len(p.split()) for p in phrases), default=0),
+                    **mine_stats,
+                },
+            )
+            ran.append("phrases")
 
-    if "extract" not in done:
-        src = pages.repartition(F.xxhash64("url")) if repartition_by_url else pages
-        ext = strip_pass(src, phrases)
-        ext_path = store.write_table(ext, "extracted")
-        ext_read = store.read_table(spark, "extracted")
-        lin = partition_lineage(ext_read, "url", "extracted_text")
-        lin_path = store.write_table(lin, "lineage")
-        agg = ext_read.agg(
-            F.count("*").alias("n"), F.sum(F.length("extracted_text")).alias("chars")
-        ).collect()[0]
-        store.commit(
-            "extract",
-            {"extracted": ext_path, "lineage": lin_path},
-            {"n_pages": agg["n"], "extracted_chars": int(agg["chars"] or 0)},
-        )
-        ran.append("extract")
+        if "extract" not in done:
+            if text_repr is not None:
+                ext = extraction.strip_text_pass(text_repr, phrases)
+            else:
+                src = pages.repartition(F.xxhash64("url")) if repartition_by_url else pages
+                ext = extraction.strip_pass(src, phrases)
+            obs = Observation()
+            ext_path = store.write_table(
+                ext.observe(obs, F.count("*").alias("n"),
+                            F.sum(F.length("extracted_text")).alias("chars")),
+                "extracted",
+            )
+            lin = partition_lineage(
+                store.read_table(spark, "extracted"), "url", "extracted_text"
+            )
+            lin_path = store.write_table(lin, "lineage")
+            totals = obs.get
+            store.commit(
+                "extract",
+                {"extracted": ext_path, "lineage": lin_path},
+                {"n_pages": totals["n"], "extracted_chars": int(totals["chars"] or 0)},
+            )
+            ran.append("extract")
+    finally:
+        if text_repr is not None:
+            text_repr.unpersist()
 
     snap = store.last_snapshot()
     return {

@@ -74,10 +74,12 @@ def get_spark(
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # let the planner pick shuffled-hash join when its size conditions
-        # hold (sort-merge stays the fallback): avoids both sort passes on
-        # moderate join sides - the optimization guide's recommended
-        # baseline for batch ETL at any scale, not a local-mode tweak; the
-        # OOM risk window is the same build-side-fits check AQE enforces
+        # hold, avoiding both sort passes.  Its static gate is
+        # autoBroadcastJoinThreshold x shuffle partitions on optimizer
+        # estimates, and the hash build side does not spill, so a
+        # misestimated or skewed build side can OOM where sort-merge spills;
+        # get_spark(extra_conf={"spark.sql.join.preferSortMergeJoin": "true"})
+        # restores sort-merge
         .config("spark.sql.join.preferSortMergeJoin", "false")
     )
     for k, v in (extra_conf or {}).items():

@@ -80,19 +80,26 @@ def test_spark_matches_pyref_randomized(spark):
         assert got == want, f"seed={seed}"
 
 
-def test_driver_and_distributed_strategies_equal(spark):
-    """Both execution strategies must produce identical phrase sets."""
-    import random
+def _phrase_set(phrases):
+    return {(p.text, p.support, len(p.tokens)) for p in phrases}
 
+
+def test_driver_and_distributed_strategies_equal(spark):
+    """Both execution strategies must produce identical phrase sets on the
+    reference fixture corpora."""
     from boilerplate_buster_spark.operators.bloomspan import mine
 
     for corpus, (md, n) in {"test1": (3, 3), "test-supersimple": (2, 2)}.items():
         df = corpus_df(spark, corpus)
-        a = {(p.text, p.support, len(p.tokens))
-             for p in mine(spark, df, min_docs=md, ngrams=n, strategy="driver")}
-        b = {(p.text, p.support, len(p.tokens))
-             for p in mine(spark, df, min_docs=md, ngrams=n, strategy="distributed")}
+        a = _phrase_set(mine(spark, df, min_docs=md, ngrams=n, strategy="driver"))
+        b = _phrase_set(mine(spark, df, min_docs=md, ngrams=n, strategy="distributed"))
         assert a == b, corpus
+
+
+def test_driver_and_distributed_strategies_equal_random_corpus(spark):
+    """Both execution strategies must produce identical phrase sets on a
+    seeded random corpus (no fixture files needed)."""
+    from boilerplate_buster_spark.operators.bloomspan import mine
 
     rng = random.Random(99)
     vocab = [f"t{j}" for j in range(12)]
@@ -101,11 +108,36 @@ def test_driver_and_distributed_strategies_equal(spark):
     df = spark.createDataFrame(
         [(str(i), t) for i, t in enumerate(texts)], ["doc_id", "text"]
     ).select("doc_id", tokens("text").alias("tokens"))
-    a = {(p.text, p.support, len(p.tokens))
-         for p in mine(spark, df, min_docs=3, ngrams=2, strategy="driver")}
-    b = {(p.text, p.support, len(p.tokens))
-         for p in mine(spark, df, min_docs=3, ngrams=2, strategy="distributed")}
-    assert a == b
+    a = _phrase_set(mine(spark, df, min_docs=3, ngrams=2, strategy="driver"))
+    b = _phrase_set(mine(spark, df, min_docs=3, ngrams=2, strategy="distributed"))
+    assert a and a == b
+
+
+def test_mine_over_persisted_text_repr_equals_unpersisted(spark):
+    """Mining html pages through a persisted with_text_repr frame (what the
+    pipeline does) finds exactly the phrases of the unpersisted frame."""
+    from pyspark.sql import functions as F
+
+    from boilerplate_buster_spark.operators.extraction import with_text_repr
+    from boilerplate_buster_spark.sources import pages as pages_src
+
+    rows, _ = pages_src.generate_pages_local(60)
+    pages = spark.createDataFrame(rows, schema=pages_src.PAGES_SCHEMA)
+    text_repr = with_text_repr(pages).select("url", "text_repr")
+
+    def mined(frame):
+        docs = frame.select(
+            F.col("url").alias("doc_id"), tokens("text_repr").alias("tokens")
+        )
+        return _phrase_set(bloomspan.mine(spark, docs, min_docs=5, ngrams=3))
+
+    plain = mined(text_repr)
+    cached = text_repr.persist()
+    try:
+        assert mined(cached) == plain
+    finally:
+        cached.unpersist()
+    assert set(pages_src.TEMPLATES) <= {t for t, _, _ in plain}
 
 
 def test_greedy_phrase_expansion_matches_python_reference(spark):

@@ -7,7 +7,12 @@ from __future__ import annotations
 
 from boilerplate_buster_spark.core.extract import index_phrases, strip_boilerplate
 from boilerplate_buster_spark.core.htmlparse import html_to_text
-from boilerplate_buster_spark.operators.extraction import extract_main_content
+from boilerplate_buster_spark.operators.extraction import (
+    extract_main_content,
+    strip_pass,
+    strip_text_pass,
+    with_text_repr,
+)
 from boilerplate_buster_spark.sources import pages as pages_src
 
 N_PAGES = 60
@@ -86,3 +91,36 @@ def test_expression_generator_deterministic_and_minable(spark):
     for r in sample:
         for t in pages_src.TEMPLATES:
             assert t not in r["extracted_text"]
+
+
+def test_strip_pass_equals_strip_text_pass_over_parsed_pages(spark):
+    """The one strip core, reached two ways: parse+strip in one map from raw
+    pages, and a strip over the separately parsed text_repr.  Byte-identical
+    per url over html rows, html-NULL rows (text fallback) and rows where
+    both are NULL."""
+    rows, _ = pages_src.generate_pages_local(N_PAGES)
+    for i, r in enumerate(rows):
+        if i % 3 == 1:
+            r["html"] = None
+        elif i % 3 == 2:
+            r["html"] = r["text"] = None
+    pages = spark.createDataFrame(rows, schema=pages_src.PAGES_SCHEMA)
+    phrases = pages_src.TEMPLATES + [
+        pages_src.SITE_TEMPLATE.format(s=s) for s in range(pages_src.N_SITES)
+    ]
+
+    def by_url(df):
+        return {
+            r["url"]: (r["extracted_text"],
+                       [(s["start"], s["end"], s["phrase"]) for s in r["removed_spans"]])
+            for r in df.collect()
+        }
+
+    one_map = by_url(strip_pass(pages, phrases))
+    two_step = by_url(strip_text_pass(with_text_repr(pages), phrases))
+    assert len(one_map) == N_PAGES
+    assert one_map == two_step
+    assert any(spans for _, spans in one_map.values())
+    for i, r in enumerate(rows):
+        if i % 3 == 2:
+            assert one_map[r["url"]] == ("", []), r["url"]

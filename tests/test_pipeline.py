@@ -73,6 +73,44 @@ def test_pipeline_resume_after_partial_commit(spark, tmp_path):
         assert ext[url] == want, url
 
 
+def _persisted_rdd_ids(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+
+def test_pipeline_totals_from_write_and_no_cache_leak(spark, tmp_path, monkeypatch):
+    """The extract totals come from the write (n_pages, Σ golden text
+    length); a fresh run strips from the persisted parse, a resume from the
+    raw pages; neither leaves a cached frame behind."""
+    pages, golden = _pages(spark)
+    ckpt = str(tmp_path / "ckpt4")
+    plans = {}
+    write_table = CheckpointStore.write_table
+
+    def recording(self, df, name):
+        plans[name] = df._jdf.queryExecution().executedPlan().toString()
+        return write_table(self, df, name)
+
+    monkeypatch.setattr(CheckpointStore, "write_table", recording)
+    spark.catalog.clearCache()
+    before = _persisted_rdd_ids(spark)
+
+    r1 = run_extraction_pipeline(spark, pages, ckpt, min_docs=MIN_DOCS, ngrams=3)
+    want = {"n_pages": N_PAGES,
+            "extracted_chars": sum(len(t) for t, _ in golden.values())}
+    assert r1["metrics"]["extract"] == want
+    assert "InMemoryTableScan" in plans["extracted"]  # parsed once, cached
+    assert _persisted_rdd_ids(spark) == before
+
+    # crash before the extract commit: drop the last snapshot manifest
+    snaps = CheckpointStore(ckpt)._snapshot_files()
+    os.remove(os.path.join(ckpt, "_snapshots", snaps[-1]))
+    r2 = run_extraction_pipeline(spark, pages, ckpt, min_docs=MIN_DOCS, ngrams=3)
+    assert r2["ran_stages"] == ["extract"]
+    assert r2["metrics"]["extract"] == want
+    assert "InMemoryTableScan" not in plans["extracted"]
+    assert _persisted_rdd_ids(spark) == before
+
+
 def test_manifest_written_atomically(tmp_path):
     store = CheckpointStore(str(tmp_path / "s"))
     assert store.last_snapshot() is None

@@ -112,6 +112,18 @@ def test_strip_pass_is_pure_map(spark):
     assert "MapInPandas" in plan
 
 
+def test_strip_pass_from_raw_pages_is_one_map(spark):
+    from boilerplate_buster_spark.operators.extraction import strip_pass
+
+    df = spark.createDataFrame(
+        [("u1", b"<p>a b c</p>", None)], "url string, html binary, text string"
+    )
+    plan = explain_str(strip_pass(df, ["a b"]), mode="simple")
+    # parse + strip run in ONE Arrow-batched map, with no Exchange
+    assert "Exchange" not in plan
+    assert plan.count("MapInPandas") == 1
+
+
 def test_word_bitmap_gate_stays_jvm_side(spark):
     from boilerplate_buster_spark.operators import bloomspan
 
