@@ -16,8 +16,9 @@ needs:
 
 The classifier itself (link density / stopword density / tag class) lives in
 operators/domheuristics.py as pure Catalyst expressions — this kernel only
-emits structural facts, so the per-row Python cost is one stdlib HTML parse,
-the same cost Stage 1 already pays.
+emits structural facts.  The per-row Python cost is one stdlib HTML parse
+(a callback per tag); Stage 1's html_to_text runs a regex scanner instead
+and is several times cheaper per page.
 
 Reference anchor: the reference's load phase normalizes bytes to text
 (/root/reference/corpus-miner/corpus_miner.cpp:417-448); block-level layout

@@ -475,6 +475,19 @@ def quantized_vec_expr(vec_col: str, q: int = 128) -> str:
     )
 
 
+def _has_null(vec_col: str):
+    """True for a NULL vector or a vector with a NULL element: numpy cannot
+    hold either on the int64 grid."""
+    return F.expr(f"{vec_col} IS NULL OR exists({vec_col}, x -> x IS NULL)")
+
+
+def _null_vector_error(op: str, vec_col: str) -> ValueError:
+    return ValueError(
+        f"{op}: column {vec_col!r} holds a NULL vector or a NULL element; "
+        "vectors must be non-NULL"
+    )
+
+
 def semantic_dedup(
     vecs: DataFrame,
     k: int = 8,
@@ -505,17 +518,23 @@ def semantic_dedup(
     posture).  At 10^12 docs k grows ~sqrt(N) so cluster populations stay
     bounded; the row block (512) bounds per-task pair-matrix memory.
     Inputs beyond the documented int64 headroom raised under ANSI before
-    and now wrap in numpy - outside the operator's contract either way."""
+    and now wrap in numpy - outside the operator's contract either way.
+
+    Vectors must be non-NULL, with no NULL element: a ValueError naming
+    `vec_col` is raised before the assignment pass runs."""
     import numpy as np
     import pandas as pd
 
     qv = vecs.select(
         F.col(id_col), F.expr(quantized_vec_expr(vec_col, q)).alias("qv")
     )
-    cents = [
-        r["qv"]
-        for r in qv.filter(F.col(id_col) < k).orderBy(id_col).collect()
-    ]
+    # the seed scan also returns every NULL vector, so the check costs no job
+    seed_rows = (
+        qv.filter((F.col(id_col) < k) | _has_null("qv")).orderBy(id_col).collect()
+    )
+    if any(r["qv"] is None or None in r["qv"] for r in seed_rows):
+        raise _null_vector_error("semantic_dedup", vec_col)
+    cents = [r["qv"] for r in seed_rows]
     C = np.asarray(cents, dtype=np.int64) if cents else np.zeros((0, 0), np.int64)
     id_type = vecs.schema[id_col].dataType.simpleString()
     thr = int(thr_e6)
@@ -731,7 +750,10 @@ def kmeans_quantized(
     posexplode shuffled corpus_rows * dim).  The driver holds only the
     centroid matrix, never vectors.  Inputs beyond int64 headroom raised
     under ANSI before and now wrap in numpy - outside the contract
-    either way."""
+    either way.
+
+    Vectors must be non-NULL, with no NULL element: a ValueError naming
+    `vec_col` is raised before the first Lloyd round."""
     import numpy as np
     import pandas as pd
 
@@ -743,7 +765,11 @@ def kmeans_quantized(
     # persisted because Lloyd is iterative: every round re-reads the same
     # quantized vectors (seed scan + iters assignments + final labeling) -
     # without the cache each action re-runs the source scan end-to-end
-    seeds = q.orderBy(id_col).limit(int(k)).collect()
+    # NULL vectors sort ahead of the seeds, so the seed scan finds them
+    seeds = q.orderBy(~_has_null("q"), id_col).limit(int(k)).collect()
+    if any(r["q"] is None or None in r["q"] for r in seeds):
+        q.unpersist()
+        raise _null_vector_error("kmeans_quantized", vec_col)
     if len(seeds) < int(k):
         q.unpersist()
         raise ValueError(

@@ -102,8 +102,9 @@ def score_docs(
     # per-doc bigram (corpus-sized) before the model joins ever ran.
     # Identical rows by construction ('a'+' '+'b' == array_join(slice(t,i,2)))
     # and identical k-groups, so the k-weighted float surface downstream is
-    # untouched.  prev = the bigram's first token via substring_index
-    # (exact - tokens cannot contain the separator they were split on).
+    # untouched.  prev = the bigram's first token, emitted from the same
+    # loop (re-splitting the joined bigram is wrong for a token that holds
+    # a space).
     import pandas as pd
     from collections import Counter
 
@@ -113,6 +114,7 @@ def score_docs(
         for pdf in batches:
             ids: list = []
             bigs: list = []
+            prevs: list = []
             ks: list = []
             for i, toks in zip(pdf[id_col], pdf[tokens_col]):
                 if toks is None:
@@ -120,16 +122,21 @@ def score_docs(
                 for (a, b), k in Counter(zip(toks, toks[1:])).items():
                     ids.append(i)
                     bigs.append(a + " " + b)
+                    prevs.append(a)
                     ks.append(k)
                 if len(ids) >= 200_000:  # bound worker memory per yield
-                    yield pd.DataFrame({id_col: ids, "big": bigs, "k": ks})
-                    ids, bigs, ks = [], [], []
+                    yield pd.DataFrame(
+                        {id_col: ids, "big": bigs, "prev": prevs, "k": ks}
+                    )
+                    ids, bigs, prevs, ks = [], [], [], []
             if ids:
-                yield pd.DataFrame({id_col: ids, "big": bigs, "k": ks})
+                yield pd.DataFrame(
+                    {id_col: ids, "big": bigs, "prev": prevs, "k": ks}
+                )
 
     occ = docs.select(id_col, tokens_col).mapInPandas(
-        count_occ, f"{id_col} {id_type}, big string, k long"
-    ).withColumn("prev", F.expr("substring_index(big, ' ', 1)"))
+        count_occ, f"{id_col} {id_type}, big string, prev string, k long"
+    )
     joined = (
         occ.join(bigrams, "big", "left")
         .join(unigrams, "prev", "left")

@@ -362,6 +362,18 @@ def test_semantic_dedup_exact_mirror(spark):
     assert set(r["cluster"] for r in out.values()) <= set(range(4))
 
 
+
+def test_semantic_dedup_rejects_null_vector(spark):
+    import pytest
+
+    df = spark.createDataFrame(
+        [(0, [0.1, 0.2]), (1, None), (2, [0.3, 0.1])],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="'embedding' holds a NULL vector"):
+        ann.semantic_dedup(df, k=2)
+
+
 def _pq_py_codes(vecs, m=8, ksub=16):
     import math
 
@@ -759,3 +771,21 @@ def test_prefix_jaccard_no_allpairs_join(spark):
         ._jdf.queryExecution().executedPlan().toString()
     )
     assert "CartesianProduct" not in plan
+
+
+def test_kmeans_quantized_rejects_null_vector_and_releases_cache(spark):
+    import pytest
+
+    from boilerplate_buster_spark.operators.ann import kmeans_quantized
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    was_empty = cm.isEmpty()
+    # the NULL sits past the k smallest ids: the seed scan must still see it
+    emb = spark.createDataFrame(
+        [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 1.0]), (3, None)],
+        "vec_id long, embedding array<float>",
+    )
+    with pytest.raises(ValueError, match="'embedding' holds a NULL vector"):
+        kmeans_quantized(emb, k=2, iters=1)
+    if was_empty:
+        assert cm.isEmpty(), "kmeans_quantized left a Dataset cached"

@@ -48,6 +48,22 @@ def test_unseen_transitions_get_floor(spark):
     assert r["lik_e6"] == (1000000 * 1) // 3
 
 
+
+def test_context_token_with_space(spark):
+    # prev is the bigram's first TOKEN, not the joined bigram's first word
+    docs = spark.createDataFrame(
+        [(1, ["new york", "city"]), (2, ["new york", "city"])],
+        ["doc_id", "tokens"],
+    )
+    bigrams, unigrams, v = train_bigram_counts(docs)
+    out = {r["doc_id"]: r for r in score_docs(docs, bigrams, unigrams, v).collect()}
+    # "new york city": cb=2 -> num 3; prev "new york": cu=2, V=2 -> den 4
+    assert v == 2
+    assert out[1]["n_bigrams"] == 1
+    assert out[1]["lik_e6"] == (1000000 * 3) // 4
+    assert abs(out[1]["log2_ppl"] - 2 ** -math.log2(3 / 4)) < 1e-9
+
+
 def _pyref_trigram(docs, weights=(4, 2, 1)):
     """Pure-python replica of the interpolated trigram score."""
     from collections import Counter

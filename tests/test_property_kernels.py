@@ -6,7 +6,10 @@
   * strip invariants: output is a subsequence of the input, removed spans are
     disjoint ascending, splicing the spans back reconstructs the input;
   * tokenizer: tokens contain no delimiters, concatenating spans reproduces
-    the token text, ASCII lowering only.
+    the token text, ASCII lowering only;
+  * html parse: the regex scanner behind html_to_text == the stdlib
+    _BlockParser it replaced, over hostile html in every accepted input
+    type, and the scanner (not the fallback) parses every generated page.
 """
 
 from __future__ import annotations
@@ -15,7 +18,14 @@ from hypothesis import given, settings, strategies as st
 
 from boilerplate_buster_spark.core.extract import index_phrases, strip_boilerplate
 from boilerplate_buster_spark.core.extract_vec import strip_batch
-from boilerplate_buster_spark.core.tokenize import tokenize, tokenize_with_spans
+from boilerplate_buster_spark.core.htmlparse import _parse_stdlib, _scan, html_to_text
+from boilerplate_buster_spark.core.tokenize import (
+    decode_page_bytes,
+    tokenize,
+    tokenize_with_spans,
+)
+from boilerplate_buster_spark.sources.pages import generate_pages_local
+from tests.test_domblocks import PAGE
 
 # small vocab -> dense overlaps between docs and phrases
 _word = st.sampled_from(["aa", "bb", "cc", "dd", "ee", "Aa", "x1", "日本"])
@@ -91,3 +101,95 @@ def test_tokenizer_spans_consistent(text):
         # tokens never contain ASCII delimiters
         assert all(ch > "\x7f" or ch.isalnum() for ch in tok)
         prev_end = e
+
+
+# Hostile html fragments, one list per kind so that rare kinds meet often:
+# raw-text bodies holding '<' and '</div>', '>' in quoted attributes,
+# unclosed tags, quotes and comments, odd case and spacing in tags, entity
+# references split by a tag or next to one, CDATA, processing instructions,
+# '</>' and a stray '<'.
+_HTML_FRAGMENTS = [
+    [
+        "<script>if (a < b) x = '</div>';</script>", "<style>p>b{}</style >",
+        "<SCRIPT type=module>x<y</sCrIpT\t>", "<script>", "<style>",
+        "</script>", "</STYLE>", "</ſcript>", "<script/>", "<head/>",
+    ],
+    [
+        '<a title="1 > 0">', "<a title='x>y' id=b>", '<a href=x"y>',
+        '<div class="a" hidden data-x = 3>', "<img src=/a/b.png/>", "<br/>",
+        "<br />", "<a b=>", '<a b="x>', "<p", "<div class='x'", "<a/b>",
+        "<p\x0bx>", "<p\xa0x>", "<a\x00>", "<a b==c>", "<a =b>",
+    ],
+    [
+        "<!-- note -->", "<!-- <p>in</p> --  >", "<!--", "-->", "<!-->",
+        "<!DOCTYPE html>", "<!doctype", "<!bogus>", "<![CDATA[x<y]]>",
+        "<?pi?>", "<?xml version='1.0'?>", "</>", "</ >", "</3>",
+    ],
+    [
+        "<DIV>", "</Div >", "</ div>", "<P>", "</p\n>", "<Head>", "</HEAD>",
+        "<template>", "</template>", "<noscript>", "</noscript>", "<span>",
+        "</span>", "<li>", "<td>", "<h1>", "</h1>", "<x:y>", "</p class=x>",
+    ],
+    ["&am", "p;", "&amp;", "&lt;", "&#65;", "&#x42", "&copy", "&", ";"],
+    ["< ", "<", ">", "a < b", "text", " ", "\n", "é", "日本", "\xa0"],
+]
+_html = st.lists(
+    st.one_of(
+        *(st.sampled_from(kind) for kind in _HTML_FRAGMENTS),
+        st.text(
+            alphabet=st.characters(blacklist_categories=("Cs",)), max_size=4
+        ),
+    ),
+    max_size=20,
+).map("".join)
+
+_ENCODINGS = {
+    "str": lambda s: s,
+    "utf-8-bom": lambda s: b"\xef\xbb\xbf" + s.encode("utf-8"),
+    "utf-16-le-bom": lambda s: b"\xff\xfe" + s.encode("utf-16-le"),
+    "utf-16-be-bom": lambda s: b"\xfe\xff" + s.encode("utf-16-be"),
+    "bytearray": lambda s: bytearray(s.encode("utf-8")),
+    "memoryview": lambda s: memoryview(s.encode("utf-8")),
+}
+
+
+def _oracle(raw):
+    if isinstance(raw, (bytes, bytearray, memoryview)):
+        raw = decode_page_bytes(bytes(raw))
+    return _parse_stdlib(raw)
+
+
+@given(doc=_html, enc=st.sampled_from(sorted(_ENCODINGS)))
+@settings(max_examples=1000, deadline=None)
+def test_html_scanner_equals_stdlib_oracle(doc, enc):
+    raw = _ENCODINGS[enc](doc)
+    want = _oracle(raw)
+    assert html_to_text(raw) == want
+    assert want == _parse_stdlib(doc)  # every encoding decodes to the doc
+
+
+def test_html_scanner_grammar_edges():
+    # per-run unescape: a reference split by a tag stays literal
+    assert _scan("<p>&am<span>p;</span></p>") == "&amp;"
+    assert _scan("<p>a &amp; b</p>") == "a & b"
+    assert _scan('<p title="a>b">x</p><script>"</div>"</script>y') == "x\ny"
+    assert _scan("<SCRIPT>a<b</Script >c") == "c"
+    assert _scan("<script/>a") == "a"
+    # outside the grammar: the stdlib parse answers
+    for doc in ("a < b", '<a href=x"y>t', "<!-- open", "<![CDATA[x]]>",
+                "<script>open", "<p>x</p><", "<script>x</ſcript>"):
+        assert _scan(doc) is None, doc
+        assert html_to_text(doc) == _parse_stdlib(doc), doc
+
+
+def test_html_scanner_parses_every_generated_page():
+    # a grammar slip would fall back to the slow parser with correct output
+    rows, _golden = generate_pages_local(200, seed=11)
+    for r in rows:
+        doc = decode_page_bytes(bytes(r["html"]))
+        fast = _scan(doc)
+        assert fast is not None, r["url"]
+        assert fast == _parse_stdlib(doc) == r["text"], r["url"]
+    fast = _scan(PAGE)
+    assert fast is not None
+    assert fast == _parse_stdlib(PAGE)
