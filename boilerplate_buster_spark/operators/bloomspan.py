@@ -1,18 +1,28 @@
 """BloomSpan Maximal-Frequent-Phrase miner, Spark-first.
 
-Pipeline (SURVEY.md section 7; reference: corpus-miner/_ours/bloom_gram_miner.cpp):
+Pipeline (SURVEY.md section 7; reference: corpus-miner/_ours/bloom_gram_miner.cpp),
+one Spark action per step on the distributed path:
 
   docs(doc_id, tokens)
-    -> frequent words: one distinct-doc word aggregate       [shuffle #1;
-       feeds the reference's word-DF gate AND winner-token resolution]
+    -> word gate: ONE collect of the frequent-word aggregate,
+       grouped into the 64-bit words of a packed Bloom bitmap
+       (bit_or per word, plus a few word hashes per word)    [shuffles #1-2;
+       small vocabularies gate by the literal hash IN-set,
+       larger ones by the broadcast bitmap]
     -> candidate grams: word-gated per-doc-distinct n-gram
-       counts, threshold support >= min_docs                 [shuffle #2;
+       counts, threshold support >= min_docs; ONE collect
+       also carries each gram's seed chain hash and in-scan
+       gather hash, and the driver numbers the grams         [shuffle #3;
        post-threshold set is corpus-statistics bounded: boilerplate
        TEMPLATES, not corpus rows]
     -> occurrence gather: in-scan hash IN-set filter over the
-       corpus, flat BIGINT prefix-hash/token-hash columns     [NO shuffle]
+       corpus, flat BIGINT prefix-hash / STRING token columns,
+       persisted; the edge aggregation fills the cache       [NO shuffle]
     -> greedy expansion: ONE path-tree edge aggregation over
-       all depths, HAVING sup >= min_docs before collect      [one shuffle]
+       all depths, keyed by the next token's string,
+       HAVING sup >= min_docs before collect                 [shuffles #4-5]
+    -> occurrence transfer: ONE Arrow toPandas of per-occurrence
+       (cid, doc, pos, prev hash, is_final) from the cache
     -> sequential selection: score order + occupancy bitmask
        + backward closure on (cid, doc, pos) integer tuples   [driver, numpy]
 
@@ -34,12 +44,20 @@ touched; pass ``max_occs_per_gram=None`` for the byte-identical exact
 posture.  Small
 corpora skip all of this: strategy='driver' collects string windows and runs
 the exact kernel (core/expand.py) directly.
+
+``mine`` runs its Spark jobs under a job group of its own (the caller's
+group is restored on exit) and reports, in ``stats``, ``phase_s`` (wall
+seconds per phase) and ``spark_jobs`` (jobs submitted by the call).
 """
 
 from __future__ import annotations
 
+import time
+import uuid
 from collections import defaultdict
+from contextlib import contextmanager
 
+from py4j.protocol import Py4JError
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -58,6 +76,30 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("example_docs", T.ArrayType(T.StringType()), False),
     ]
 )
+# schemas of the frames the miner builds on the driver (see _driver_frame)
+_BITMAP_SCHEMA = T.StructType([T.StructField("bf", T.ArrayType(T.LongType()))])
+_CANDS_SCHEMA = T.StructType([
+    T.StructField("cid", T.IntegerType()),
+    T.StructField("gram", T.StringType()),
+    T.StructField("support", T.LongType()),
+])
+
+
+def _driver_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
+    """A frame of driver-side rows (they come from Spark results, so no
+    per-row schema verification).  Built from pandas: with Arrow enabled, as
+    get_spark sets it, the frame is a local relation, so reading or
+    broadcasting it runs no Spark job - a row list would be parallelized
+    and unpickled by Python workers in a job of its own."""
+    import pandas as pd
+
+    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+
+
+def _by_cid(values: list[int]) -> str:
+    """SQL expression: values[cid - 1] for the dense candidate ids 1..N,
+    from a literal BIGINT array - a per-candidate lookup with no join."""
+    return f"element_at(array({', '.join(f'{v}L' for v in values)}), cid)"
 
 
 def _gramhash_sql(hs_ref: str, i: str, n: int) -> str:
@@ -73,7 +115,49 @@ def _gramhash_sql(hs_ref: str, i: str, n: int) -> str:
     return " ^ ".join(terms)
 
 
-BITMAP_BITS_DEFAULT = 1 << 22  # 4 Mbit -> 64 KiB packed; fpr ~ vocab/bits per probe
+BITMAP_BITS_DEFAULT = 1 << 22  # 4 Mbit -> 512 KiB packed; fpr ~ vocab/bits per probe
+
+#: word hashes the word-gate probe carries per 64-bit bitmap word.  A
+#: frequent vocabulary with more first-probe words in one bitmap word gates
+#: through the bitmap even under word_gate_max - just as exact; with <= 2048
+#: words over 65,536 bitmap words that happens with p ~ 1e-5.
+_PROBE_HASHES = 4
+
+
+def _bitmap_words(fw_df: DataFrame, bits: int) -> DataFrame:
+    """(idx, v, n, hs): the 2-probe Bloom bitmap over the words of `fw_df`,
+    grouped by its 64-bit words.  v is the bit_or of word `idx`'s set bits;
+    n counts the words whose first probe lands in word `idx` and hs holds up
+    to _PROBE_HASHES of their xxhash64 values.  At most bits//64 rows,
+    whatever the vocabulary size."""
+    b1, b2 = f"pmod(xxhash64(word), {bits})", f"pmod(xxhash64(word, 7), {bits})"
+    return (
+        fw_df.select(
+            F.explode(
+                F.expr(
+                    f"array(named_struct('bit', {b1}, 'h', xxhash64(word)), "
+                    f"named_struct('bit', {b2}, 'h', CAST(NULL AS bigint)))"
+                )
+            ).alias("p")
+        )
+        .groupBy(F.expr("shiftright(p.bit, 6)").alias("idx"))
+        .agg(
+            F.expr("bit_or(shiftleft(CAST(1 AS bigint), CAST(p.bit & 63 AS int)))").alias("v"),
+            F.count("p.h").alias("n"),
+            F.expr(f"slice(collect_list(p.h), 1, {_PROBE_HASHES})").alias("hs"),
+        )
+    )
+
+
+def _pack_bitmap(spark: SparkSession, words: list, bits: int) -> DataFrame:
+    """One-row `bf array<bigint>` frame from collected (idx, v, ...) rows."""
+    import numpy as np
+
+    packed = np.zeros(bits // 64, dtype=np.int64)
+    if words:
+        idx, v = zip(*((r[0], r[1]) for r in words))
+        packed[np.array(idx, dtype=np.int64)] = np.array(v, dtype=np.int64)
+    return _driver_frame(spark, [(packed,)], _BITMAP_SCHEMA)
 
 
 def packed_word_bitmap(
@@ -81,32 +165,17 @@ def packed_word_bitmap(
 ) -> DataFrame:
     """Scale path of the reference's P3 word-DF gate
     (bloom_gram_miner.cpp:414-421): a 2-probe Bloom bitmap over the frequent
-    words, packed driver-side into a single array<bigint> row and broadcast.
+    words, packed into a single array<bigint> row and broadcast.
 
     Spark's internal bloom_filter_agg is NOT in the public function registry
     (UNRESOLVED_ROUTINE on 4.1), so the filter is built from public ops: the
-    cluster aggregates the DISTINCT bit positions (bounded by `bits`, NEVER by
-    vocabulary size - the driver-memory cliff of a full word collect is what
-    this replaces), the driver packs them into bits//64 longs.  False
-    positives only ADD candidate grams; the exact support threshold keeps the
-    mined set exact."""
-    import numpy as np
-
-    pos = (
-        fw_df.select(
-            F.explode(
-                F.expr(f"array(pmod(xxhash64(word), {bits}), pmod(xxhash64(word, 7), {bits}))")
-            ).alias("bit")
-        )
-        .distinct()
-        .collect()
-    )
-    packed = np.zeros(bits // 64, dtype=np.uint64)
-    for r in pos:
-        b = r["bit"]
-        packed[b >> 6] |= np.uint64(1) << np.uint64(b & 63)
-    vals = [int(v) for v in packed.view(np.int64)]
-    return spark.createDataFrame([(vals,)], "bf array<bigint>")
+    cluster ORs the bits of each 64-bit bitmap word (at most bits//64 rows,
+    NEVER bounded by vocabulary size - the driver-memory cliff of a full word
+    collect is what this replaces), the driver places them.  False positives
+    only ADD candidate grams; the exact support threshold keeps the mined set
+    exact.  ``mine`` builds the same bitmap from its word-gate probe."""
+    words = _bitmap_words(fw_df, bits).select("idx", "v").collect()
+    return _pack_bitmap(spark, words, bits)
 
 
 def _bitmap_probe(x: str, bits: int = BITMAP_BITS_DEFAULT) -> str:
@@ -250,11 +319,16 @@ def gather_windows(
     tokens_col: str,
     max_occs_per_gram: int | None = None,
     hashed: bool = False,
+    cand_hashes: list[int] | None = None,
 ) -> DataFrame:
     """Per-occurrence windows for every candidate gram:
     (gram, support, doc_id, pos, prev, window) - or, with hashed=True, the
-    compact distributed-rounds layout
-    (cid, doc_id, pos, prev_h, window_h, chain).
+    flat distributed layout (cid, doc_h, doc_id, pos, prev_h, c1..cW,
+    s1..sW).
+
+    `cand_hashes` are the in-scan gather hashes of the candidate grams
+    (``_gramhash_sql`` over each gram's token hashes, as ``mine`` collects
+    them with the candidates); when None they are collected from `cands`.
 
     ZERO shuffles on the main path: the candidate set is corpus-statistics
     small (post-threshold boilerplate templates), so occurrence discovery is
@@ -273,51 +347,37 @@ def gather_windows(
     # compares are ~free).  Hash false positives are removed by the exact
     # gram-string broadcast join right after.
     gh = _gramhash_sql("_hs", "i", n)
-    cand_hashes = [
-        r["gh"]
-        for r in cands.select(
-            F.expr(
-                "transform(split(gram, ' '), x -> xxhash64(x))"
-            ).alias("_hs")
-        ).select(F.expr(_gramhash_sql("_hs", "1", n)).alias("gh")).collect()
-    ]
+    if cand_hashes is None:
+        cand_hashes = [
+            r["gh"]
+            for r in cands.select(
+                F.expr(
+                    "transform(split(gram, ' '), x -> xxhash64(x))"
+                ).alias("_hs")
+            ).select(F.expr(_gramhash_sql("_hs", "1", n)).alias("gh")).collect()
+        ]
     inscan_max = 65536
+    all_pos = (
+        f"slice(sequence(1, greatest(size({t}) - {n} + 1, 1)), "
+        f"1, greatest(size({t}) - {n} + 1, 0))"
+    )
     if len(cand_hashes) <= inscan_max:
         hset = ", ".join(str(h) for h in cand_hashes) or "0"
-        pos_expr = (
-            f"filter(slice(sequence(1, greatest(size({t}) - {n} + 1, 1)), "
-            f"1, greatest(size({t}) - {n} + 1, 0)), "
-            f"i -> ({gh}) IN ({hset}))"
-        )
-        occ = (
-            docs.select(
-                F.col(doc_col),
-                F.col(t),
-                F.expr(f"transform({t}, x -> xxhash64(x))").alias("_hs"),
-            )
-            .select(doc_col, t, "_hs", F.explode(F.expr(pos_expr)).alias("ipos"))
-            .withColumn("pos", F.expr("ipos - 1"))
-            .withColumn("gram", F.expr(f"array_join(slice({t}, ipos, {n}), ' ')"))
-            .join(F.broadcast(cands), "gram")  # exact: drops hash false positives
-        )
+        pos_expr = f"filter({all_pos}, i -> ({gh}) IN ({hset}))"
+        build = F.broadcast(cands)  # exact: drops hash false positives
     else:
         # huge candidate set (plan-size limit for the literal IN-set):
         # enumerate all positions and shuffle-join on gram (AQE handles skew)
-        all_pos = (
-            f"slice(sequence(1, greatest(size({t}) - {n} + 1, 1)), "
-            f"1, greatest(size({t}) - {n} + 1, 0))"
+        pos_expr, build = all_pos, cands
+    occ = (
+        docs.selectExpr(doc_col, t, f"transform({t}, x -> xxhash64(x)) AS _hs")
+        .selectExpr(doc_col, t, "_hs", f"explode({pos_expr}) AS ipos")
+        .selectExpr(
+            doc_col, t, "_hs", "ipos", "ipos - 1 AS pos",
+            f"array_join(slice({t}, ipos, {n}), ' ') AS gram",
         )
-        occ = (
-            docs.select(
-                F.col(doc_col),
-                F.col(t),
-                F.expr(f"transform({t}, x -> xxhash64(x))").alias("_hs"),
-            )
-            .select(doc_col, t, "_hs", F.explode(F.expr(all_pos)).alias("ipos"))
-            .withColumn("pos", F.expr("ipos - 1"))
-            .withColumn("gram", F.expr(f"array_join(slice({t}, ipos, {n}), ' ')"))
-            .join(cands, "gram")
-        )
+        .join(build, "gram")
+    )
     if max_occs_per_gram is not None:
         # Deterministic per-gram DOC sampling: keep a doc's occurrences of a
         # gram iff hash_frac(doc) < cap/support, using the EXACT distinct-doc
@@ -334,37 +394,35 @@ def gather_windows(
             )
         )
     if hashed:
-        # distributed-rounds payload: FLAT BIGINT COLUMNS, no arrays and no
-        # strings - c<i> = rolling prefix hash of window[0..i) (fold of the
-        # per-token hashes), w<i> = hash of window token i.  Every expansion
-        # round reads exactly THREE long columns from the columnar cache
-        # (c_plen, c_plen+1, w_plen+1): perfect column pruning, which array
-        # columns cannot give (measured ~8x slower to re-read).
+        # distributed payload: FLAT COLUMNS, no arrays - c<i> = rolling
+        # prefix hash of window[0..i) (fold of the per-token hashes), s<i> =
+        # window token i itself.  Each expansion depth reads c_d, c_d+1 and
+        # s_d+1 from the columnar cache, and the final-occurrence flag reads
+        # c_flen only: column pruning that array columns cannot give
+        # (measured ~8x slower to re-read).
         chain_arr = (
             f"aggregate(slice(_hs, ipos, {window}), "
             f"array(cast(0 AS bigint)), "
             f"(acc, h) -> array_append(acc, xxhash64(element_at(acc, -1), h)), "
             f"acc -> slice(acc, 2, {window}))"
         )
-        cols = [
-            F.col("cid"),
+        # string expressions: one selectExpr parses them all in one call
+        return occ.selectExpr(
+            "cid",
             # 64-bit doc hash: the edge aggregation only needs doc IDENTITY
             # for distinct counts - comparing/shuffling longs, not id strings
-            F.xxhash64(F.col(doc_col)).alias("doc_h"),
-            F.col(doc_col).cast("string").alias("doc_id"),
-            F.col("pos"),
-            F.when(F.col("pos") > 0, F.expr("element_at(_hs, pos)")).alias("prev_h"),
-            F.expr(chain_arr).alias("_chain"),
-        ]
-        flat = [
-            F.col("cid"), F.col("doc_h"), F.col("doc_id"), F.col("pos"),
-            F.col("prev_h"),
-        ]
-        for i in range(1, window + 1):
-            flat.append(F.expr(f"try_element_at(_chain, {i})").alias(f"c{i}"))
-        for i in range(1, window + 1):
-            flat.append(F.expr(f"try_element_at(_hs, ipos + {i} - 1)").alias(f"w{i}"))
-        return occ.select(*cols, F.col("_hs"), F.col("ipos")).select(*flat)
+            f"xxhash64({doc_col}) AS doc_h",
+            f"CAST({doc_col} AS STRING) AS doc_id",
+            "pos",
+            "IF(pos > 0, element_at(_hs, pos), NULL) AS prev_h",
+            f"{chain_arr} AS _chain",
+            t,
+            "ipos",
+        ).selectExpr(
+            "cid", "doc_h", "doc_id", "pos", "prev_h",
+            *(f"try_element_at(_chain, {i}) AS c{i}" for i in range(1, window + 1)),
+            *(f"try_element_at({t}, ipos + {i} - 1) AS s{i}" for i in range(1, window + 1)),
+        )
     return occ.select(
         "gram",
         "support",
@@ -391,6 +449,48 @@ def gather_windows(
 AUTO_MAX_OCCS = 100_000
 
 
+_JOB_PROPS = ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel")
+
+
+@contextmanager
+def _own_job_group(spark: SparkSession, stats: dict | None, clock: _PhaseClock):
+    """Run the body under a fresh job group; on exit restore the caller's
+    group, description and interrupt flag, and record in `stats` the jobs
+    the body submitted (spark_jobs) and the clock's phases (phase_s)."""
+    sc = spark.sparkContext
+    saved = {k: sc.getLocalProperty(k) for k in _JOB_PROPS}
+    group = f"bloomspan.mine-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "bloomspan.mine")
+    try:
+        yield
+    finally:
+        for k, v in saved.items():
+            sc.setLocalProperty(k, v)
+        if stats is not None:
+            # the status tracker is fed by the listener bus: let it catch up
+            # (on a timeout, count the jobs that have arrived)
+            try:
+                sc._jsc.sc().listenerBus().waitUntilEmpty(10_000)
+            except Py4JError:
+                pass
+            stats["spark_jobs"] = len(sc.statusTracker().getJobIdsForGroup(group))
+            stats["phase_s"] = {k: round(v, 4) for k, v in clock.phase_s.items()}
+
+
+class _PhaseClock:
+    """Wall seconds per named phase; each lap closes the phase that ran
+    since the previous lap (a window retry adds to the same names)."""
+
+    def __init__(self):
+        self.phase_s: dict[str, float] = {}
+        self._t = time.perf_counter()
+
+    def lap(self, name: str) -> None:
+        now = time.perf_counter()
+        self.phase_s[name] = self.phase_s.get(name, 0.0) + now - self._t
+        self._t = now
+
+
 def mine(
     spark: SparkSession,
     docs: DataFrame,
@@ -408,25 +508,33 @@ def mine(
 ) -> list[WCandidate]:
     """Run the full miner; returns the final phrase list (driver-side, small).
 
+    Job plan (module docstring): one word-gate collect, one candidate
+    collect, then per window size the strategy's actions.
     strategy='distributed': greedy expansion runs as ONE path-tree edge
     aggregation over cluster-resident occurrence windows (all depths counted
-    together; sub-threshold edges never leave the cluster), then the driver
-    replays the greedy walk over the frequent edges and the sequential
-    occupancy-mask selection over integer (gram, doc, pos) tuples.
+    together; sub-threshold edges never leave the cluster; each edge carries
+    its token string), then the driver replays the greedy walk over the
+    frequent edges and the sequential occupancy-mask selection over integer
+    (gram, doc, pos) tuples from one Arrow transfer.
     strategy='driver': collect the windows and run the whole kernel
     driver-side (exact same outputs; giant collect dominates on large
     corpora).  'auto' (default) picks by total candidate-occurrence count
     (< auto_threshold -> driver).  All retry with doubled W if a phrase
     outgrows the gathered windows.
 
-    The frequent-word set backing the P3 word gate is collected ONLY when it
-    fits word_gate_max (bounded limit-probe, never an unconditional full
-    collect); larger vocabularies gate through the broadcast packed bitmap
-    and resolve winner tokens via a distributed join (see packed_word_bitmap).
+    The word gate is ONE bounded collect: the frequent-word aggregate
+    grouped by the 64-bit words of the packed Bloom bitmap (see
+    _bitmap_words).  A frequent-word set of at most word_gate_max words
+    gates through a literal hash IN-set built from the hashes it carries;
+    a larger one through the broadcast bitmap - never a full word collect.
+    Candidate ids are assigned driver-side in gram order after the
+    candidate collect.  Every cache is released on every exit path.
 
     `stats` (optional dict) receives the M5 mining-statistics table
     (bloom_gram_miner.cpp:447-454,710-718): seed totals, accepted/rejected,
-    %reduction, phrases_total, phrases_6plus, selection counters."""
+    %reduction, phrases_total, phrases_6plus, selection counters - plus
+    phase_s (wall seconds per phase) and spark_jobs (jobs this call ran,
+    counted under its own job group)."""
     if min_l is None:
         min_l = ngrams  # main.cpp:67
 
@@ -437,110 +545,93 @@ def mine(
     docs = docs.select(doc_col, tokens_col)
     from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
 
-    # frequent words computed ONCE: feeds the candidate word gate AND the
-    # winner-token resolution.  limit(word_gate_max+1) bounds the collect:
-    # if the probe comes back full, the vocabulary is too big for a literal
-    # IN-set/driver dict and the bitmap + join path takes over.
-    fw_df = (
-        word_doc_freq(docs, doc_col, tokens_col)
-        .filter(F.col("df") >= min_docs)
-        .select("word", F.xxhash64("word").alias("h"))
-    )
-    probe = fw_df.limit(word_gate_max + 1).collect()
-    fw_cached = None
-    if len(probe) <= word_gate_max:
-        fw_rows = probe
-        word_by_hash = {r["h"]: r["word"] for r in fw_rows}
-
-        def resolve_words(hashes: set) -> dict:
-            return {h: word_by_hash[h] for h in hashes}
+    clock = _PhaseClock()
+    with _own_job_group(spark, stats, clock):
+        fw_df = (
+            word_doc_freq(docs, doc_col, tokens_col)
+            .filter(F.col("df") >= min_docs)
+            .select("word")
+        )
+        probe = _bitmap_words(fw_df, BITMAP_BITS_DEFAULT).collect()
+        n_words = sum(r["n"] for r in probe)
+        hashes = sorted(h for r in probe for h in r["hs"])
+        fw = bitmap_df = None
+        if n_words <= word_gate_max and len(hashes) == n_words:
+            fw = [{"h": h} for h in hashes]
+        else:
+            bitmap_df = _pack_bitmap(spark, probe, BITMAP_BITS_DEFAULT)
+        clock.lap("words")
 
         cands = candidate_grams(
             docs, ngrams, min_docs, doc_col, tokens_col,
-            word_gate_max=word_gate_max, fw=fw_rows, stats=stats,
+            word_gate_max=word_gate_max, fw=fw, bitmap_df=bitmap_df, stats=stats,
         )
-    else:
-        fw_cached = fw_df.persist()
-        bitmap_df = packed_word_bitmap(spark, fw_cached)
-
-        def resolve_words(hashes: set) -> dict:
-            if not hashes:
-                return {}
-            hdf = spark.createDataFrame([(h,) for h in hashes], "h bigint")
-            return {
-                r["h"]: r["word"]
-                for r in fw_cached.join(F.broadcast(hdf), "h").collect()
-            }
-
-        cands = candidate_grams(
-            docs, ngrams, min_docs, doc_col, tokens_col,
-            word_gate_max=word_gate_max, bitmap_df=bitmap_df, stats=stats,
-        )
-    # one tiny collect serves strategy choice, candidate ids, seed supports
-    # and the rolling seed hash (the chain value of the gram itself)
-    try:
-        cand_rows = (
-            cands.withColumn(
-                "h0",
-                F.expr(
-                    "aggregate(transform(split(gram, ' '), x -> xxhash64(x)), cast(0 AS bigint), (acc, h) -> xxhash64(acc, h))"
-                ),
+        # one tiny collect serves strategy choice, candidate ids, seed
+        # supports, the rolling seed hash (the chain value of the gram
+        # itself) and the in-scan gather hash
+        try:
+            cand_rows = (
+                cands.select(
+                    "gram", "support",
+                    F.expr("transform(split(gram, ' '), x -> xxhash64(x))").alias("_hs"),
+                )
+                .select(
+                    "gram", "support",
+                    F.expr(
+                        "aggregate(_hs, cast(0 AS bigint), (acc, h) -> xxhash64(acc, h))"
+                    ).alias("h0"),
+                    F.expr(_gramhash_sql("_hs", "1", ngrams)).alias("gh"),
+                )
+                .collect()
             )
-            .withColumn("cid", F.expr("row_number() OVER (ORDER BY gram)"))
-            .collect()
-        )
-    except Exception:
-        # the observed plan never ran: drop the live Observation so the
-        # caller's stats dict stays JSON-serializable and no later
-        # harvest_seed_stats blocks forever on obs.get
+        except Exception:
+            # the observed plan never ran: drop the live Observation so
+            # the caller's stats dict stays JSON-serializable and no
+            # later harvest_seed_stats blocks forever on obs.get
+            if stats is not None:
+                stats.pop("_seed_obs", None)
+            raise
+        harvest_seed_stats(stats)  # the collect above ran the observed plan
+        # (cid, gram, support, h0, gh); cid = rank in gram order
+        cand_rows = [(cid, *r) for cid, r in enumerate(sorted(cand_rows), start=1)]
+        clock.lap("candidates")
         if stats is not None:
-            stats.pop("_seed_obs", None)
-        raise
-    harvest_seed_stats(stats)  # the collect above ran the observed plan
-    if stats is not None:
-        stats.setdefault("candidates_after_merge", len(cand_rows))
-    if not cand_rows:
-        if fw_cached is not None:
-            fw_cached.unpersist()
+            stats.setdefault("candidates_after_merge", len(cand_rows))
+        if not cand_rows:
+            if stats is not None:
+                stats.update(phrases_total=0, phrases_6plus=0)
+            return []
+        cands = _driver_frame(spark, [r[:3] for r in cand_rows], _CANDS_SCHEMA)
+        cand_hashes = [r[4] for r in cand_rows]
+        if strategy == "auto":
+            # support (distinct docs) lower-bounds occurrences; good
+            # enough to pick the execution strategy
+            total_occs = sum(r[2] for r in cand_rows)
+            strategy = "driver" if total_occs < auto_threshold else "distributed"
+        if max_occs_per_gram == "auto":
+            max_occs_per_gram = AUTO_MAX_OCCS if strategy == "distributed" else None
         if stats is not None:
-            stats.update(phrases_total=0, phrases_6plus=0)
-        return []
-    cands = spark.createDataFrame(
-        [(r["cid"], r["gram"], r["support"]) for r in cand_rows],
-        "cid int, gram string, support long",
-    ).cache()
-    if strategy == "auto":
-        # support (distinct docs) lower-bounds occurrences; good enough to
-        # pick the execution strategy
-        total_occs = sum(r["support"] for r in cand_rows)
-        strategy = "driver" if total_occs < auto_threshold else "distributed"
-    if max_occs_per_gram == "auto":
-        max_occs_per_gram = AUTO_MAX_OCCS if strategy == "distributed" else None
-    if stats is not None:
-        stats["occ_cap_sampled_grams"] = sum(
-            1
-            for r in cand_rows
-            if max_occs_per_gram is not None and r["support"] > max_occs_per_gram
-        )
-    try:
+            stats["occ_cap_sampled_grams"] = sum(
+                1
+                for r in cand_rows
+                if max_occs_per_gram is not None and r[2] > max_occs_per_gram
+            )
         while True:
             try:
+                gathered = gather_windows(
+                    docs, cands, ngrams, window, doc_col, tokens_col,
+                    max_occs_per_gram, hashed=strategy == "distributed",
+                    cand_hashes=cand_hashes,
+                )
                 if strategy == "distributed":
-                    gathered = gather_windows(
-                        docs, cands, ngrams, window, doc_col, tokens_col,
-                        max_occs_per_gram, hashed=True,
-                    )
                     out = _mine_distributed(
-                        spark, gathered, cand_rows, resolve_words,
-                        min_docs, min_l, window, stats=stats,
-                        max_occs_per_gram=max_occs_per_gram,
+                        spark, gathered, cand_rows, min_docs, min_l, window,
+                        stats=stats, max_occs_per_gram=max_occs_per_gram,
+                        clock=clock,
                     )
                 else:
-                    gathered = gather_windows(
-                        docs, cands, ngrams, window, doc_col, tokens_col,
-                        max_occs_per_gram,
-                    )
                     out = _mine_driver(gathered, min_docs, min_l, window, stats=stats)
+                    clock.lap("expand")
                 if stats is not None:
                     stats.update(
                         phrases_total=len(out),
@@ -549,10 +640,6 @@ def mine(
                 return out
             except WindowExhausted:
                 window *= 2
-    finally:
-        cands.unpersist()
-        if fw_cached is not None:
-            fw_cached.unpersist()
 
 
 def _mine_driver(
@@ -581,28 +668,38 @@ def _mine_distributed(
     spark: SparkSession,
     gathered: DataFrame,
     cand_rows: list,
-    resolve_words,
     min_docs: int,
     min_l: int,
     window: int,
     stats: dict | None = None,
     max_occs_per_gram: int | None = None,
+    *,
+    clock: _PhaseClock,
 ) -> list[WCandidate]:
     """Distributed greedy expansion + vectorized driver-side mask selection.
+
+    `cand_rows`: (cid, gram, support, h0, gh) per candidate.  Two Spark
+    actions, both over the persisted `gathered` table (released on every
+    exit path):
+
+      edges: stack -> groupBy(cid, d, c_{d+1}, token).agg(countDistinct(doc_h))
+             HAVING sup >= min_docs        <- noise edges die cluster-side;
+             this scan also fills the cache
+      occurrences: one Arrow toPandas of (cid, doc_id, pos, prev_h, is_final)
 
     Expansion of a candidate never depends on the occupancy bitmask (the mask
     only gates skip-before/mark-after, bloom_gram_miner.cpp:633-640,697-702),
     so all candidates' greedy walks are served by ONE path-tree edge
     aggregation over the cluster-resident occurrence table.  The table layout
-    is FLAT BIGINT columns (c<i> = rolling prefix hash of window[0..i),
-    w<i> = token hash at window position i); `stack` unpivots each occurrence
-    into its (depth, prefix-hash, next-hash, next-word-hash) edges and one
-    two-level aggregate counts DISTINCT docs per edge:
-
-      edges: stack -> groupBy(cid, d, c_{d+1}).agg(countDistinct(doc_h))
-             HAVING sup >= min_docs        <- noise edges die cluster-side
-      walk:  driver follows max-support frequent edges from the seed hash
-             (tie -> smallest winner-token string), zero further jobs
+    is FLAT columns (c<i> = rolling prefix hash of window[0..i), s<i> = the
+    token at window position i); `stack` unpivots each occurrence into its
+    (depth, prefix-hash, next-hash, next-token) edges and one two-level
+    aggregate counts DISTINCT docs per edge.  The token string is part of
+    the grouping key - the prefix hash c_{d+1} already fixes it, so the
+    groups are the same, and a key keeps the aggregate a hash aggregate
+    where a string buffer (first(token)) would fall back to a sort.  The
+    driver walk then follows max-support frequent edges from the seed hash
+    (tie -> smallest token string) with no further jobs and no word lookup.
 
     Because the prefix hash c_d encodes the ENTIRE path, counting all depths
     together is exact: edges of different prefixes can never merge (modulo
@@ -610,172 +707,151 @@ def _mine_distributed(
     driver/distributed equivalence tests).  Sub-threshold edges - the
     overwhelming majority on noise candidates - are filtered before collect,
     so driver transfer is bounded by the FREQUENT path structure (boilerplate
-    templates), not the corpus.  This replaces the round-1 per-depth rounds
-    (one Spark job per depth, ~12 jobs of fixed overhead each).
-
-    Winner token STRINGS come from `resolve_words` (in-memory dict when the
-    frequent-word set was small enough to collect; a broadcast-hash join
-    against the cached frequent-word frame otherwise - never an unbounded
-    collect).
+    templates), not the corpus.
 
     Backward closure (":675-695") and the canonical example docs need no
     extra cluster jobs: the single Arrow transfer of per-occurrence
-    (cid, doc_id, pos, prev_h, is_final) tuples - which the sequential
-    selection needs regardless - serves the n_pos0 / distinct-prev closure
-    counters and the min-2 example reduction in pandas, before the
-    score-ordered selection with interval-based numpy mask bookkeeping."""
+    tuples - which the sequential selection needs regardless - serves the
+    n_pos0 / distinct-prev closure counters and the min-2 example reduction
+    in pandas, before the score-ordered selection with interval-based numpy
+    mask bookkeeping."""
     import numpy as np
     import pandas as pd
 
-    import os
-    import time
-
-    _dbg = os.environ.get("BBS_MINE_DEBUG") == "1"
-    _t0 = time.perf_counter()
-
-    def _mark(label):
-        nonlocal _t0
-        if _dbg:
-            now = time.perf_counter()
-            print(f"[mine-debug] {label}: {now - _t0:.1f}s", flush=True)
-            _t0 = now
-
     gathered = gathered.persist()
-    gathered.count()
-    _mark("gather materialize")
-
-    state = {
-        r["cid"]: {
-            "gram": r["gram"],
-            "tokens": r["gram"].split(" "),
-            "support": r["support"],
-            "seed_support": r["support"],
-            "h": r["h0"],
+    try:
+        state = {
+            cid: {
+                "gram": gram,
+                "tokens": gram.split(" "),
+                "support": support,
+                "seed_support": support,
+                "h": h0,
+            }
+            for cid, gram, support, h0, _ in cand_rows
         }
-        for r in cand_rows
-    }
-    n = len(cand_rows[0]["gram"].split(" "))
+        n = len(cand_rows[0][1].split(" "))
 
-    # ---- one-shot path-tree edge aggregation over ALL depths ----
-    # When the per-gram occurrence cap sampled a head gram's docs at rate
-    # cap/support (gather_windows), edge supports are counted over that
-    # subsample - so the frequency threshold is applied to the UNBIASED
-    # estimate sup * support / cap >= min_docs, i.e. the per-cid threshold
-    # DROPS to ceil(min_docs * cap / support) for capped grams.  Comparing
-    # sampled supports against the raw min_docs (the round-2 behavior) made
-    # a head gram's continuation survive only at ~support/cap times the
-    # intended df - silently truncating greedy expansion.
-    cap = max_occs_per_gram
-    capped_sup = {
-        r["cid"]: r["support"]
-        for r in cand_rows
-        if cap is not None and r["support"] > cap
-    }
-    thr_by_cid = {
-        cid: max(1, -(-min_docs * cap // sup)) for cid, sup in capped_sup.items()
-    }
-    stack_args = ", ".join(
-        f"{d}, c{d}, c{d + 1}, w{d + 1}" for d in range(n, window)
-    )
-    agg = (
-        gathered.selectExpr(
-            "cid", "doc_h", f"stack({window - n}, {stack_args}) AS (d, cur, nxt, w_h)"
+        # ---- one-shot path-tree edge aggregation over ALL depths ----
+        # When the per-gram occurrence cap sampled a head gram's docs at rate
+        # cap/support (gather_windows), edge supports are counted over that
+        # subsample - so the frequency threshold is applied to the UNBIASED
+        # estimate sup * support / cap >= min_docs, i.e. the per-cid
+        # threshold DROPS to ceil(min_docs * cap / support) for capped grams.
+        # Comparing sampled supports against the raw min_docs (the round-2
+        # behavior) made a head gram's continuation survive only at
+        # ~support/cap times the intended df - silently truncating greedy
+        # expansion.
+        cap = max_occs_per_gram
+        capped_sup = {
+            cid: support
+            for cid, _, support, _, _ in cand_rows
+            if cap is not None and support > cap
+        }
+        thr_by_cid = {
+            cid: max(1, -(-min_docs * cap // sup)) for cid, sup in capped_sup.items()
+        }
+        stack_args = ", ".join(
+            f"{d}, c{d}, c{d + 1}, s{d + 1}" for d in range(n, window)
         )
-        .filter("nxt IS NOT NULL")
-        .groupBy("cid", "d", "nxt")
-        .agg(
-            F.countDistinct("doc_h").alias("sup"),
-            F.first("cur").alias("cur"),
-            F.first("w_h").alias("w_h"),
-        )
-    )
-    if thr_by_cid:
-        thr_df = F.broadcast(
-            spark.createDataFrame(
-                [(cid, thr) for cid, thr in thr_by_cid.items()], "cid int, thr bigint"
+        agg = (
+            gathered.selectExpr(
+                "cid", "doc_h", f"stack({window - n}, {stack_args}) AS (d, cur, nxt, tok)"
+            )
+            .filter("nxt IS NOT NULL")
+            .groupBy("cid", "d", "nxt", "tok")
+            .agg(
+                F.countDistinct("doc_h").alias("sup"),
+                F.first("cur").alias("cur"),
             )
         )
-        agg = agg.join(thr_df, "cid", "left").filter(
-            F.col("sup") >= F.coalesce(F.col("thr"), F.lit(min_docs))
-        )
-    else:
-        agg = agg.filter(F.col("sup") >= min_docs)
-    edge_rows = agg.collect()
-    _mark(f"edge aggregation ({len(edge_rows)} frequent edges)")
-
-    words = resolve_words({r["w_h"] for r in edge_rows})
-    by_cur: dict[tuple, list] = defaultdict(list)
-    for r in edge_rows:
-        by_cur[(r["cid"], r["d"], r["cur"])].append((r["sup"], r["w_h"], r["nxt"]))
-
-    # ---- greedy walk per candidate over the frequent edges (driver, free) --
-    for cid, st in state.items():
-        plen, h = n, st["h"]
-        while True:
-            options = by_cur.get((cid, plen, h))
-            if not options:
-                break
-            best_sup = max(o[0] for o in options)
-            # winner: max unique-doc support, tie -> smallest token string
-            tok, _, nxt = min(
-                (words[w_h], w_h, o_nxt)
-                for sup, w_h, o_nxt in options
-                if sup == best_sup
+        if thr_by_cid:
+            agg = agg.filter(
+                F.col("sup") >= F.expr(
+                    _by_cid([thr_by_cid.get(r[0], min_docs) for r in cand_rows])
+                )
             )
-            st["tokens"].append(tok)
-            st["support"] = best_sup
-            h = nxt
-            plen += 1
-            if plen >= window:
-                gathered.unpersist()
-                raise WindowExhausted(f"phrase reached window W={window}")
-        st["h"] = h
-        if plen > n and cid in capped_sup:
-            # expansion support was counted over the cap/support doc sample:
-            # report the unbiased estimate (bounded by the exact seed df -
-            # expansion support is monotone non-increasing)
-            est = round(st["support"] * capped_sup[cid] / cap)
-            st["support"] = min(st["seed_support"], max(min_docs, est))
-    _mark("greedy walk")
+        else:
+            agg = agg.filter(F.col("sup") >= min_docs)
+        edge_rows = agg.select("cid", "d", "cur", "sup", "tok", "nxt").collect()
+        clock.lap("edges")
 
-    # ---- flag FINAL occurrences (per-cid final chain hash); only the c
-    # columns of lengths that actually occur are read from cache ----
-    fin_df = spark.createDataFrame(
-        [(cid, len(st["tokens"]), st["h"]) for cid, st in state.items()],
-        "cid int, flen int, fin_h long",
-    )
-    flens = sorted({len(st["tokens"]) for st in state.values()})
-    fin_case = (
-        "CASE flen "
-        + " ".join(f"WHEN {f} THEN (c{f} = fin_h)" for f in flens)
-        + " END"
-    )
-    flagged = gathered.join(F.broadcast(fin_df), "cid").withColumn(
-        "is_final", F.coalesce(F.expr(fin_case), F.lit(False))
-    )
+        by_cur: dict[tuple, list] = defaultdict(list)
+        for cid, d, cur, sup, tok, nxt in edge_rows:
+            by_cur[(cid, d, cur)].append((sup, tok, nxt))
 
-    # single Arrow transfer: (cid, doc_id, pos, prev hash, is_final) - the
-    # occurrence rows the sequential selection needs anyway also serve the
-    # closure counters AND the canonical example docs, so no further cluster
-    # jobs run after this point
-    pdf = flagged.select("cid", "doc_id", "pos", "prev_h", "is_final").toPandas()
-    gathered.unpersist()
-    _mark(f"toPandas ({len(pdf)} rows)")
+        # ---- greedy walk per candidate over the frequent edges (driver) ----
+        for cid, st in state.items():
+            plen, h = n, st["h"]
+            while True:
+                options = by_cur.get((cid, plen, h))
+                if not options:
+                    break
+                best_sup = max(o[0] for o in options)
+                # winner: max unique-doc support, tie -> smallest token string
+                tok, nxt = min((t, o_nxt) for sup, t, o_nxt in options if sup == best_sup)
+                st["tokens"].append(tok)
+                st["support"] = best_sup
+                h = nxt
+                plen += 1
+                if plen >= window:
+                    clock.lap("walk")
+                    raise WindowExhausted(f"phrase reached window W={window}")
+            st["h"] = h
+            if plen > n and cid in capped_sup:
+                # expansion support was counted over the cap/support doc
+                # sample: report the unbiased estimate (bounded by the exact
+                # seed df - expansion support is monotone non-increasing)
+                est = round(st["support"] * capped_sup[cid] / cap)
+                st["support"] = min(st["seed_support"], max(min_docs, est))
+        clock.lap("walk")
+
+        # ---- flag FINAL occurrences (per-cid final length and chain hash,
+        # looked up by cid - no join); only the c columns of lengths that
+        # actually occur are read from cache ----
+        flens = sorted({len(st["tokens"]) for st in state.values()})
+        fin_case = (
+            "CASE flen "
+            + " ".join(f"WHEN {f} THEN (c{f} = fin_h)" for f in flens)
+            + " END"
+        )
+        flagged = (
+            gathered.withColumn(
+                "flen", F.expr(_by_cid([len(state[r[0]]["tokens"]) for r in cand_rows]))
+            )
+            .withColumn("fin_h", F.expr(_by_cid([state[r[0]]["h"] for r in cand_rows])))
+            .withColumn("is_final", F.coalesce(F.expr(fin_case), F.lit(False)))
+        )
+
+        # single Arrow transfer: (cid, doc_id, pos, prev hash, is_final) - the
+        # occurrence rows the sequential selection needs anyway also serve
+        # the closure counters AND the canonical example docs, so no further
+        # cluster jobs run after this point
+        pdf = flagged.select("cid", "doc_id", "pos", "prev_h", "is_final").toPandas()
+        clock.lap("occurrences")
+    finally:
+        gathered.unpersist()
 
     # ---- closure counters + example docs, reduced driver-side -------------
     fin_pdf = pdf[pdf["is_final"]]
     n_pos0_by = fin_pdf[fin_pdf["pos"] == 0].groupby("cid").size()
     n_prev_by = fin_pdf.groupby("cid")["prev_h"].nunique()  # NaN (pos=0) excluded
+    n_pos0_by, n_prev_by = n_pos0_by.to_dict(), n_prev_by.to_dict()
     closure = {
         cid: (int(n_pos0_by.get(cid, 0)), int(n_prev_by.get(cid, 0)))
         for cid in state
     }
     # canonical examples: first 2 of the sorted unique doc-id set per cid
-    examples: dict[int, list[str]] = {
-        cid: sorted(grp.unique())[:2]
-        for cid, grp in fin_pdf.groupby("cid")["doc_id"]
-    }
-    _mark("closure + examples reduce")
+    ex = (
+        fin_pdf[["cid", "doc_id"]]
+        .drop_duplicates()
+        .sort_values(["cid", "doc_id"])
+        .groupby("cid")
+        .head(2)
+    )
+    examples: dict[int, list[str]] = defaultdict(list)
+    for cid, doc in zip(ex["cid"].tolist(), ex["doc_id"].tolist()):
+        examples[cid].append(doc)
 
     # ---- sequential selection (reference stage F), numpy-vectorized with
     # INTERVAL bookkeeping (marks are contiguous ranges; storing intervals
@@ -858,7 +934,7 @@ def _mine_distributed(
             )
     if stats is not None:
         stats.update(selection_skipped_covered=n_skipped, selection_dropped_closure=n_closed)
-    _mark("selection")
+    clock.lap("selection")
     return out
 
 

@@ -43,6 +43,9 @@ def test_stats_driver_and_distributed_agree(spark):
             spark, docs, min_docs=10, ngrams=3, strategy=strat, stats=stats
         )
         _check(stats, expect_6plus=1)  # the 7-token boilerplate phrase
+        # wall time and job count are per-run facts, not mining statistics
+        assert stats.pop("spark_jobs") > 0
+        assert set(stats.pop("phase_s")) >= {"words", "candidates"}
         out[strat] = (sorted(p.text for p in phrases), stats)
     assert out["driver"] == out["distributed"]
 
@@ -55,6 +58,22 @@ def test_pipeline_snapshot_carries_mining_stats(spark, tmp_path):
     m = res["metrics"]["phrases"]
     assert STATS_KEYS <= set(m)
     assert m["phrases_total"] == m["n_phrases"]
+
+
+def test_pipeline_manifest_carries_mine_phases_and_job_count(spark, tmp_path):
+    import json
+
+    from boilerplate_buster_spark.plans.pipeline import CheckpointStore
+
+    pages = pages_df_local(spark, 30, seed=7)
+    ckpt = str(tmp_path / "ckpt")
+    run_extraction_pipeline(spark, pages, ckpt, min_docs=12, ngrams=3)
+    snap = CheckpointStore(ckpt).last_snapshot()
+    m = snap["stages"]["phrases"]["metrics"]
+    assert m["spark_jobs"] > 0
+    assert {"words", "candidates"} <= set(m["phase_s"])
+    assert all(isinstance(v, float) and v >= 0 for v in m["phase_s"].values())
+    json.dumps(snap)
 
 
 def test_capped_sampling_scales_expansion_threshold(spark):
