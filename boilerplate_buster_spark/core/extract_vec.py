@@ -5,20 +5,25 @@ stays as the golden oracle - tests/test_extract_vec.py compares them on random
 corpora, and the byte-identical extraction goldens run through THIS path).
 The per-batch algorithm:
 
-  1. tokenize every doc (regex, C speed) and flatten the batch into ONE token
-     stream with a doc-index array (windows crossing doc boundaries are
-     masked out, so one vectorized pass serves the whole Arrow batch);
-  2. factorize tokens to int64 ids (pandas C path);
+  1. tokenize the whole batch at once (core/tokenize.tokenize_batch): ONE
+     ASCII-lowered join of the docs and ONE regex split give the batch's
+     token stream, with doc-relative offsets and a doc-index array from
+     numpy cumsum/searchsorted - no Python object per token beyond the
+     token string itself (windows crossing doc boundaries are masked out,
+     so one vectorized pass serves the whole Arrow batch);
+  2. factorize tokens to int64 ids (pandas C path), the phrase words in the
+     same call, so a phrase word absent from the batch is known without a
+     dict over the batch's vocabulary;
   3. per phrase length L: polynomial rolling hash of every L-window
      (L vectorized multiply-adds over the batch, uint64 wraparound),
      `np.isin` against the phrase hashes, then EXACT id-level verification of
      candidates (hash collisions only cost a compare, never a wrong mark);
-  4. marks accumulate in a difference array -> cumsum -> maximal runs;
-     char-span splicing per doc is proportional to the number of RUNS.
+  4. marks accumulate in a difference array -> cumsum -> maximal runs, split
+     at gaps and at doc boundaries; the splice loop visits only the marked
+     runs and the docs that hold them.
 
-Replaces the per-row, per-token, per-phrase-length pure-Python loop that
-dominated round-1 extraction wall time (the only Python on the hot path is
-now the tokenizer regex and the run splicing).
+An empty phrase table returns the inputs before tokenizing.  The only Python
+loops on the hot path are per phrase length and per marked run.
 """
 
 from __future__ import annotations
@@ -26,7 +31,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 
-from boilerplate_buster_spark.core.tokenize import tokenize_with_spans
+from boilerplate_buster_spark.core.tokenize import tokenize_batch
 
 _MULT = np.uint64(0x9E3779B97F4A7C15)  # odd 64-bit multiplier (golden ratio)
 
@@ -100,57 +105,49 @@ def _marked_flags(
 
 
 def strip_batch(
-    texts: list[str], by_len: dict[int, set[tuple[str, ...]]]
+    texts: list[str | None], by_len: dict[int, set[tuple[str, ...]]]
 ) -> tuple[list[str], list[list[tuple[int, int, str]]]]:
-    """Batch twin of core.extract.strip_boilerplate: -> (texts, spans) lists."""
-    spans_per_doc = [tokenize_with_spans(t or "") for t in texts]
-    counts = np.fromiter((len(s) for s in spans_per_doc), np.int64, len(texts))
-    bounds = np.concatenate([[0], np.cumsum(counts)])
-    n = int(bounds[-1])
-    if n == 0 or not by_len:
-        return [t or "" for t in texts], [[] for _ in texts]
+    """Batch twin of core.extract.strip_boilerplate: -> (texts, spans) lists;
+    a None text reads as ""."""
+    texts = [t or "" for t in texts]
+    out_spans: list[list[tuple[int, int, str]]] = [[] for _ in texts]
+    if not by_len:
+        return texts, out_spans
+    tokens, starts, ends, doc_idx = tokenize_batch(texts)
+    if not tokens:
+        return texts, out_spans
 
-    all_tokens = np.empty(n, dtype=object)
-    k = 0
-    for st in spans_per_doc:
-        for tok, _, _ in st:
-            all_tokens[k] = tok
-            k += 1
-    codes, uniques = pd.factorize(all_tokens)
-    ids = codes.astype(np.int64)
-    vocab = {u: i for i, u in enumerate(uniques)}
-    doc_idx = np.repeat(np.arange(len(texts), dtype=np.int64), counts)
+    # factorize the phrase words with the batch: codes follow first
+    # appearance, so a phrase word coded past every batch code is absent
+    words = list({w for phrases in by_len.values() for p in phrases for w in p})
+    n = len(tokens)
+    codes, _ = pd.factorize(np.array(tokens + words, dtype=object))
+    n_seen = int(codes[:n].max()) + 1
+    vocab = {w: c for w, c in zip(words, codes[n:].tolist()) if c < n_seen}
+    marked = _marked_flags(codes[:n].astype(np.int64), doc_idx, by_len, vocab)
 
-    marked = _marked_flags(ids, doc_idx, by_len, vocab)
+    # maximal marked runs, split at gaps and at doc boundaries
+    idx = np.nonzero(marked)[0]
+    if idx.size == 0:
+        return texts, out_spans
+    brk = np.nonzero((np.diff(idx) > 1) | (np.diff(doc_idx[idx]) != 0))[0]
+    run_s = np.concatenate([idx[:1], idx[brk + 1]])
+    run_e = np.concatenate([idx[brk], idx[-1:]])
+    run_d = doc_idx[run_s]
+    for d, s, e, rs, re_ in zip(
+        run_d.tolist(), starts[run_s].tolist(), ends[run_e].tolist(),
+        run_s.tolist(), run_e.tolist(),
+    ):
+        out_spans[d].append((s, e, " ".join(tokens[rs : re_ + 1])))
 
-    out_texts: list[str] = []
-    out_spans: list[list[tuple[int, int, str]]] = []
-    for d, text in enumerate(texts):
-        text = text or ""
-        dm = marked[bounds[d] : bounds[d + 1]]
-        idx = np.nonzero(dm)[0]
-        if idx.size == 0:
-            out_texts.append(text)
-            out_spans.append([])
-            continue
-        spans_tok = spans_per_doc[d]
-        brk = np.nonzero(np.diff(idx) > 1)[0]
-        run_s = np.concatenate([idx[:1], idx[brk + 1]])
-        run_e = np.concatenate([idx[brk], idx[-1:]])
-        removed = []
+    out_texts = texts[:]
+    for d in np.unique(run_d).tolist():
+        text = texts[d]
         parts = []
         cursor = 0
-        for rs, re_ in zip(run_s, run_e):
-            s = spans_tok[rs][1]
-            e = spans_tok[re_][2]
-            removed.append(
-                (s, e, " ".join(t for t, _, _ in spans_tok[rs : re_ + 1]))
-            )
+        for s, e, _ in out_spans[d]:
             parts.append(text[cursor:s])
             cursor = e
         parts.append(text[cursor:])
-        out_texts.append("".join(parts))
-        out_spans.append(removed)
+        out_texts[d] = "".join(parts)
     return out_texts, out_spans
-
-

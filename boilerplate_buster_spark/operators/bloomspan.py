@@ -941,7 +941,8 @@ def _mine_distributed(
 def phrases_to_df(spark: SparkSession, phrases: list[WCandidate]) -> DataFrame:
     """Canonical result DataFrame (deterministic projection of the CSV sink,
     corpus_miner.cpp:529-561): example_docs = first 2 of the sorted unique doc
-    set (deviation: reference uses hash-set order)."""
+    set (deviation: reference uses hash-set order).  A local relation (see
+    _driver_frame), rows in the sorted order."""
     data = []
     for p in phrases:
         if p.examples is not None:
@@ -950,7 +951,7 @@ def phrases_to_df(spark: SparkSession, phrases: list[WCandidate]) -> DataFrame:
             ex = sorted({str(o.doc_id) for o in p.occs})[:2]
         data.append((p.text, p.support, len(p.tokens), ex))
     data.sort(key=lambda r: (-r[1] * r[2], -r[1], r[0]))
-    return spark.createDataFrame(data, RESULT_SCHEMA)
+    return _driver_frame(spark, data, RESULT_SCHEMA)
 
 
 def mine_df(spark: SparkSession, docs: DataFrame, **kw) -> DataFrame:

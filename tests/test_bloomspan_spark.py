@@ -6,6 +6,7 @@ from __future__ import annotations
 import random
 
 from boilerplate_buster_spark.core import pyref
+from boilerplate_buster_spark.core.expand import WCandidate, WOcc
 from boilerplate_buster_spark.core.tokenize import tokenize
 from boilerplate_buster_spark.functions.tokenizer import tokens
 from boilerplate_buster_spark.operators import bloomspan
@@ -18,6 +19,29 @@ def corpus_df(spark, corpus_name):
     named = load_dir_corpus_text(REF_TESTS / corpus_name)
     df = spark.createDataFrame(named, ["doc_id", "text"])
     return df.select("doc_id", tokens("text").alias("tokens"))
+
+
+def test_phrases_to_df_is_a_local_relation_equal_to_row_list(spark):
+    phrases = [
+        WCandidate(["a", "b"], 5, examples=["d3", "d1"]),
+        WCandidate(["x", "y", "z"], 3, occs=[WOcc(i, 0, None, []) for i in (9, 2, 2, 4)]),
+        WCandidate(["b", "a"], 5, examples=[]),
+        WCandidate(["q", "r", "s", "t"], 1, examples=["d0"]),
+    ]
+    got = bloomspan.phrases_to_df(spark, phrases)
+    rows = [  # by -freq * length, -freq, phrase
+        ("a b", 5, 2, ["d3", "d1"]),
+        ("b a", 5, 2, []),
+        ("x y z", 3, 3, ["2", "4"]),
+        ("q r s t", 1, 4, ["d0"]),
+    ]
+    want = spark.createDataFrame(rows, bloomspan.RESULT_SCHEMA)
+    assert got.schema == want.schema == bloomspan.RESULT_SCHEMA
+    assert got.collect() == want.collect()
+    plan = got._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
+    empty = bloomspan.phrases_to_df(spark, [])
+    assert empty.schema == bloomspan.RESULT_SCHEMA and empty.collect() == []
 
 
 def test_spark_bloomspan_test1(spark):

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import random
 
+from boilerplate_buster_spark.core import extract_vec
 from boilerplate_buster_spark.core.extract import index_phrases, strip_boilerplate
 from boilerplate_buster_spark.core.extract_vec import strip_batch
 
@@ -71,3 +72,27 @@ def test_repeated_phrase_inside_doc():
     t = "nav nav nav body text nav nav nav"
     _cross_check([t], ["nav nav nav"])
     _cross_check([t], ["nav nav"])  # overlapping repeats -> one merged run
+
+
+def test_adjacent_docs_marked_at_shared_boundary_give_two_runs():
+    texts = ["x a b", "a b y"]
+    _cross_check(texts, ["a b"])
+    got_t, got_s = strip_batch(texts, index_phrases(["a b"]))
+    assert got_t == ["x ", " y"]
+    assert got_s == [[(2, 5, "a b")], [(0, 3, "a b")]]
+
+
+def test_separator_only_and_empty_batches():
+    texts = ["", " ", "\n", ", ;", "\n\n", "-"]
+    _cross_check(texts, ["a b", "a"])
+    assert strip_batch(texts, index_phrases(["a"])) == (texts, [[]] * len(texts))
+    assert strip_batch([], index_phrases(["a"])) == ([], [])
+
+
+def test_empty_phrase_table_returns_inputs_without_tokenizing(monkeypatch):
+    def no_tokenize(texts):
+        raise AssertionError("tokenized a batch with no phrases")
+
+    monkeypatch.setattr(extract_vec, "tokenize_batch", no_tokenize)
+    texts = ["a b", None, ""]
+    assert strip_batch(texts, index_phrases([])) == (["a b", "", ""], [[], [], []])

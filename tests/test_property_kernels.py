@@ -2,11 +2,14 @@
 
   * vectorized strip == pure-Python golden strip, for ARBITRARY unicode texts
     and arbitrary phrase sets (the adversarial inputs hand-written cases miss:
-    overlaps, repeats, phrase == whole doc, punctuation-only docs);
+    overlaps, repeats, phrase == whole doc, punctuation-only docs), and for
+    batches holding None, astral characters, non-ASCII uppercase that must
+    not be lowered and newlines inside docs;
   * strip invariants: output is a subsequence of the input, removed spans are
     disjoint ascending, splicing the spans back reconstructs the input;
   * tokenizer: tokens contain no delimiters, concatenating spans reproduces
-    the token text, ASCII lowering only;
+    the token text, ASCII lowering only; the batch tokenizer equals the
+    per-doc one doc by doc (tokens, doc-relative offsets, doc index);
   * html parse: the regex scanner behind html_to_text == the stdlib
     _BlockParser it replaced, over hostile html in every accepted input
     type, and the scanner (not the fallback) parses every generated page.
@@ -20,8 +23,10 @@ from boilerplate_buster_spark.core.extract import index_phrases, strip_boilerpla
 from boilerplate_buster_spark.core.extract_vec import strip_batch
 from boilerplate_buster_spark.core.htmlparse import _parse_stdlib, _scan, html_to_text
 from boilerplate_buster_spark.core.tokenize import (
+    ascii_lower,
     decode_page_bytes,
     tokenize,
+    tokenize_batch,
     tokenize_with_spans,
 )
 from boilerplate_buster_spark.sources.pages import generate_pages_local
@@ -65,6 +70,34 @@ def test_vectorized_strip_equals_golden(texts, phrases):
         assert gs == ws
 
 
+# Words whose lowering differs between ASCII-only and full Unicode ("ÉA"
+# must stay "ÉA", so phrase "éa" must not match it), astral characters, a
+# titlecase letter; docs also carry arbitrary text and newlines.
+_uword = st.sampled_from(
+    ["aa", "bb", "Aa", "x1", "日本", "Éa", "éa", "ÉA", "\U0001d518x", "ǅ", "ß"]
+)
+_udoc = st.lists(
+    st.one_of(_uword, st.text(max_size=3), st.sampled_from([" ", "\n", ", "])),
+    max_size=20,
+).map("".join)
+_uphrase = st.lists(_uword.map(ascii_lower), min_size=1, max_size=3).map(" ".join)
+
+
+@given(
+    texts=st.lists(st.one_of(st.none(), _udoc), max_size=8),
+    phrases=st.lists(_uphrase, min_size=1, max_size=5),
+)
+@settings(max_examples=300, deadline=None)
+def test_strip_batch_equals_per_doc_oracle_unicode(texts, phrases):
+    by_len = index_phrases(phrases)
+    got_t, got_s = strip_batch(texts, by_len)
+    assert len(got_t) == len(got_s) == len(texts)
+    for t, gt, gs in zip(texts, got_t, got_s):
+        wt, ws = strip_boilerplate(t or "", by_len)
+        assert gt == wt
+        assert gs == ws
+
+
 @given(text=doc_text(), phrases=st.lists(phrase(), min_size=0, max_size=6))
 @settings(max_examples=200, deadline=None)
 def test_strip_invariants(text, phrases):
@@ -101,6 +134,28 @@ def test_tokenizer_spans_consistent(text):
         # tokens never contain ASCII delimiters
         assert all(ch > "\x7f" or ch.isalnum() for ch in tok)
         prev_end = e
+
+
+@given(
+    texts=st.lists(
+        st.one_of(
+            _udoc,
+            # every category, lone surrogates included
+            st.text(alphabet=st.characters(blacklist_categories=()), max_size=30),
+        ),
+        max_size=6,
+    )
+)
+@settings(max_examples=300, deadline=None)
+def test_tokenize_batch_equals_per_doc_oracle(texts):
+    tokens, starts, ends, doc = tokenize_batch(texts)
+    assert starts.dtype == ends.dtype == doc.dtype == "int64"
+    want = [
+        (d, tok, s, e)
+        for d, text in enumerate(texts)
+        for tok, s, e in tokenize_with_spans(text)
+    ]
+    assert list(zip(doc.tolist(), tokens, starts.tolist(), ends.tolist())) == want
 
 
 # Hostile html fragments, one list per kind so that rare kinds meet often:
