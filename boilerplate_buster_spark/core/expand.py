@@ -6,12 +6,12 @@ This is the one inherently ORDER-SEQUENTIAL piece of the reference algorithm
 2.5 M1-M3).  It is deliberately formulated over per-occurrence token WINDOWS
 rather than whole documents:
 
-    occ = (doc_id, pos, prev_token | None, window)
+    occ = (doc_id, pos, prev | None, window)
     window = doc tokens [pos, pos + W)         (W >= longest possible phrase)
 
 so the distributed layer (operators/bloomspan.py) can gather exactly the
-bounded slices the kernel needs - `slice(tokens, pos+1, W)` per surviving
-candidate occurrence - instead of collecting the corpus.  Post-threshold
+bounded slices the kernel needs - W tokens per surviving candidate
+occurrence - instead of collecting the corpus.  Post-threshold
 candidates are corpus-statistics-bounded (boilerplate templates, not corpus
 rows); their occurrence lists are what scales, and those are capped/sampled
 upstream with exact support kept separately (see operators/bloomspan.py).
@@ -35,7 +35,11 @@ class WOcc:
 
     doc_id: int | str
     pos: int
-    prev: Optional[str]  # token at pos-1, None when pos == 0
+    # the token at pos-1, or any stand-in for it that is equal exactly when
+    # the tokens are (backward closure only compares it): pyref passes the
+    # token, bloomspan.mine its xxhash64 (equal by chance with p ~ 2^-64);
+    # None when pos == 0
+    prev: Optional[str | int]
     window: list[str]  # doc tokens [pos, pos+W)
 
 
@@ -44,8 +48,8 @@ class WCandidate:
     tokens: list[str]
     support: int
     occs: list[WOcc] = field(default_factory=list)
-    # canonical example doc ids (<= 2, sorted); populated by the distributed
-    # miner where occs carry doc HASHES rather than identities
+    # canonical example doc ids (<= 2, sorted); set by bloomspan.mine on
+    # both strategies (the distributed one keeps no occs)
     examples: list | None = None
 
     @property

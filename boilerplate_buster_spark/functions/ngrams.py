@@ -12,16 +12,25 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 
-def ngram_structs(tokens_col: str, n: int) -> Column:
-    """array<struct<pos:int, gram:string>> of all n-gram start positions.
+def gram_starts(tokens_col: str, n: int) -> str:
+    """SQL array<int>: the 1-based start position of every n-gram of the
+    `tokens_col` array.
 
     Guarded for len < n via slice-to-empty (sequence() alone would produce a
     DESCENDING range for len < n and silently emit garbage).
     """
     t = tokens_col
-    cnt = f"greatest(size({t}) - {n} + 1, 0)"
+    return (
+        f"slice(sequence(1, greatest(size({t}) - {n} + 1, 1)), "
+        f"1, greatest(size({t}) - {n} + 1, 0))"
+    )
+
+
+def ngram_structs(tokens_col: str, n: int) -> Column:
+    """array<struct<pos:int, gram:string>> of all n-gram start positions."""
+    t = tokens_col
     return F.expr(
-        f"transform(slice(sequence(1, greatest(size({t}) - {n} + 1, 1)), 1, {cnt}), "
+        f"transform({gram_starts(t, n)}, "
         f"i -> struct(i - 1 AS pos, array_join(slice({t}, i, {n}), ' ') AS gram))"
     )
 

@@ -1,14 +1,14 @@
 """BloomSpan Maximal-Frequent-Phrase miner, Spark-first.
 
 Pipeline (SURVEY.md section 7; reference: corpus-miner/_ours/bloom_gram_miner.cpp),
-one Spark action per step on the distributed path:
+one Spark action per step, and one code path per step for both strategies:
 
   docs(doc_id, tokens)
     -> word gate: ONE collect of the frequent-word aggregate,
        grouped into the 64-bit words of a packed Bloom bitmap
        (bit_or per word, plus a few word hashes per word)    [shuffles #1-2;
        small vocabularies gate by the literal hash IN-set,
-       larger ones by the broadcast bitmap]
+       larger ones by the broadcast bitmap (word_gate)]
     -> candidate grams: word-gated per-doc-distinct n-gram
        counts, threshold support >= min_docs; ONE collect
        also carries each gram's seed chain hash and in-scan
@@ -16,15 +16,25 @@ one Spark action per step on the distributed path:
        post-threshold set is corpus-statistics bounded: boilerplate
        TEMPLATES, not corpus rows]
     -> occurrence gather: in-scan hash IN-set filter over the
-       corpus, flat BIGINT prefix-hash / STRING token columns,
-       persisted; the edge aggregation fills the cache       [NO shuffle]
+       corpus, ONE flat layout (cid, doc_h, doc_id, pos,
+       prev_h, c1..cW, s1..sW) that both strategies read     [NO shuffle]
+  strategy='distributed':
     -> greedy expansion: ONE path-tree edge aggregation over
        all depths, keyed by the next token's string,
-       HAVING sup >= min_docs before collect                 [shuffles #4-5]
+       HAVING sup >= min_docs before collect; it also fills
+       the cache of the gathered table                       [shuffles #4-5]
     -> occurrence transfer: ONE Arrow toPandas of per-occurrence
        (cid, doc, pos, prev hash, is_final) from the cache
     -> sequential selection: score order + occupancy bitmask
        + backward closure on (cid, doc, pos) integer tuples   [driver, numpy]
+  strategy='driver':
+    -> ONE Arrow transfer of (cid, doc_id, pos, prev_h, s1..sW), then the
+       exact sequential kernel (core/expand.py) on the driver
+
+On both strategies `prev` (the backward-closure input) is the 64-bit hash of
+the token before the occurrence, so two distinct preceding tokens can only
+be taken for one with probability ~2^-64 (the same caveat as the chain
+hashes of the distributed walk).
 
 The selection step is the reference's inherently sequential stage F
 (":595-706").  What reaches the driver is NOT the corpus: the frequent edge
@@ -41,9 +51,8 @@ rescaled estimates; closure counters, examples and the occupancy bitmask run
 on the same consistent doc subsample (sized >> min_docs for any sane
 threshold).  `stats["occ_cap_sampled_grams"]` records how many grams the cap
 touched; pass ``max_occs_per_gram=None`` for the byte-identical exact
-posture.  Small
-corpora skip all of this: strategy='driver' collects string windows and runs
-the exact kernel (core/expand.py) directly.
+posture.  Small corpora skip all of this: strategy='driver' transfers the
+gathered windows and runs the exact kernel directly.
 
 ``mine`` runs its Spark jobs under a job group of its own (the caller's
 group is restored on exit) and reports, in ``stats``, ``phase_s`` (wall
@@ -58,7 +67,7 @@ from collections import defaultdict
 from contextlib import contextmanager
 
 from py4j.protocol import Py4JError
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -68,6 +77,8 @@ from boilerplate_buster_spark.core.expand import (
     WindowExhausted,
     expand_windowed,
 )
+from boilerplate_buster_spark.functions.ngrams import gram_starts
+
 RESULT_SCHEMA = T.StructType(
     [
         T.StructField("phrase", T.StringType(), False),
@@ -87,13 +98,17 @@ _CANDS_SCHEMA = T.StructType([
 
 def _driver_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
     """A frame of driver-side rows (they come from Spark results, so no
-    per-row schema verification).  Built from pandas: with Arrow enabled, as
-    get_spark sets it, the frame is a local relation, so reading or
-    broadcasting it runs no Spark job - a row list would be parallelized
-    and unpickled by Python workers in a job of its own."""
-    import pandas as pd
+    per-row schema verification).  Built from a pyarrow Table, the frame is
+    a local relation - an empty one too - so reading or broadcasting it runs
+    no Spark job; a row list would be parallelized and unpickled by Python
+    workers in a job of its own."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    return spark.createDataFrame(pd.DataFrame(rows, columns=schema.names), schema)
+    cols = list(zip(*rows)) if rows else [[] for _ in schema.names]
+    return spark.createDataFrame(
+        pa.table(dict(zip(schema.names, cols)), schema=to_arrow_schema(schema))
+    )
 
 
 def _by_cid(values: list[int]) -> str:
@@ -115,7 +130,7 @@ def _gramhash_sql(hs_ref: str, i: str, n: int) -> str:
     return " ^ ".join(terms)
 
 
-BITMAP_BITS_DEFAULT = 1 << 22  # 4 Mbit -> 512 KiB packed; fpr ~ vocab/bits per probe
+BITMAP_BITS = 1 << 22  # 4 Mbit -> 512 KiB packed; fpr ~ vocab/bits per probe
 
 #: word hashes the word-gate probe carries per 64-bit bitmap word.  A
 #: frequent vocabulary with more first-probe words in one bitmap word gates
@@ -124,15 +139,20 @@ BITMAP_BITS_DEFAULT = 1 << 22  # 4 Mbit -> 512 KiB packed; fpr ~ vocab/bits per 
 _PROBE_HASHES = 4
 
 
-def _bitmap_words(fw_df: DataFrame, bits: int) -> DataFrame:
-    """(idx, v, n, hs): the 2-probe Bloom bitmap over the words of `fw_df`,
-    grouped by its 64-bit words.  v is the bit_or of word `idx`'s set bits;
-    n counts the words whose first probe lands in word `idx` and hs holds up
-    to _PROBE_HASHES of their xxhash64 values.  At most bits//64 rows,
-    whatever the vocabulary size."""
-    b1, b2 = f"pmod(xxhash64(word), {bits})", f"pmod(xxhash64(word, 7), {bits})"
+def _bitmap_words(docs: DataFrame, min_docs: int) -> DataFrame:
+    """(idx, v, n, hs): the 2-probe Bloom bitmap over the words in >=
+    min_docs docs, grouped by its 64-bit words - the one word-gate collect,
+    whose rows `word_gate` turns into the gate.  v is the bit_or of word
+    `idx`'s set bits; n counts the words whose first probe lands in word
+    `idx` and hs holds up to _PROBE_HASHES of their xxhash64 values.  At
+    most BITMAP_BITS//64 rows, whatever the vocabulary size."""
+    from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
+
+    b1, b2 = f"pmod(xxhash64(word), {BITMAP_BITS})", f"pmod(xxhash64(word, 7), {BITMAP_BITS})"
     return (
-        fw_df.select(
+        word_doc_freq(docs)
+        .filter(F.col("df") >= min_docs)
+        .select(
             F.explode(
                 F.expr(
                     f"array(named_struct('bit', {b1}, 'h', xxhash64(word)), "
@@ -149,42 +169,41 @@ def _bitmap_words(fw_df: DataFrame, bits: int) -> DataFrame:
     )
 
 
-def _pack_bitmap(spark: SparkSession, words: list, bits: int) -> DataFrame:
-    """One-row `bf array<bigint>` frame from collected (idx, v, ...) rows."""
+def word_gate(spark: SparkSession, probe: list, word_gate_max: int) -> list[int] | DataFrame:
+    """The reference's P3 word-DF gate (bloom_gram_miner.cpp:414-421) from
+    the collected `_bitmap_words` rows: the sorted xxhash64 values of a
+    frequent vocabulary of at most word_gate_max words (a literal IN-set),
+    or else the 2-probe Bloom bitmap packed into a one-row `bf
+    array<bigint>` frame (broadcast into the scan).
+
+    Spark's internal bloom_filter_agg is NOT in the public function registry
+    (UNRESOLVED_ROUTINE on 4.1), so the bitmap is built from public ops: the
+    cluster ORs the bits of each 64-bit bitmap word (at most BITMAP_BITS//64
+    rows, NEVER bounded by vocabulary size - the driver-memory cliff of a
+    full word collect), the driver places them.  False positives only ADD
+    candidate grams; the exact support threshold keeps the mined set
+    exact."""
     import numpy as np
 
-    packed = np.zeros(bits // 64, dtype=np.int64)
-    if words:
-        idx, v = zip(*((r[0], r[1]) for r in words))
-        packed[np.array(idx, dtype=np.int64)] = np.array(v, dtype=np.int64)
+    n_words = sum(r["n"] for r in probe)
+    hashes = sorted(h for r in probe for h in r["hs"])
+    if n_words <= word_gate_max and len(hashes) == n_words:
+        return hashes
+    packed = np.zeros(BITMAP_BITS // 64, dtype=np.int64)
+    if probe:
+        packed[np.array([r["idx"] for r in probe], dtype=np.int64)] = np.array(
+            [r["v"] for r in probe], dtype=np.int64
+        )
     return _driver_frame(spark, [(packed,)], _BITMAP_SCHEMA)
 
 
-def packed_word_bitmap(
-    spark: SparkSession, fw_df: DataFrame, bits: int = BITMAP_BITS_DEFAULT
-) -> DataFrame:
-    """Scale path of the reference's P3 word-DF gate
-    (bloom_gram_miner.cpp:414-421): a 2-probe Bloom bitmap over the frequent
-    words, packed into a single array<bigint> row and broadcast.
-
-    Spark's internal bloom_filter_agg is NOT in the public function registry
-    (UNRESOLVED_ROUTINE on 4.1), so the filter is built from public ops: the
-    cluster ORs the bits of each 64-bit bitmap word (at most bits//64 rows,
-    NEVER bounded by vocabulary size - the driver-memory cliff of a full word
-    collect is what this replaces), the driver places them.  False positives
-    only ADD candidate grams; the exact support threshold keeps the mined set
-    exact.  ``mine`` builds the same bitmap from its word-gate probe."""
-    words = _bitmap_words(fw_df, bits).select("idx", "v").collect()
-    return _pack_bitmap(spark, words, bits)
-
-
-def _bitmap_probe(x: str, bits: int = BITMAP_BITS_DEFAULT) -> str:
+def _bitmap_probe(x: str) -> str:
     """SQL predicate: token `x` passes both bitmap probes (bf column in scope).
     shiftright on bigint is arithmetic, which still lands the target bit at
     position 0 before the & 1 mask - bit 63 included."""
     tests = []
     for probe in ("xxhash64(x)", "xxhash64(x, 7)"):
-        h = f"pmod({probe}, {bits})"
+        h = f"pmod({probe}, {BITMAP_BITS})"
         tests.append(
             f"((shiftright(element_at(bf, cast(shiftright({h}, 6) AS int) + 1), "
             f"cast({h} & 63 AS int)) & 1) = 1)"
@@ -193,17 +212,10 @@ def _bitmap_probe(x: str, bits: int = BITMAP_BITS_DEFAULT) -> str:
 
 
 def candidate_grams(
-    docs: DataFrame,
-    n: int,
-    min_docs: int,
-    doc_col: str,
-    tokens_col: str,
-    word_gate_max: int = 2048,
-    fw: list | None = None,
-    bitmap_df: DataFrame | None = None,
-    stats: dict | None = None,
-) -> DataFrame:
-    """(gram, support): n-grams in >= min_docs DISTINCT docs (stages A-D).
+    docs: DataFrame, n: int, min_docs: int, gate: list[int] | DataFrame
+) -> tuple[DataFrame, Observation]:
+    """(gram, support): n-grams in >= min_docs DISTINCT docs (stages A-D),
+    and the Observation of the M5 seed counters (total, acc).
     Exact replacement of Bloom pass + word-DF gate + external merge
     (bloom_gram_miner.cpp:284-589) - those are approximations/spill machinery
     around exactly this aggregate.
@@ -212,123 +224,89 @@ def candidate_grams(
     preserving):
       * per-doc array_distinct on the gram list (intra-doc repeats collapse
         map-side -> the agg is a plain count, no distinct rewrite/Expand);
-      * the reference's word-DF gate (P3, bloom_gram_miner.cpp:414-421):
-        every token of a qualifying gram is itself in >= min_docs docs, so
-        grams touching any rare word are dropped at the scan.  Small
-        frequent-word sets (<= word_gate_max) gate via a literal hash IN-set;
-        larger vocabularies gate via the broadcast packed bitmap
-        (`bitmap_df`, see packed_word_bitmap) - no unbounded driver collect.
+      * the word gate `gate` (see word_gate): every token of a qualifying
+        gram is itself in >= min_docs docs, so grams touching any rare word
+        are dropped at the scan - by the literal hash IN-set, or by the
+        broadcast packed bitmap.
 
-    `stats` (optional dict) receives the M5 mining-statistics counters
-    seeds_total / seeds_accepted / seeds_rejected / pct_reduction
-    (bloom_gram_miner.cpp:447-454) at the cost of one extra aggregate job.
+    The seed counters ride the candidate collect via df.observe()
+    (CollectMetrics blocks the threshold-filter pushdown, so `total` counts
+    pre-filter grams): read the Observation only after an action has run
+    the returned plan - obs.get on a never-executed plan blocks forever.
     """
-    from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
-
-    t = tokens_col
-    if fw is None and bitmap_df is None:
-        fw = (
-            word_doc_freq(docs, doc_col, tokens_col)
-            .filter(F.col("df") >= min_docs)
-            .select("word", F.xxhash64("word").alias("h"))
-            .collect()
-        )
-    pos_seq = (
-        f"slice(sequence(1, greatest(size({t}) - {n} + 1, 1)), "
-        f"1, greatest(size({t}) - {n} + 1, 0))"
-    )
-    src_df = None
-    if bitmap_df is not None:
+    t = "tokens"
+    if isinstance(gate, DataFrame):
         # bitmap probes per TOKEN (not per gram position), broadcast 1-row bf
-        src_df = docs.crossJoin(F.broadcast(bitmap_df)).select(
+        src_df = docs.crossJoin(F.broadcast(gate)).select(
             F.col(t),
             F.expr(f"transform({t}, x -> {_bitmap_probe('x')})").alias("_ok"),
         )
-    elif len(fw) <= word_gate_max:
+    else:
         # membership on 64-bit token hashes, computed ONCE per token -
         # literal IN-lists are linear scans in codegen, so comparing longs
         # (not strings) and testing each token once (not once per gram)
         # keeps the gate ~free.  Hash false positives only ADD grams; the
         # exact threshold below keeps the result exact.
-        hset = ", ".join(str(r["h"]) for r in fw) or "0"
+        hset = ", ".join(map(str, gate)) or "0"
         src_df = docs.select(
             F.col(t),
             F.expr(f"transform({t}, x -> xxhash64(x) IN ({hset}))").alias("_ok"),
         )
-    if src_df is not None:
-        conj = " AND ".join(f"element_at(_ok, i + {k})" for k in range(n))
-        pos_seq = f"filter({pos_seq}, i -> {conj})"
-    else:
-        src_df = docs
+    conj = " AND ".join(f"element_at(_ok, i + {k})" for k in range(n))
     per_doc = src_df.select(
         F.explode(
             F.expr(
-                f"array_distinct(transform({pos_seq}, i -> array_join(slice({t}, i, {n}), ' ')))"
+                f"array_distinct(transform(filter({gram_starts(t, n)}, i -> {conj}), "
+                f"i -> array_join(slice({t}, i, {n}), ' ')))"
             )
         ).alias("gram")
     )
-    grouped = per_doc.groupBy("gram").agg(F.count("*").alias("support"))
-    if stats is not None:
-        # M5 seed counters ride the SAME job as the candidate collect via
-        # df.observe() (CollectMetrics blocks the threshold-filter pushdown,
-        # so `total` counts pre-filter grams) - a separate .first() here
-        # would run the most expensive pass-1 scan+shuffle TWICE per
-        # pipeline.  CONTRACT for direct callers passing `stats`: call
-        # harvest_seed_stats(stats) ONLY AFTER an action has executed the
-        # returned plan (mine() does, right after the candidate collect,
-        # popping the Observation on failure) - until then stats holds a
-        # live non-JSON-serializable Observation under '_seed_obs', and
-        # obs.get on a never-executed plan blocks forever.
-        from pyspark.sql import Observation
-
-        obs = Observation()
-        grouped = grouped.observe(
-            obs,
-            F.count(F.lit(1)).alias("total"),
-            F.sum(F.expr(f"IF(support >= {min_docs}, 1, 0)")).alias("acc"),
-        )
-        stats["_seed_obs"] = obs
-    return grouped.filter(F.col("support") >= min_docs)
-
-
-def harvest_seed_stats(stats: dict | None) -> None:
-    """Fold the deferred Observation planted by candidate_grams into the M5
-    counters.  Call ONLY after an action has executed the candidate plan
-    (Observation.get blocks until the metrics task completes)."""
-    if stats is None:
-        return
-    obs = stats.pop("_seed_obs", None)
-    if obs is None:
-        return
-    row = obs.get
-    total, acc = int(row["total"] or 0), int(row["acc"] or 0)
-    stats.update(
-        seeds_total=total,
-        seeds_accepted=acc,
-        seeds_rejected=total - acc,
-        pct_reduction=round(100.0 * (total - acc) / total, 2) if total else 0.0,
+    obs = Observation()
+    grouped = per_doc.groupBy("gram").agg(F.count("*").alias("support")).observe(
+        obs,
+        F.count(F.lit(1)).alias("total"),
+        F.sum(F.expr(f"IF(support >= {min_docs}, 1, 0)")).alias("acc"),
     )
+    return grouped.filter(F.col("support") >= min_docs), obs
+
+
+def _with_seed_hashes(cands: DataFrame, n: int) -> DataFrame:
+    """(gram, support, h0, gh): the candidate collect.  h0 is the rolling
+    seed hash (the chain value of the gram itself), gh the in-scan gather
+    hash (_gramhash_sql over the gram's token hashes)."""
+    return cands.select(
+        "gram", "support",
+        F.expr("transform(split(gram, ' '), x -> xxhash64(x))").alias("_hs"),
+    ).select(
+        "gram", "support",
+        F.expr("aggregate(_hs, cast(0 AS bigint), (acc, h) -> xxhash64(acc, h))").alias("h0"),
+        F.expr(_gramhash_sql("_hs", "1", n)).alias("gh"),
+    )
+
+
+def _number_candidates(spark: SparkSession, rows: list) -> tuple[list[tuple], DataFrame]:
+    """(cid, gram, support, h0, gh) per collected `_with_seed_hashes` row,
+    cid = rank in gram order, and the (cid, gram, support) frame that
+    gather_windows joins."""
+    cand_rows = [(cid, *r) for cid, r in enumerate(sorted(rows), start=1)]
+    return cand_rows, _driver_frame(spark, [r[:3] for r in cand_rows], _CANDS_SCHEMA)
 
 
 def gather_windows(
     docs: DataFrame,
     cands: DataFrame,
+    cand_hashes: list[int],
     n: int,
     window: int,
-    doc_col: str,
-    tokens_col: str,
     max_occs_per_gram: int | None = None,
-    hashed: bool = False,
-    cand_hashes: list[int] | None = None,
 ) -> DataFrame:
-    """Per-occurrence windows for every candidate gram:
-    (gram, support, doc_id, pos, prev, window) - or, with hashed=True, the
-    flat distributed layout (cid, doc_h, doc_id, pos, prev_h, c1..cW,
+    """Per-occurrence windows for every candidate gram, in the one flat
+    layout both strategies read: (cid, doc_h, doc_id, pos, prev_h, c1..cW,
     s1..sW).
 
-    `cand_hashes` are the in-scan gather hashes of the candidate grams
-    (``_gramhash_sql`` over each gram's token hashes, as ``mine`` collects
-    them with the candidates); when None they are collected from `cands`.
+    `cands` is the (cid, gram, support) frame and `cand_hashes` the in-scan
+    gather hashes of its grams (``_gramhash_sql`` over each gram's token
+    hashes), both from the one candidate collect (`_number_candidates`).
 
     ZERO shuffles on the main path: the candidate set is corpus-statistics
     small (post-threshold boilerplate templates), so occurrence discovery is
@@ -337,30 +315,20 @@ def gather_windows(
     attaches cid/support.  A candidate set above `inscan_max` falls back to
     the explode + broadcast-join + docs-join plan (two shuffles).
 
-    prev = token before the occurrence (backward-closure input, ":675-695");
-    window = W tokens from the occurrence start (expansion input).
+    prev_h = xxhash64 of the token before the occurrence, NULL at pos 0
+    (backward-closure input, ":675-695"); s<i> = token i of the W-token
+    window from the occurrence start, NULL past the doc's end (expansion
+    input); c<i> = rolling prefix hash of window[0..i) (distributed walk).
     """
-    t = tokens_col
+    t = "tokens"
     # occurrence discovery: per-token hashes computed once per doc, then a
     # long-typed shift-xor gram hash tested against the candidate hash set
     # INSIDE the scan (string IN-lists are linear scans in codegen; long
     # compares are ~free).  Hash false positives are removed by the exact
     # gram-string broadcast join right after.
     gh = _gramhash_sql("_hs", "i", n)
-    if cand_hashes is None:
-        cand_hashes = [
-            r["gh"]
-            for r in cands.select(
-                F.expr(
-                    "transform(split(gram, ' '), x -> xxhash64(x))"
-                ).alias("_hs")
-            ).select(F.expr(_gramhash_sql("_hs", "1", n)).alias("gh")).collect()
-        ]
     inscan_max = 65536
-    all_pos = (
-        f"slice(sequence(1, greatest(size({t}) - {n} + 1, 1)), "
-        f"1, greatest(size({t}) - {n} + 1, 0))"
-    )
+    all_pos = gram_starts(t, n)
     if len(cand_hashes) <= inscan_max:
         hset = ", ".join(str(h) for h in cand_hashes) or "0"
         pos_expr = f"filter({all_pos}, i -> ({gh}) IN ({hset}))"
@@ -370,10 +338,10 @@ def gather_windows(
         # enumerate all positions and shuffle-join on gram (AQE handles skew)
         pos_expr, build = all_pos, cands
     occ = (
-        docs.selectExpr(doc_col, t, f"transform({t}, x -> xxhash64(x)) AS _hs")
-        .selectExpr(doc_col, t, "_hs", f"explode({pos_expr}) AS ipos")
+        docs.selectExpr("doc_id", t, f"transform({t}, x -> xxhash64(x)) AS _hs")
+        .selectExpr("doc_id", t, "_hs", f"explode({pos_expr}) AS ipos")
         .selectExpr(
-            doc_col, t, "_hs", "ipos", "ipos - 1 AS pos",
+            "doc_id", t, "_hs", "ipos", "ipos - 1 AS pos",
             f"array_join(slice({t}, ipos, {n}), ' ') AS gram",
         )
         .join(build, "gram")
@@ -389,48 +357,38 @@ def gather_windows(
         m = 1 << 20
         occ = occ.filter(
             F.expr(
-                f"pmod(xxhash64({doc_col}), {m}) * support "
+                f"pmod(xxhash64(doc_id), {m}) * support "
                 f"< cast({max_occs_per_gram} AS bigint) * {m}"
             )
         )
-    if hashed:
-        # distributed payload: FLAT COLUMNS, no arrays - c<i> = rolling
-        # prefix hash of window[0..i) (fold of the per-token hashes), s<i> =
-        # window token i itself.  Each expansion depth reads c_d, c_d+1 and
-        # s_d+1 from the columnar cache, and the final-occurrence flag reads
-        # c_flen only: column pruning that array columns cannot give
-        # (measured ~8x slower to re-read).
-        chain_arr = (
-            f"aggregate(slice(_hs, ipos, {window}), "
-            f"array(cast(0 AS bigint)), "
-            f"(acc, h) -> array_append(acc, xxhash64(element_at(acc, -1), h)), "
-            f"acc -> slice(acc, 2, {window}))"
-        )
-        # string expressions: one selectExpr parses them all in one call
-        return occ.selectExpr(
-            "cid",
-            # 64-bit doc hash: the edge aggregation only needs doc IDENTITY
-            # for distinct counts - comparing/shuffling longs, not id strings
-            f"xxhash64({doc_col}) AS doc_h",
-            f"CAST({doc_col} AS STRING) AS doc_id",
-            "pos",
-            "IF(pos > 0, element_at(_hs, pos), NULL) AS prev_h",
-            f"{chain_arr} AS _chain",
-            t,
-            "ipos",
-        ).selectExpr(
-            "cid", "doc_h", "doc_id", "pos", "prev_h",
-            *(f"try_element_at(_chain, {i}) AS c{i}" for i in range(1, window + 1)),
-            *(f"try_element_at({t}, ipos + {i} - 1) AS s{i}" for i in range(1, window + 1)),
-        )
-    return occ.select(
-        "gram",
-        "support",
-        F.col(doc_col).cast("string").alias("doc_id"),
+    # FLAT COLUMNS, no arrays: each expansion depth reads c_d, c_d+1 and
+    # s_d+1 from the columnar cache, the final-occurrence flag reads c_flen
+    # only, and the driver strategy's select prunes the c columns away:
+    # column pruning that array columns cannot give (measured ~8x slower to
+    # re-read).  c<i> is the fold of the per-token hashes.
+    chain_arr = (
+        f"aggregate(slice(_hs, ipos, {window}), "
+        f"array(cast(0 AS bigint)), "
+        f"(acc, h) -> array_append(acc, xxhash64(element_at(acc, -1), h)), "
+        f"acc -> slice(acc, 2, {window}))"
+    )
+    # string expressions: one selectExpr parses them all in one call
+    return occ.selectExpr(
+        "cid",
+        # 64-bit doc hash: the edge aggregation only needs doc IDENTITY
+        # for distinct counts - comparing/shuffling longs, not id strings
+        "xxhash64(doc_id) AS doc_h",
+        "CAST(doc_id AS STRING) AS doc_id",
         "pos",
-        # pos is 0-based; element_at is 1-based, so index `pos` IS pos-1.
-        F.when(F.col("pos") > 0, F.expr(f"element_at({t}, pos)")).alias("prev"),
-        F.expr(f"slice({t}, pos + 1, {window})").alias("window"),
+        # pos is 0-based; element_at is 1-based, so index `pos` IS pos-1
+        "IF(pos > 0, element_at(_hs, pos), NULL) AS prev_h",
+        f"{chain_arr} AS _chain",
+        t,
+        "ipos",
+    ).selectExpr(
+        "cid", "doc_h", "doc_id", "pos", "prev_h",
+        *(f"try_element_at(_chain, {i}) AS c{i}" for i in range(1, window + 1)),
+        *(f"try_element_at({t}, ipos + {i} - 1) AS s{i}" for i in range(1, window + 1)),
     )
 
 
@@ -491,44 +449,48 @@ class _PhaseClock:
         self._t = now
 
 
+#: strategy="auto" picks the driver strategy below this many candidate
+#: occurrences (lower-bounded by the summed seed supports)
+AUTO_DRIVER_OCCS = 150_000
+
+
 def mine(
     spark: SparkSession,
     docs: DataFrame,
     min_docs: int,
     ngrams: int,
     min_l: int | None = None,
-    doc_col: str = "doc_id",
-    tokens_col: str = "tokens",
     window: int = 16,
     max_occs_per_gram: int | None | str = "auto",
     strategy: str = "auto",
-    auto_threshold: int = 150_000,
     word_gate_max: int = 2048,
     stats: dict | None = None,
 ) -> list[WCandidate]:
-    """Run the full miner; returns the final phrase list (driver-side, small).
+    """Run the full miner over docs(doc_id, tokens); returns the final
+    phrase list (driver-side, small).
 
     Job plan (module docstring): one word-gate collect, one candidate
-    collect, then per window size the strategy's actions.
+    collect, then per window size one gather of the flat occurrence layout
+    and the strategy's actions over it.
     strategy='distributed': greedy expansion runs as ONE path-tree edge
     aggregation over cluster-resident occurrence windows (all depths counted
     together; sub-threshold edges never leave the cluster; each edge carries
     its token string), then the driver replays the greedy walk over the
     frequent edges and the sequential occupancy-mask selection over integer
     (gram, doc, pos) tuples from one Arrow transfer.
-    strategy='driver': collect the windows and run the whole kernel
-    driver-side (exact same outputs; giant collect dominates on large
-    corpora).  'auto' (default) picks by total candidate-occurrence count
-    (< auto_threshold -> driver).  All retry with doubled W if a phrase
-    outgrows the gathered windows.
+    strategy='driver': one Arrow transfer of the windows, and the whole
+    kernel runs driver-side (exact same outputs; the transfer dominates on
+    large corpora).  'auto' (default) picks by total candidate-occurrence
+    count (< AUTO_DRIVER_OCCS -> driver).  Both retry with doubled W if a
+    phrase outgrows the gathered windows.
 
-    The word gate is ONE bounded collect: the frequent-word aggregate
-    grouped by the 64-bit words of the packed Bloom bitmap (see
-    _bitmap_words).  A frequent-word set of at most word_gate_max words
-    gates through a literal hash IN-set built from the hashes it carries;
-    a larger one through the broadcast bitmap - never a full word collect.
-    Candidate ids are assigned driver-side in gram order after the
-    candidate collect.  Every cache is released on every exit path.
+    The word gate is ONE bounded collect (`_bitmap_words`): the
+    frequent-word aggregate grouped by the 64-bit words of the packed Bloom
+    bitmap.  `word_gate` turns it into a literal hash IN-set for a
+    frequent-word set of at most word_gate_max words, and into the broadcast
+    bitmap for a larger one - never a full word collect.  Candidate ids are
+    assigned driver-side in gram order after the candidate collect.  Every
+    cache is released on every exit path.
 
     `stats` (optional dict) receives the M5 mining-statistics table
     (bloom_gram_miner.cpp:447-454,710-718): seed totals, accepted/rejected,
@@ -542,58 +504,28 @@ def mine(
     # array<string> are ~8x slower than recomputing split()+explode from the
     # (codegen-friendly) source scan - measured on this corpus shape.  Cache
     # the STRING form upstream instead (extraction does), never token arrays.
-    docs = docs.select(doc_col, tokens_col)
-    from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
+    docs = docs.select("doc_id", "tokens")
 
     clock = _PhaseClock()
     with _own_job_group(spark, stats, clock):
-        fw_df = (
-            word_doc_freq(docs, doc_col, tokens_col)
-            .filter(F.col("df") >= min_docs)
-            .select("word")
-        )
-        probe = _bitmap_words(fw_df, BITMAP_BITS_DEFAULT).collect()
-        n_words = sum(r["n"] for r in probe)
-        hashes = sorted(h for r in probe for h in r["hs"])
-        fw = bitmap_df = None
-        if n_words <= word_gate_max and len(hashes) == n_words:
-            fw = [{"h": h} for h in hashes]
-        else:
-            bitmap_df = _pack_bitmap(spark, probe, BITMAP_BITS_DEFAULT)
+        probe = _bitmap_words(docs, min_docs).collect()
+        gate = word_gate(spark, probe, word_gate_max)
         clock.lap("words")
 
-        cands = candidate_grams(
-            docs, ngrams, min_docs, doc_col, tokens_col,
-            word_gate_max=word_gate_max, fw=fw, bitmap_df=bitmap_df, stats=stats,
-        )
+        cands, seeds = candidate_grams(docs, ngrams, min_docs, gate)
         # one tiny collect serves strategy choice, candidate ids, seed
-        # supports, the rolling seed hash (the chain value of the gram
-        # itself) and the in-scan gather hash
-        try:
-            cand_rows = (
-                cands.select(
-                    "gram", "support",
-                    F.expr("transform(split(gram, ' '), x -> xxhash64(x))").alias("_hs"),
-                )
-                .select(
-                    "gram", "support",
-                    F.expr(
-                        "aggregate(_hs, cast(0 AS bigint), (acc, h) -> xxhash64(acc, h))"
-                    ).alias("h0"),
-                    F.expr(_gramhash_sql("_hs", "1", ngrams)).alias("gh"),
-                )
-                .collect()
+        # supports, the rolling seed hash and the in-scan gather hash
+        cand_rows = _with_seed_hashes(cands, ngrams).collect()
+        if stats is not None:
+            seed_row = seeds.get  # the collect above ran the observed plan
+            total, acc = int(seed_row["total"] or 0), int(seed_row["acc"] or 0)
+            stats.update(
+                seeds_total=total,
+                seeds_accepted=acc,
+                seeds_rejected=total - acc,
+                pct_reduction=round(100.0 * (total - acc) / total, 2) if total else 0.0,
             )
-        except Exception:
-            # the observed plan never ran: drop the live Observation so
-            # the caller's stats dict stays JSON-serializable and no
-            # later harvest_seed_stats blocks forever on obs.get
-            if stats is not None:
-                stats.pop("_seed_obs", None)
-            raise
-        harvest_seed_stats(stats)  # the collect above ran the observed plan
-        # (cid, gram, support, h0, gh); cid = rank in gram order
-        cand_rows = [(cid, *r) for cid, r in enumerate(sorted(cand_rows), start=1)]
+        cand_rows, cands = _number_candidates(spark, cand_rows)
         clock.lap("candidates")
         if stats is not None:
             stats.setdefault("candidates_after_merge", len(cand_rows))
@@ -601,13 +533,12 @@ def mine(
             if stats is not None:
                 stats.update(phrases_total=0, phrases_6plus=0)
             return []
-        cands = _driver_frame(spark, [r[:3] for r in cand_rows], _CANDS_SCHEMA)
         cand_hashes = [r[4] for r in cand_rows]
         if strategy == "auto":
             # support (distinct docs) lower-bounds occurrences; good
             # enough to pick the execution strategy
             total_occs = sum(r[2] for r in cand_rows)
-            strategy = "driver" if total_occs < auto_threshold else "distributed"
+            strategy = "driver" if total_occs < AUTO_DRIVER_OCCS else "distributed"
         if max_occs_per_gram == "auto":
             max_occs_per_gram = AUTO_MAX_OCCS if strategy == "distributed" else None
         if stats is not None:
@@ -619,9 +550,7 @@ def mine(
         while True:
             try:
                 gathered = gather_windows(
-                    docs, cands, ngrams, window, doc_col, tokens_col,
-                    max_occs_per_gram, hashed=strategy == "distributed",
-                    cand_hashes=cand_hashes,
+                    docs, cands, cand_hashes, ngrams, window, max_occs_per_gram
                 )
                 if strategy == "distributed":
                     out = _mine_distributed(
@@ -630,7 +559,9 @@ def mine(
                         clock=clock,
                     )
                 else:
-                    out = _mine_driver(gathered, min_docs, min_l, window, stats=stats)
+                    out = _mine_driver(
+                        gathered, cand_rows, min_docs, min_l, window, stats=stats
+                    )
                     clock.lap("expand")
                 if stats is not None:
                     stats.update(
@@ -643,25 +574,38 @@ def mine(
 
 
 def _mine_driver(
-    gathered: DataFrame, min_docs: int, min_l: int, window: int,
+    gathered: DataFrame, cand_rows: list, min_docs: int, min_l: int, window: int,
     stats: dict | None = None,
 ) -> list[WCandidate]:
-    """Collect the windows and run the exact sequential kernel driver-side."""
-    rows = gathered.select("gram", "support", "doc_id", "pos", "prev", "window").collect()
-    by_gram: dict[str, WCandidate] = {}
-    occ_sort: dict[str, list] = defaultdict(list)
-    for r in rows:
-        if r["gram"] not in by_gram:
-            by_gram[r["gram"]] = WCandidate(r["gram"].split(" "), r["support"], [])
-        occ_sort[r["gram"]].append(
-            (r["doc_id"], r["pos"], WOcc(r["doc_id"], r["pos"], r["prev"], r["window"]))
-        )
-    for gram, lst in occ_sort.items():
-        lst.sort(key=lambda x: (x[0], x[1]))  # canonical occ order
-        by_gram[gram].occs = [x[2] for x in lst]
-    return expand_windowed(
-        list(by_gram.values()), min_docs, min_l, window=window, stats=stats
+    """Transfer the windows in one Arrow batch and run the exact sequential
+    kernel driver-side.  `cand_rows`: (cid, gram, support, h0, gh) per
+    candidate; only candidates with gathered occurrences enter the kernel.
+    Examples are the first 2 of each phrase's sorted final-occurrence docs,
+    as on the distributed strategy."""
+    s_cols = [f"s{i}" for i in range(1, window + 1)]
+    rows = gathered.select("cid", "doc_id", "pos", "prev_h", *s_cols).toArrow()
+    # integers through to_pylist: the nullable BIGINT prev_h stays an exact
+    # int, where numpy or pandas would make it float64; strings through
+    # numpy, ~20x faster than to_pylist
+    ints = zip(*(rows.column(c).to_pylist() for c in ("cid", "pos", "prev_h")))
+    doc_ids, *s_vals = (
+        rows.column(c).to_numpy(zero_copy_only=False) for c in ("doc_id", *s_cols)
     )
+    gram_support = {cid: (gram, support) for cid, gram, support, _, _ in cand_rows}
+    occs: dict[int, list[WOcc]] = defaultdict(list)
+    for (cid, pos, prev), doc, win in zip(ints, doc_ids, zip(*s_vals)):
+        # the s<i> past the doc's end are NULL padding
+        end = win.index(None) if None in win else window
+        occs[cid].append(WOcc(doc, pos, prev, list(win[:end])))
+    cands = []
+    for cid, lst in occs.items():
+        lst.sort(key=lambda o: (o.doc_id, o.pos))  # canonical occ order
+        gram, support = gram_support[cid]
+        cands.append(WCandidate(gram.split(" "), support, lst))
+    out = expand_windowed(cands, min_docs, min_l, window=window, stats=stats)
+    for p in out:
+        p.examples = sorted({o.doc_id for o in p.occs})[:2]
+    return out
 
 
 def _mine_distributed(
@@ -940,16 +884,11 @@ def _mine_distributed(
 
 def phrases_to_df(spark: SparkSession, phrases: list[WCandidate]) -> DataFrame:
     """Canonical result DataFrame (deterministic projection of the CSV sink,
-    corpus_miner.cpp:529-561): example_docs = first 2 of the sorted unique doc
+    corpus_miner.cpp:529-561): example_docs = each phrase's `examples`, which
+    `mine` sets on both strategies to the first 2 of the sorted unique doc
     set (deviation: reference uses hash-set order).  A local relation (see
     _driver_frame), rows in the sorted order."""
-    data = []
-    for p in phrases:
-        if p.examples is not None:
-            ex = list(p.examples)[:2]
-        else:
-            ex = sorted({str(o.doc_id) for o in p.occs})[:2]
-        data.append((p.text, p.support, len(p.tokens), ex))
+    data = [(p.text, p.support, len(p.tokens), list(p.examples)[:2]) for p in phrases]
     data.sort(key=lambda r: (-r[1] * r[2], -r[1], r[0]))
     return _driver_frame(spark, data, RESULT_SCHEMA)
 
@@ -988,8 +927,7 @@ def greedy_phrase_expansion(
 
     def gram_support(length: int) -> DataFrame:
         g = (
-            f"array_distinct(transform(slice(sequence(1, greatest(size({t}) - {length} + 1, 1)), "
-            f"1, greatest(size({t}) - {length} + 1, 0)), "
+            f"array_distinct(transform({gram_starts(t, length)}, "
             f"i -> array_join(slice({t}, i, {length}), ' ')))"
         )
         return (

@@ -23,7 +23,7 @@ frequent phrase):
     the extension contains one of the prefix), so level k+1 enumerates ONLY
     windows whose leading k-gram hash survives level k.  The surviving hash
     set is packed driver-side into a Bloom bitmap (one array<bigint> row,
-    broadcast - same machinery as bloomspan.packed_word_bitmap) and each
+    broadcast - same machinery as bloomspan.word_gate's bitmap) and each
     window position pays ONE hash-combine + ONE bit probe.  Round 3 used a
     literal 64-bit IN-set here; literal IN-lists are LINEAR SCANS in codegen
     (O(survivors) per position - measured 2.1x slower than ungated at sf0.1

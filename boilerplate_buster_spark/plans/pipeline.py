@@ -83,8 +83,8 @@ class CheckpointStore:
         os.rename(tmp, os.path.join(d, f"snap-{new['snapshot_id']:08d}.json"))
 
     # -- table io ----------------------------------------------------------
-    def table_path(self, name: str, snapshot_suffix: str = "") -> str:
-        return os.path.join(self.root, name + snapshot_suffix)
+    def table_path(self, name: str) -> str:
+        return os.path.join(self.root, name)
 
     def write_table(self, df: DataFrame, name: str) -> str:
         path = self.table_path(name)
@@ -160,8 +160,8 @@ class IcebergCheckpointStore:
         )
         row.writeTo(self._q("snapshots")).append()
 
-    def table_path(self, name: str, snapshot_suffix: str = "") -> str:
-        return self._q(name + snapshot_suffix)
+    def table_path(self, name: str) -> str:
+        return self._q(name)
 
     def write_table(self, df: DataFrame, name: str) -> str:
         df.writeTo(self._q(name)).createOrReplace()

@@ -6,7 +6,7 @@ from __future__ import annotations
 import random
 
 from boilerplate_buster_spark.core import pyref
-from boilerplate_buster_spark.core.expand import WCandidate, WOcc
+from boilerplate_buster_spark.core.expand import WCandidate
 from boilerplate_buster_spark.core.tokenize import tokenize
 from boilerplate_buster_spark.functions.tokenizer import tokens
 from boilerplate_buster_spark.operators import bloomspan
@@ -24,7 +24,7 @@ def corpus_df(spark, corpus_name):
 def test_phrases_to_df_is_a_local_relation_equal_to_row_list(spark):
     phrases = [
         WCandidate(["a", "b"], 5, examples=["d3", "d1"]),
-        WCandidate(["x", "y", "z"], 3, occs=[WOcc(i, 0, None, []) for i in (9, 2, 2, 4)]),
+        WCandidate(["x", "y", "z"], 3, examples=["2", "4", "9"]),
         WCandidate(["b", "a"], 5, examples=[]),
         WCandidate(["q", "r", "s", "t"], 1, examples=["d0"]),
     ]
@@ -42,6 +42,8 @@ def test_phrases_to_df_is_a_local_relation_equal_to_row_list(spark):
     assert plan.getClass().getSimpleName() == "LocalRelation"
     empty = bloomspan.phrases_to_df(spark, [])
     assert empty.schema == bloomspan.RESULT_SCHEMA and empty.collect() == []
+    plan = empty._jdf.queryExecution().analyzed()
+    assert plan.getClass().getSimpleName() == "LocalRelation"
 
 
 def test_spark_bloomspan_test1(spark):

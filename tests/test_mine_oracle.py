@@ -7,7 +7,9 @@ Every corpus is generated in plain Python.  On each one the mined rows
   * ``mine(strategy="driver")`` and ``mine(strategy="distributed")``;
   * the literal hash IN-set word gate and the packed-bitmap word gate (the
     bitmap is forced by a ``word_gate_max`` below the frequent vocabulary);
-  * ``max_occs_per_gram=None`` and a cap above every support.
+  * ``max_occs_per_gram=None`` and a cap above every support;
+  * the driver strategy at ``window=4``, shorter than the longest phrase,
+    so it re-gathers at a doubled window.
 
 Corpora: small-vocabulary random texts, which produce support ties in the
 seed order and in the greedy expansion, and site/template corpora shaped
@@ -109,6 +111,11 @@ def test_miners_agree_with_pyref(spark, name):
             strategy="distributed", max_occs_per_gram=len(docs)),
         "driver-bitmap-gate": dict(
             strategy="driver", max_occs_per_gram=None, word_gate_max=1),
+        # a window shorter than the longest phrase: WindowExhausted, then a
+        # re-gather at 8 (and 16), whose windows end NULL-padded past a
+        # doc's end
+        "driver-window-retry": dict(
+            strategy="driver", max_occs_per_gram=None, window=4),
     }
     for label, extra in runs.items():
         got = _mined_rows(spark, df, **kw, **extra)

@@ -15,7 +15,6 @@ with supports equal to the documented rescaled-estimate surface.
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from boilerplate_buster_spark.operators import bloomspan
 
@@ -43,22 +42,20 @@ def corpus(spark):
 def test_cap_binds_on_the_gathered_rows(spark, corpus):
     """Direct branch assertion: the per-gram doc-sampling filter drops
     rows on this corpus (not just 'the flag was set')."""
-    from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
-
-    fw_rows = (
-        word_doc_freq(corpus)
-        .filter(F.col("df") >= MIN_DOCS)
-        .select("word", F.xxhash64("word").alias("h"))
-        .collect()
+    # the word gate, candidate collect and numbering `mine` runs
+    gate = bloomspan.word_gate(
+        spark, bloomspan._bitmap_words(corpus, MIN_DOCS).collect(), 2048
     )
-    cands = bloomspan.candidate_grams(
-        corpus, 3, MIN_DOCS, "doc_id", "tokens", fw=fw_rows
-    ).withColumn("cid", F.expr("row_number() OVER (ORDER BY gram)"))
+    grams, _ = bloomspan.candidate_grams(corpus, 3, MIN_DOCS, gate)
+    cand_rows, cands = bloomspan._number_candidates(
+        spark, bloomspan._with_seed_hashes(grams, 3).collect()
+    )
+    hashes = [r[4] for r in cand_rows]
     uncapped = bloomspan.gather_windows(
-        corpus, cands, 3, 16, "doc_id", "tokens", max_occs_per_gram=None
+        corpus, cands, hashes, 3, 16, max_occs_per_gram=None
     ).count()
     capped = bloomspan.gather_windows(
-        corpus, cands, 3, 16, "doc_id", "tokens", max_occs_per_gram=CAP
+        corpus, cands, hashes, 3, 16, max_occs_per_gram=CAP
     ).count()
     assert capped < uncapped, (
         f"cap={CAP} did not drop any of the {uncapped} gathered occurrence "

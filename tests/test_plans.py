@@ -11,8 +11,7 @@ import io
 
 from pyspark.sql import functions as F
 
-from boilerplate_buster_spark.operators import corpus_stats
-from boilerplate_buster_spark.operators.bloomspan import candidate_grams
+from boilerplate_buster_spark.operators import bloomspan, corpus_stats
 
 
 def explain_str(df, mode="formatted") -> str:
@@ -46,10 +45,17 @@ def test_ngram_df_dedups_before_shuffle(spark):
     assert plan.count("HashAggregate") >= 2
 
 
+def _word_gate(spark, docs, min_docs, word_gate_max):
+    """The gate `mine` builds, from the same word-gate collect."""
+    probe = bloomspan._bitmap_words(docs, min_docs).collect()
+    return bloomspan.word_gate(spark, probe, word_gate_max)
+
+
 def test_candidate_grams_dedup_and_gate_before_shuffle(spark):
-    plan = explain_str(
-        candidate_grams(toy_docs(spark), 2, 1, "doc_id", "tokens"), mode="simple"
-    )
+    docs = toy_docs(spark)
+    gate = _word_gate(spark, docs, 1, 2048)
+    assert isinstance(gate, list)  # the literal hash IN-set
+    plan = explain_str(bloomspan.candidate_grams(docs, 2, 1, gate)[0], mode="simple")
     # distinct-doc support WITHOUT a distinct-aggregate rewrite: per-doc
     # array_distinct collapses repeats map-side, the agg is a plain count
     # with partial aggregation before the exchange
@@ -125,15 +131,9 @@ def test_strip_pass_from_raw_pages_is_one_map(spark):
 
 
 def test_word_bitmap_gate_stays_jvm_side(spark):
-    from boilerplate_buster_spark.operators import bloomspan
-
     docs = toy_docs(spark)
-    fw = spark.createDataFrame([("a",), ("b",), ("c",), ("d",)], ["word"])
-    bm = bloomspan.packed_word_bitmap(spark, fw, bits=1 << 12)
-    plan = explain_str(
-        bloomspan.candidate_grams(docs, 2, 1, "doc_id", "tokens", bitmap_df=bm),
-        mode="simple",
-    )
+    bm = _word_gate(spark, docs, 1, 0)  # 4 frequent words > 0: the bitmap
+    plan = explain_str(bloomspan.candidate_grams(docs, 2, 1, bm)[0], mode="simple")
     # broadcast the 1-row bitmap; probes are shift/and expressions in the
     # scan projection - no Python, no shuffle before the gram aggregate
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan

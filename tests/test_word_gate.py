@@ -54,8 +54,12 @@ def test_bitmap_gate_path_equals_dict_gate_path(spark):
 def test_packed_bitmap_has_no_false_negatives(spark):
     words = [f"q{i}" for i in range(3000)]
     fw_df = spark.createDataFrame([(w,) for w in words], "word string")
-    bm = bloomspan.packed_word_bitmap(spark, fw_df, bits=1 << 18)
-    probe = bloomspan._bitmap_probe("x", bits=1 << 18)
+    docs = spark.createDataFrame(
+        list(enumerate([w] for w in words)), "doc_id long, tokens array<string>"
+    )
+    # the word-gate collect and gate `mine` runs; 3000 words > 2048: bitmap
+    bm = bloomspan.word_gate(spark, bloomspan._bitmap_words(docs, 1).collect(), 2048)
+    probe = bloomspan._bitmap_probe("x")
     out = (
         fw_df.crossJoin(F.broadcast(bm))
         .select(F.expr(f"transform(array(word), x -> {probe})[0]").alias("ok"))
