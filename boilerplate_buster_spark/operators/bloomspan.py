@@ -16,17 +16,19 @@ one Spark action per step, and one code path per step for both strategies:
        post-threshold set is corpus-statistics bounded: boilerplate
        TEMPLATES, not corpus rows]
     -> occurrence gather: in-scan hash IN-set filter over the
-       corpus, ONE flat layout (cid, doc_h, doc_id, pos,
-       prev_h, c1..cW, s1..sW) that both strategies read     [NO shuffle]
+       corpus, ONE flat layout (cid, doc_id, pos, prev_h,
+       c1..cW, s1..sW) that both strategies read             [NO shuffle]
   strategy='distributed':
     -> greedy expansion: ONE path-tree edge aggregation over
-       all depths, keyed by the next token's string,
-       HAVING sup >= min_docs before collect; it also fills
-       the cache of the gathered table                       [shuffles #4-5]
-    -> occurrence transfer: ONE Arrow toPandas of per-occurrence
-       (cid, doc, pos, prev hash, is_final) from the cache
+       all depths (path_edges): each doc row builds and
+       dedups its own edges from the same in-scan filter,
+       then count(*) keyed by the next token's string,
+       HAVING sup >= min_docs before collect                  [shuffle #4]
+    -> occurrence transfer: ONE Arrow transfer of per-occurrence
+       (cid, doc, pos, prev hash, is_final) from the gather
     -> sequential selection: score order + occupancy bitmask
        + backward closure on (cid, doc, pos) integer tuples   [driver, numpy]
+    (no cache: the edge scan and the transfer each read the corpus)
   strategy='driver':
     -> ONE Arrow transfer of (cid, doc_id, pos, prev_h, s1..sW), then the
        exact sequential kernel (core/expand.py) on the driver
@@ -42,8 +44,9 @@ table (bounded by boilerplate path structure) plus one integer row per
 occurrence OF A SURVIVING CANDIDATE.  At web scale the occurrence lists of
 head phrases grow with the corpus, so ``max_occs_per_gram`` (default "auto"
 -> AUTO_MAX_OCCS on the distributed path) caps the gathered postings per
-gram (deterministic xxhash64 DOC sampling at rate cap/support) while the
-EXACT seed df keeps coming from the candidate aggregate.  When the cap
+gram (deterministic xxhash64 DOC sampling at rate cap/support, the same
+doc subsample in the edge scan and the gather) while the EXACT seed df
+keeps coming from the candidate aggregate.  When the cap
 BINDS (support > cap): expansion-edge supports are subsample counts, so the
 frequency threshold scales to the unbiased estimate
 (sup * support / cap >= min_docs) and reported expansion supports are
@@ -109,12 +112,6 @@ def _driver_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) 
     return spark.createDataFrame(
         pa.table(dict(zip(schema.names, cols)), schema=to_arrow_schema(schema))
     )
-
-
-def _by_cid(values: list[int]) -> str:
-    """SQL expression: values[cid - 1] for the dense candidate ids 1..N,
-    from a literal BIGINT array - a per-candidate lookup with no join."""
-    return f"element_at(array({', '.join(f'{v}L' for v in values)}), cid)"
 
 
 def _gramhash_sql(hs_ref: str, i: str, n: int) -> str:
@@ -292,6 +289,111 @@ def _number_candidates(spark: SparkSession, rows: list) -> tuple[list[tuple], Da
     return cand_rows, _driver_frame(spark, [r[:3] for r in cand_rows], _CANDS_SCHEMA)
 
 
+#: candidate sets up to this size are found by a literal hash IN-set in the
+#: doc scan; a larger one would hit the plan-size limit
+_INSCAN_MAX = 65536
+
+
+def _gather_positions(cand_hashes: list[int], n: int) -> str:
+    """SQL: the 1-based gram starts of `tokens` whose in-scan gather hash
+    (``_gramhash_sql`` over the per-token hashes `_hs`) is a candidate's -
+    the one occurrence filter of gather_windows and path_edges.  Per-token
+    hashes are computed once per doc and compared as longs (string IN-lists
+    are linear scans in codegen; long compares are ~free).  Hash false
+    positives only ADD positions.  Above _INSCAN_MAX candidates: every
+    gram start."""
+    all_pos = gram_starts("tokens", n)
+    if len(cand_hashes) > _INSCAN_MAX:
+        return all_pos
+    hset = ", ".join(str(h) for h in cand_hashes) or "0"
+    return f"filter({all_pos}, i -> ({_gramhash_sql('_hs', 'i', n)}) IN ({hset}))"
+
+
+def _doc_sample_sql(support: str, cap: int) -> str:
+    """SQL predicate: keep a doc's occurrences of a gram of `support`
+    distinct docs iff hash_frac(doc_id) < cap/support - deterministic
+    per-gram DOC sampling, so every scan that applies it (gather_windows,
+    path_edges) sees one doc subsample.  Expected docs kept per gram ~ cap;
+    a gram at or under the cap (or `support` 0) keeps everything.  A pure
+    in-scan filter: a row_number() window partitioned by gram is a skew
+    hotspot (few keys, corpus-sized partitions) exactly when the cap binds."""
+    m = 1 << 20
+    return f"pmod(xxhash64(doc_id), {m}) * {support} < cast({cap} AS bigint) * {m}"
+
+
+def _chain_sql(hs_ref: str, i: str, window: int) -> str:
+    """SQL: [0, c1, .., cL] for the occurrence starting at token i (1-based)
+    - c<k> is the rolling prefix hash of the k tokens from i (the fold of
+    their xxhash64 values), L = min(window, tokens left from i)."""
+    return (
+        f"aggregate(slice({hs_ref}, {i}, {window}), array(cast(0 AS bigint)), "
+        f"(acc, h) -> array_append(acc, xxhash64(element_at(acc, -1), h)))"
+    )
+
+
+def path_edges(
+    docs: DataFrame,
+    cand_rows: list,
+    n: int,
+    window: int,
+    max_occs_per_gram: int | None,
+    min_sup: int,
+) -> DataFrame:
+    """(seed, d, nxt, tok, sup, cur): the path-tree edges of every candidate
+    gram's occurrences, counted over distinct docs, HAVING sup >= min_sup.
+
+    An edge is one step of a greedy walk: from the length-d path prefix with
+    rolling hash cur = c_d to the length-(d+1) prefix nxt = c_{d+1}, whose
+    last token is tok, for d = n .. window-1; seed = c_n is the candidate's
+    seed chain hash (h0 of its `_with_seed_hashes` row).
+
+    ONE exchange.  Each doc row builds its own edges before any explode:
+    its positions that pass the gather filter (`_gather_positions` over
+    `cand_rows`' gather hashes), the window chain of each, and
+    the capped grams' doc sample (`_doc_sample_sql`).  nxt hashes the whole
+    path, so it fixes the edge: sorting the row's edges by nxt and dropping
+    adjacent repeats leaves each edge once per doc, and a plain count(*) is
+    the distinct-doc support.  Gather-hash false positives carry a seed
+    hash that no candidate has; the caller drops those edges."""
+    t = "tokens"
+    occs = (
+        f"transform({_gather_positions([r[4] for r in cand_rows], n)}, "
+        f"i -> named_struct('i', i, 'ch', {_chain_sql('_hs', 'i', window)}))"
+    )
+    capped = [
+        (r[3], r[2]) for r in cand_rows
+        if max_occs_per_gram is not None and r[2] > max_occs_per_gram
+    ]
+    if capped:
+        # the capped grams' supports by seed hash; every other gram (and a
+        # false positive) reads 0 and keeps all its docs
+        sup_map = ", ".join(f"{h}L, {s}L" for h, s in capped)
+        sup = f"coalesce(try_element_at(map({sup_map}), element_at(o.ch, {n + 1})), 0L)"
+        occs = f"filter({occs}, o -> {_doc_sample_sql(sup, max_occs_per_gram)})"
+    # c_k is element k+1 of a chain; a depth d has an edge while the chain
+    # holds c_{d+1}
+    edges = (
+        f"flatten(transform({occs}, o -> transform("
+        f"filter(sequence({n}, {window - 1}), d -> d + 2 <= size(o.ch)), "
+        f"d -> named_struct('nxt', element_at(o.ch, d + 2), "
+        f"'seed', element_at(o.ch, {n + 1}), 'd', d, "
+        f"'cur', element_at(o.ch, d + 1), 'tok', element_at({t}, o.i + d)))))"
+    )
+    return (
+        docs.selectExpr("doc_id", t, f"transform({t}, x -> xxhash64(x)) AS _hs")
+        .selectExpr(f"array_sort({edges}) AS _e")
+        .selectExpr(
+            "explode(filter(_e, (e, k) -> k = 0 OR e.nxt != element_at(_e, k).nxt)) AS e"
+        )
+        # the token is part of the key (nxt already fixes it, so the
+        # groups are the same): a string key keeps the aggregate a hash
+        # aggregate, where first(tok) would fall back to a sort
+        .groupBy("e.seed", "e.d", "e.nxt", "e.tok")
+        .agg(F.count("*").alias("sup"), F.first("e.cur").alias("cur"))
+        .filter(F.col("sup") >= min_sup)
+    )
+
+
 def gather_windows(
     docs: DataFrame,
     cands: DataFrame,
@@ -301,7 +403,7 @@ def gather_windows(
     max_occs_per_gram: int | None = None,
 ) -> DataFrame:
     """Per-occurrence windows for every candidate gram, in the one flat
-    layout both strategies read: (cid, doc_h, doc_id, pos, prev_h, c1..cW,
+    layout both strategies read: (cid, doc_id, pos, prev_h, c1..cW,
     s1..sW).
 
     `cands` is the (cid, gram, support) frame and `cand_hashes` the in-scan
@@ -310,36 +412,27 @@ def gather_windows(
 
     ZERO shuffles on the main path: the candidate set is corpus-statistics
     small (post-threshold boilerplate templates), so occurrence discovery is
-    a literal IN-set filter INSIDE the doc scan - one codegen pass over the
-    cached corpus, windows sliced in place, then a broadcast map-side join
-    attaches cid/support.  A candidate set above `inscan_max` falls back to
-    the explode + broadcast-join + docs-join plan (two shuffles).
+    a literal IN-set filter INSIDE the doc scan (`_gather_positions`) - one
+    codegen pass over the corpus, windows sliced in place, then a broadcast
+    map-side join attaches cid/support.  A candidate set above _INSCAN_MAX
+    falls back to every position and a shuffle join on gram.
 
     prev_h = xxhash64 of the token before the occurrence, NULL at pos 0
     (backward-closure input, ":675-695"); s<i> = token i of the W-token
     window from the occurrence start, NULL past the doc's end (expansion
-    input); c<i> = rolling prefix hash of window[0..i) (distributed walk).
+    input); c<i> = rolling prefix hash of window[0..i) (the distributed
+    strategy's final-occurrence flag).
     """
     t = "tokens"
-    # occurrence discovery: per-token hashes computed once per doc, then a
-    # long-typed shift-xor gram hash tested against the candidate hash set
-    # INSIDE the scan (string IN-lists are linear scans in codegen; long
-    # compares are ~free).  Hash false positives are removed by the exact
-    # gram-string broadcast join right after.
-    gh = _gramhash_sql("_hs", "i", n)
-    inscan_max = 65536
-    all_pos = gram_starts(t, n)
-    if len(cand_hashes) <= inscan_max:
-        hset = ", ".join(str(h) for h in cand_hashes) or "0"
-        pos_expr = f"filter({all_pos}, i -> ({gh}) IN ({hset}))"
-        build = F.broadcast(cands)  # exact: drops hash false positives
-    else:
-        # huge candidate set (plan-size limit for the literal IN-set):
-        # enumerate all positions and shuffle-join on gram (AQE handles skew)
-        pos_expr, build = all_pos, cands
+    # the exact gram-string join drops the gather filter's hash false
+    # positives; a huge candidate set (every position) shuffle-joins on
+    # gram (AQE handles skew)
+    build = F.broadcast(cands) if len(cand_hashes) <= _INSCAN_MAX else cands
     occ = (
         docs.selectExpr("doc_id", t, f"transform({t}, x -> xxhash64(x)) AS _hs")
-        .selectExpr("doc_id", t, "_hs", f"explode({pos_expr}) AS ipos")
+        .selectExpr(
+            "doc_id", t, "_hs", f"explode({_gather_positions(cand_hashes, n)}) AS ipos"
+        )
         .selectExpr(
             "doc_id", t, "_hs", "ipos", "ipos - 1 AS pos",
             f"array_join(slice({t}, ipos, {n}), ' ') AS gram",
@@ -347,46 +440,25 @@ def gather_windows(
         .join(build, "gram")
     )
     if max_occs_per_gram is not None:
-        # Deterministic per-gram DOC sampling: keep a doc's occurrences of a
-        # gram iff hash_frac(doc) < cap/support, using the EXACT distinct-doc
-        # support from the candidate aggregate (already joined in).  Expected
-        # docs kept per gram ~ cap; grams under the cap keep everything.
-        # Pure in-scan filter - the earlier row_number() window partitioned
-        # by gram was a guaranteed skew hotspot (few keys, corpus-sized
-        # partitions) exactly when the cap binds.
-        m = 1 << 20
-        occ = occ.filter(
-            F.expr(
-                f"pmod(xxhash64(doc_id), {m}) * support "
-                f"< cast({max_occs_per_gram} AS bigint) * {m}"
-            )
-        )
-    # FLAT COLUMNS, no arrays: each expansion depth reads c_d, c_d+1 and
-    # s_d+1 from the columnar cache, the final-occurrence flag reads c_flen
-    # only, and the driver strategy's select prunes the c columns away:
-    # column pruning that array columns cannot give (measured ~8x slower to
-    # re-read).  c<i> is the fold of the per-token hashes.
-    chain_arr = (
-        f"aggregate(slice(_hs, ipos, {window}), "
-        f"array(cast(0 AS bigint)), "
-        f"(acc, h) -> array_append(acc, xxhash64(element_at(acc, -1), h)), "
-        f"acc -> slice(acc, 2, {window}))"
-    )
+        # the EXACT distinct-doc support from the candidate aggregate is
+        # already joined in
+        occ = occ.filter(F.expr(_doc_sample_sql("support", max_occs_per_gram)))
+    # FLAT COLUMNS, no arrays: the final-occurrence flag reads the c
+    # columns of the final lengths only, and the driver strategy's select
+    # prunes the c columns away - column pruning that array columns cannot
+    # give.  c<i> is the fold of the per-token hashes.
     # string expressions: one selectExpr parses them all in one call
     return occ.selectExpr(
         "cid",
-        # 64-bit doc hash: the edge aggregation only needs doc IDENTITY
-        # for distinct counts - comparing/shuffling longs, not id strings
-        "xxhash64(doc_id) AS doc_h",
         "CAST(doc_id AS STRING) AS doc_id",
         "pos",
         # pos is 0-based; element_at is 1-based, so index `pos` IS pos-1
         "IF(pos > 0, element_at(_hs, pos), NULL) AS prev_h",
-        f"{chain_arr} AS _chain",
+        f"slice({_chain_sql('_hs', 'ipos', window)}, 2, {window}) AS _chain",
         t,
         "ipos",
     ).selectExpr(
-        "cid", "doc_h", "doc_id", "pos", "prev_h",
+        "cid", "doc_id", "pos", "prev_h",
         *(f"try_element_at(_chain, {i}) AS c{i}" for i in range(1, window + 1)),
         *(f"try_element_at({t}, ipos + {i} - 1) AS s{i}" for i in range(1, window + 1)),
     )
@@ -473,11 +545,12 @@ def mine(
     collect, then per window size one gather of the flat occurrence layout
     and the strategy's actions over it.
     strategy='distributed': greedy expansion runs as ONE path-tree edge
-    aggregation over cluster-resident occurrence windows (all depths counted
-    together; sub-threshold edges never leave the cluster; each edge carries
-    its token string), then the driver replays the greedy walk over the
-    frequent edges and the sequential occupancy-mask selection over integer
-    (gram, doc, pos) tuples from one Arrow transfer.
+    aggregation with one exchange (path_edges: all depths counted together,
+    each doc's edges deduped in its row; sub-threshold edges never leave the
+    cluster; each edge carries its token string), then the driver replays
+    the greedy walk over the frequent edges and the sequential
+    occupancy-mask selection over integer (gram, doc, pos) tuples from one
+    Arrow transfer of the gather.  Nothing is cached: 4 shuffles in all.
     strategy='driver': one Arrow transfer of the windows, and the whole
     kernel runs driver-side (exact same outputs; the transfer dominates on
     large corpora).  'auto' (default) picks by total candidate-occurrence
@@ -554,7 +627,7 @@ def mine(
                 )
                 if strategy == "distributed":
                     out = _mine_distributed(
-                        spark, gathered, cand_rows, min_docs, min_l, window,
+                        docs, gathered, cand_rows, min_docs, min_l, window,
                         stats=stats, max_occs_per_gram=max_occs_per_gram,
                         clock=clock,
                     )
@@ -609,7 +682,7 @@ def _mine_driver(
 
 
 def _mine_distributed(
-    spark: SparkSession,
+    docs: DataFrame,
     gathered: DataFrame,
     cand_rows: list,
     min_docs: int,
@@ -623,27 +696,24 @@ def _mine_distributed(
     """Distributed greedy expansion + vectorized driver-side mask selection.
 
     `cand_rows`: (cid, gram, support, h0, gh) per candidate.  Two Spark
-    actions, both over the persisted `gathered` table (released on every
-    exit path):
+    actions, neither over a cache:
 
-      edges: stack -> groupBy(cid, d, c_{d+1}, token).agg(countDistinct(doc_h))
-             HAVING sup >= min_docs        <- noise edges die cluster-side;
-             this scan also fills the cache
-      occurrences: one Arrow toPandas of (cid, doc_id, pos, prev_h, is_final)
+      edges: path_edges over `docs` - per-doc deduped path-tree edges,
+             count(*) per (seed, d, c_{d+1}, token) HAVING sup >= the
+             lowest threshold; ONE exchange      <- noise edges die cluster-side
+      occurrences: one Arrow transfer of (cid, doc_id, pos, prev_h,
+             is_final) from `gathered` (the gather_windows plan, recomputed)
 
     Expansion of a candidate never depends on the occupancy bitmask (the mask
     only gates skip-before/mark-after, bloom_gram_miner.cpp:633-640,697-702),
     so all candidates' greedy walks are served by ONE path-tree edge
-    aggregation over the cluster-resident occurrence table.  The table layout
-    is FLAT columns (c<i> = rolling prefix hash of window[0..i), s<i> = the
-    token at window position i); `stack` unpivots each occurrence into its
-    (depth, prefix-hash, next-hash, next-token) edges and one two-level
-    aggregate counts DISTINCT docs per edge.  The token string is part of
-    the grouping key - the prefix hash c_{d+1} already fixes it, so the
-    groups are the same, and a key keeps the aggregate a hash aggregate
-    where a string buffer (first(token)) would fall back to a sort.  The
-    driver walk then follows max-support frequent edges from the seed hash
-    (tie -> smallest token string) with no further jobs and no word lookup.
+    aggregation over all depths.  An edge's prefix hash c_d (cur) and next
+    hash c_{d+1} (nxt) are rolling hashes of the whole path from the
+    occurrence start; each doc row dedups its own edges by nxt, so the count
+    per edge is its distinct-doc support with no distinct-aggregate rewrite.
+    The driver walk then follows max-support frequent edges from the seed
+    hash (tie -> smallest token string) with no further jobs and no word
+    lookup.
 
     Because the prefix hash c_d encodes the ENTIRE path, counting all depths
     together is exact: edges of different prefixes can never merge (modulo
@@ -661,125 +731,108 @@ def _mine_distributed(
     mask bookkeeping."""
     import numpy as np
     import pandas as pd
+    import pyarrow as pa
 
-    gathered = gathered.persist()
-    try:
-        state = {
-            cid: {
-                "gram": gram,
-                "tokens": gram.split(" "),
-                "support": support,
-                "seed_support": support,
-                "h": h0,
-            }
-            for cid, gram, support, h0, _ in cand_rows
+    state = {
+        cid: {
+            "gram": gram,
+            "tokens": gram.split(" "),
+            "support": support,
+            "seed_support": support,
+            "h": h0,
         }
-        n = len(cand_rows[0][1].split(" "))
+        for cid, gram, support, h0, _ in cand_rows
+    }
+    n = len(cand_rows[0][1].split(" "))
 
-        # ---- one-shot path-tree edge aggregation over ALL depths ----
-        # When the per-gram occurrence cap sampled a head gram's docs at rate
-        # cap/support (gather_windows), edge supports are counted over that
-        # subsample - so the frequency threshold is applied to the UNBIASED
-        # estimate sup * support / cap >= min_docs, i.e. the per-cid
-        # threshold DROPS to ceil(min_docs * cap / support) for capped grams.
-        # Comparing sampled supports against the raw min_docs (the round-2
-        # behavior) made a head gram's continuation survive only at
-        # ~support/cap times the intended df - silently truncating greedy
-        # expansion.
-        cap = max_occs_per_gram
-        capped_sup = {
-            cid: support
-            for cid, _, support, _, _ in cand_rows
-            if cap is not None and support > cap
-        }
-        thr_by_cid = {
-            cid: max(1, -(-min_docs * cap // sup)) for cid, sup in capped_sup.items()
-        }
-        stack_args = ", ".join(
-            f"{d}, c{d}, c{d + 1}, s{d + 1}" for d in range(n, window)
-        )
-        agg = (
-            gathered.selectExpr(
-                "cid", "doc_h", f"stack({window - n}, {stack_args}) AS (d, cur, nxt, tok)"
-            )
-            .filter("nxt IS NOT NULL")
-            .groupBy("cid", "d", "nxt", "tok")
-            .agg(
-                F.countDistinct("doc_h").alias("sup"),
-                F.first("cur").alias("cur"),
-            )
-        )
-        if thr_by_cid:
-            agg = agg.filter(
-                F.col("sup") >= F.expr(
-                    _by_cid([thr_by_cid.get(r[0], min_docs) for r in cand_rows])
-                )
-            )
-        else:
-            agg = agg.filter(F.col("sup") >= min_docs)
-        edge_rows = agg.select("cid", "d", "cur", "sup", "tok", "nxt").collect()
-        clock.lap("edges")
+    # ---- one-shot path-tree edge aggregation over ALL depths ----
+    # When the per-gram occurrence cap sampled a head gram's docs at rate
+    # cap/support (_doc_sample_sql), edge supports are counted over that
+    # subsample - so the frequency threshold is applied to the UNBIASED
+    # estimate sup * support / cap >= min_docs, i.e. the per-cid
+    # threshold DROPS to ceil(min_docs * cap / support) for capped grams.
+    # Comparing sampled supports against the raw min_docs (the round-2
+    # behavior) made a head gram's continuation survive only at
+    # ~support/cap times the intended df - silently truncating greedy
+    # expansion.  The cluster filters at the lowest threshold; the exact
+    # per-cid one applies below.
+    cap = max_occs_per_gram
+    capped_sup = {
+        cid: support
+        for cid, _, support, _, _ in cand_rows
+        if cap is not None and support > cap
+    }
+    thr_by_cid = {
+        cid: max(1, -(-min_docs * cap // sup)) for cid, sup in capped_sup.items()
+    }
+    edge_rows = path_edges(
+        docs, cand_rows, n, window, cap, min([min_docs, *thr_by_cid.values()])
+    ).collect()
+    clock.lap("edges")
 
-        by_cur: dict[tuple, list] = defaultdict(list)
-        for cid, d, cur, sup, tok, nxt in edge_rows:
+    cid_by_seed = {h0: cid for cid, _, _, h0, _ in cand_rows}
+    by_cur: dict[tuple, list] = defaultdict(list)
+    for seed, d, nxt, tok, sup, cur in edge_rows:
+        cid = cid_by_seed.get(seed)  # None: a gather-hash false positive
+        if cid is not None and sup >= thr_by_cid.get(cid, min_docs):
             by_cur[(cid, d, cur)].append((sup, tok, nxt))
 
-        # ---- greedy walk per candidate over the frequent edges (driver) ----
-        for cid, st in state.items():
-            plen, h = n, st["h"]
-            while True:
-                options = by_cur.get((cid, plen, h))
-                if not options:
-                    break
-                best_sup = max(o[0] for o in options)
-                # winner: max unique-doc support, tie -> smallest token string
-                tok, nxt = min((t, o_nxt) for sup, t, o_nxt in options if sup == best_sup)
-                st["tokens"].append(tok)
-                st["support"] = best_sup
-                h = nxt
-                plen += 1
-                if plen >= window:
-                    clock.lap("walk")
-                    raise WindowExhausted(f"phrase reached window W={window}")
-            st["h"] = h
-            if plen > n and cid in capped_sup:
-                # expansion support was counted over the cap/support doc
-                # sample: report the unbiased estimate (bounded by the exact
-                # seed df - expansion support is monotone non-increasing)
-                est = round(st["support"] * capped_sup[cid] / cap)
-                st["support"] = min(st["seed_support"], max(min_docs, est))
-        clock.lap("walk")
+    # ---- greedy walk per candidate over the frequent edges (driver) ----
+    for cid, st in state.items():
+        plen, h = n, st["h"]
+        while True:
+            options = by_cur.get((cid, plen, h))
+            if not options:
+                break
+            best_sup = max(o[0] for o in options)
+            # winner: max unique-doc support, tie -> smallest token string
+            tok, nxt = min((t, o_nxt) for sup, t, o_nxt in options if sup == best_sup)
+            st["tokens"].append(tok)
+            st["support"] = best_sup
+            h = nxt
+            plen += 1
+            if plen >= window:
+                clock.lap("walk")
+                raise WindowExhausted(f"phrase reached window W={window}")
+        st["h"] = h
+        if plen > n and cid in capped_sup:
+            # expansion support was counted over the cap/support doc
+            # sample: report the unbiased estimate (bounded by the exact
+            # seed df - expansion support is monotone non-increasing)
+            est = round(st["support"] * capped_sup[cid] / cap)
+            st["support"] = min(st["seed_support"], max(min_docs, est))
+    clock.lap("walk")
 
-        # ---- flag FINAL occurrences (per-cid final length and chain hash,
-        # looked up by cid - no join); only the c columns of lengths that
-        # actually occur are read from cache ----
-        flens = sorted({len(st["tokens"]) for st in state.values()})
-        fin_case = (
-            "CASE flen "
-            + " ".join(f"WHEN {f} THEN (c{f} = fin_h)" for f in flens)
-            + " END"
-        )
-        flagged = (
-            gathered.withColumn(
-                "flen", F.expr(_by_cid([len(state[r[0]]["tokens"]) for r in cand_rows]))
-            )
-            .withColumn("fin_h", F.expr(_by_cid([state[r[0]]["h"] for r in cand_rows])))
-            .withColumn("is_final", F.coalesce(F.expr(fin_case), F.lit(False)))
-        )
+    # ---- flag FINAL occurrences: c_f is a final chain hash of length f.
+    # A path's first n tokens are its candidate's gram, so a hash of one
+    # candidate's final phrase never matches another candidate's
+    # occurrence: one literal hash set per final length, no per-cid
+    # lookup, and only the c columns of lengths that occur are read ----
+    fin_by_len: dict[int, list[int]] = defaultdict(list)
+    for st in state.values():
+        fin_by_len[len(st["tokens"])].append(st["h"])
+    is_final = " OR ".join(
+        f"c{f} IN ({', '.join(f'{h}L' for h in hs)})" for f, hs in sorted(fin_by_len.items())
+    )
+    flagged = gathered.withColumn("is_final", F.coalesce(F.expr(is_final), F.lit(False)))
 
-        # single Arrow transfer: (cid, doc_id, pos, prev hash, is_final) - the
-        # occurrence rows the sequential selection needs anyway also serve
-        # the closure counters AND the canonical example docs, so no further
-        # cluster jobs run after this point
-        pdf = flagged.select("cid", "doc_id", "pos", "prev_h", "is_final").toPandas()
-        clock.lap("occurrences")
-    finally:
-        gathered.unpersist()
+    # single Arrow transfer: (cid, doc_id, pos, prev hash, is_final) - the
+    # occurrence rows the sequential selection needs anyway also serve
+    # the closure counters AND the canonical example docs, so no further
+    # cluster jobs run after this point.  The nullable BIGINT prev_h
+    # arrives as pandas Int64, exact: float64 (toPandas' default) would
+    # merge hashes that differ only in their low bits.
+    pdf = (
+        flagged.select("cid", "doc_id", "pos", "prev_h", "is_final")
+        .toArrow()
+        .to_pandas(types_mapper={pa.int64(): pd.Int64Dtype()}.get)
+    )
+    clock.lap("occurrences")
 
     # ---- closure counters + example docs, reduced driver-side -------------
     fin_pdf = pdf[pdf["is_final"]]
     n_pos0_by = fin_pdf[fin_pdf["pos"] == 0].groupby("cid").size()
-    n_prev_by = fin_pdf.groupby("cid")["prev_h"].nunique()  # NaN (pos=0) excluded
+    n_prev_by = fin_pdf.groupby("cid")["prev_h"].nunique()  # <NA> (pos=0) excluded
     n_pos0_by, n_prev_by = n_pos0_by.to_dict(), n_prev_by.to_dict()
     closure = {
         cid: (int(n_pos0_by.get(cid, 0)), int(n_prev_by.get(cid, 0)))

@@ -11,7 +11,8 @@ One strip function, `_strip_batches` (parse html when non-null, else take
 `extract_main_content` and streaming's `stream_strip`.  A fresh pipeline
 run parses html once: `_parse_and_mine` persists the parsed `text_repr` (a
 string column - cache-friendly, unlike token arrays) and mines it, and
-pass 2 strips from that same frame.
+pass 2 strips from that same frame.  `with_text_repr` is one projection
+over the pages, so the parse runs one Python task per input partition.
 
 Scale notes:
   * Pass 2 is a pure map - NO shuffle; parallelism is input-partition bound.
@@ -66,24 +67,20 @@ EXTRACTED_SCHEMA = T.StructType(
 def with_text_repr(pages: DataFrame) -> DataFrame:
     """pages + text_repr: parsed html blocks, else the `text` column.
 
-    The html parse is a pandas-UDF (Arrow batches); rows with html IS NULL
-    never enter Python (coalesce short-circuits on the JVM side).
+    One projection, `coalesce(parse_html(html), text)`: the html parse is a
+    pandas-UDF (Arrow batches) that maps a NULL html to NULL, so such a row
+    takes `text`.  The frame keeps the input's partitions - a filtered
+    union of an html branch and a text branch doubles them, and each extra
+    Python task costs its fixed start-up time even with no rows.
     """
 
     @F.pandas_udf(T.StringType())
     def parse_html(html: pd.Series) -> pd.Series:
         return html.map(lambda b: html_to_text(b) if b is not None else None)
 
-    # Spark does NOT short-circuit UDFs inside when(): a single withColumn
-    # would push every row through Python even when html IS NULL.  Split the
-    # frame instead - the null branch never leaves the JVM.
-    with_html = pages.filter(F.col("html").isNotNull()).withColumn(
-        "text_repr", parse_html(F.col("html"))
+    return pages.withColumn(
+        "text_repr", F.coalesce(parse_html(F.col("html")), F.col("text"))
     )
-    text_only = pages.filter(F.col("html").isNull()).withColumn(
-        "text_repr", F.col("text")
-    )
-    return with_html.unionByName(text_only)
 
 
 def _strip_batches(

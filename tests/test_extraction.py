@@ -117,7 +117,10 @@ def test_strip_pass_equals_strip_text_pass_over_parsed_pages(spark):
         }
 
     one_map = by_url(strip_pass(pages, phrases))
-    two_step = by_url(strip_text_pass(with_text_repr(pages), phrases))
+    parsed = with_text_repr(pages)
+    # one projection: the parse keeps the input's partitions
+    assert parsed.rdd.getNumPartitions() == pages.rdd.getNumPartitions()
+    two_step = by_url(strip_text_pass(parsed, phrases))
     assert len(one_map) == N_PAGES
     assert one_map == two_step
     assert any(spans for _, spans in one_map.values())

@@ -12,10 +12,12 @@ Every corpus is generated in plain Python.  On each one the mined rows
     so it re-gathers at a doubled window.
 
 Corpora: small-vocabulary random texts, which produce support ties in the
-seed order and in the greedy expansion, and site/template corpora shaped
+seed order and in the greedy expansion; site/template corpora shaped
 like the extraction benchmark's (per-site footers whose every 3-gram holds
 a site token, global templates on a share of pages, hash-unique filler
-words between parts).
+words between parts); and repeat corpora, where one doc holds a seed
+several times with continuations that share a prefix and then diverge, so
+a doc's path-tree edges repeat within the doc and must count once.
 """
 
 from __future__ import annotations
@@ -23,6 +25,7 @@ from __future__ import annotations
 import random
 
 import pytest
+from pyspark.sql import functions as F
 
 from boilerplate_buster_spark.core import pyref
 from boilerplate_buster_spark.operators import bloomspan
@@ -62,12 +65,33 @@ def sites_corpus(seed: int, n_sites: int, pages_per_site: int) -> list[list[str]
     return docs
 
 
+def repeat_corpus(seed: int, n_docs: int) -> list[list[str]]:
+    """Each doc holds the seed "s1 s2 s3" one to three times, each time
+    followed by one of three continuations that share "p q" (two of them
+    "p q r") and then diverge, with hash-unique filler between."""
+    rng = random.Random(seed)
+    tails = ("p q r x v", "p q r y", "p q z w")
+
+    def filler() -> list[str]:
+        return [f"u{rng.getrandbits(64):016x}" for _ in range(rng.randrange(1, 4))]
+
+    docs = []
+    for _ in range(n_docs):
+        toks = filler()
+        for _ in range(rng.randrange(1, 4)):
+            toks += ["s1", "s2", "s3", *rng.choice(tails).split()] + filler()
+        docs.append(toks)
+    return docs
+
+
 CORPORA = {
     "random-v6-s1": (lambda: random_corpus(1, 6, 24), 3, 2),
     "random-v8-s2": (lambda: random_corpus(2, 8, 30), 3, 3),
     "random-v12-s3": (lambda: random_corpus(3, 12, 28), 2, 2),
     "sites-s1": (lambda: sites_corpus(1, 40, 2), 2, 3),
     "sites-s2": (lambda: sites_corpus(2, 25, 3), 3, 3),
+    "repeat-s1": (lambda: repeat_corpus(1, 24), 3, 5),
+    "repeat-s2": (lambda: repeat_corpus(2, 30), 2, 8),
 }
 
 
@@ -120,3 +144,72 @@ def test_miners_agree_with_pyref(spark, name):
     for label, extra in runs.items():
         got = _mined_rows(spark, df, **kw, **extra)
         assert got == want, (name, label)
+
+
+@pytest.mark.parametrize("strategy", ["driver", "distributed"])
+def test_closure_counts_prev_hashes_exactly(spark, monkeypatch, strategy):
+    """The backward-closure counter compares preceding-token hashes as
+    exact 64-bit ints.  The gathered prev hashes of "x" and "y" are set to
+    2**62 and 2**62 + 1, which float64 cannot tell apart: a float64
+    transfer makes them one preceding token and drops "p q r s" by
+    closure."""
+    docs = [[f"f{i}a", "x" if i < 2 else "y", "p", "q", "r", "s", f"f{i}b"]
+            for i in range(4)]
+    # a phrase at position 0 gives the transfer NULL prev hashes, which is
+    # where pandas' default conversion turns the column into float64
+    docs += [["g", "h", "i", f"f{i}c"] for i in range(2)]
+    df = spark.createDataFrame(
+        list(zip(_names(len(docs)), docs)), "doc_id string, tokens array<string>"
+    )
+    real = bloomspan.gather_windows
+
+    def near_prev_hashes(*a, **kw):
+        return real(*a, **kw).withColumn("prev_h", F.expr(
+            f"CASE prev_h WHEN xxhash64('x') THEN {2**62}L "
+            f"WHEN xxhash64('y') THEN {2**62 + 1}L ELSE prev_h END"))
+
+    monkeypatch.setattr(bloomspan, "gather_windows", near_prev_hashes)
+    want = _oracle_rows(docs, 2, 3)
+    assert "p q r s" in [r[0] for r in want]
+    assert _mined_rows(spark, df, min_docs=2, ngrams=3, strategy=strategy,
+                       max_occs_per_gram=None) == want
+
+
+def test_capped_edges_count_the_gathered_doc_sample(spark):
+    """A binding cap samples each capped gram's docs once: the edge scan
+    counts, per seed and next token, exactly the docs whose occurrences
+    gather_windows keeps - so expansion, closure and the occupancy mask see
+    one subsample."""
+    cap, n, window = 40, 3, 8
+    rng = random.Random(5)
+    docs = [[f"w{i}a", "s1", "s2", "s3", *rng.choice(("a b", "a c", "d")).split(),
+             f"w{i}b"] for i in range(200)]
+    df = spark.createDataFrame(
+        list(zip(_names(len(docs)), docs)), "doc_id string, tokens array<string>"
+    )
+    gate = bloomspan.word_gate(spark, bloomspan._bitmap_words(df, 5).collect(), 2048)
+    grams, _ = bloomspan.candidate_grams(df, n, 5, gate)
+    cand_rows, cands = bloomspan._number_candidates(
+        spark, bloomspan._with_seed_hashes(grams, n).collect()
+    )
+    assert any(r[2] > cap for r in cand_rows)
+    gathered = bloomspan.gather_windows(
+        df, cands, [r[4] for r in cand_rows], n, window, max_occs_per_gram=cap
+    )
+    want = {
+        (r["cid"], r["tok"]): r["docs"]
+        for r in gathered.filter(f"s{n + 1} IS NOT NULL")
+        .groupBy("cid", F.col(f"s{n + 1}").alias("tok"))
+        .agg(F.countDistinct("doc_id").alias("docs"))
+        .collect()
+    }
+    cid_by_seed = {r[3]: r[0] for r in cand_rows}
+    got = {
+        (cid_by_seed[r["seed"]], r["tok"]): r["sup"]
+        for r in bloomspan.path_edges(df, cand_rows, n, window, cap, 1)
+        .filter(f"d = {n}")
+        .collect()
+        if r["seed"] in cid_by_seed
+    }
+    assert got == want
+    assert sum(want.values()) < sum(r[2] for r in cand_rows)  # the cap sampled

@@ -68,6 +68,34 @@ def test_candidate_grams_dedup_and_gate_before_shuffle(spark):
     assert "_ok" in plan
 
 
+def test_edge_aggregate_is_one_exchange_over_no_cache(spark, monkeypatch):
+    """The plan of the edge collect that a distributed mine runs: per-doc
+    deduped edges counted in ONE hash exchange (no distinct-aggregate
+    rewrite), read from the doc scan, not from a cached gathered table."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = []
+    orig = DataFrame.collect
+
+    def recording(self):
+        if {"tok", "nxt"} <= set(self.columns):
+            plans.append(explain_str(self, mode="simple"))
+        return orig(self)
+
+    monkeypatch.setattr(DataFrame, "collect", recording)
+    tpl = "alpha beta gamma delta epsilon zeta".split()
+    docs = spark.createDataFrame(
+        [(f"d{i}", [f"a{i}"] + tpl + [f"b{i}"] + tpl[:4]) for i in range(6)],
+        "doc_id string, tokens array<string>",
+    )
+    out = bloomspan.mine(spark, docs, min_docs=3, ngrams=3, strategy="distributed")
+    assert [p.text for p in out] == [" ".join(tpl)]
+    assert len(plans) == 1
+    assert plans[0].count("Exchange hashpartitioning") == 1
+    assert "InMemoryRelation" not in plans[0]
+    assert "InMemoryTableScan" not in plans[0]
+
+
 def test_parquet_pushdown_and_pruning(spark):
     df = (
         spark.read.parquet("/root/testdata/sf0.001/documents.parquet")
