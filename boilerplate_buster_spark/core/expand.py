@@ -1,24 +1,24 @@
 """Windowed greedy-expansion kernel (stages E-F of the BloomSpan pipeline,
-/root/reference/corpus-miner/_ours/bloom_gram_miner.cpp:595-706).
+corpus-miner/_ours/bloom_gram_miner.cpp:595-706): the exact
+sequential kernel of the pure-Python oracle (core/pyref.py), and nothing
+else.  The Spark miner (operators/bloomspan.py) does not call it: it walks
+a path-tree edge aggregate and selects with numpy, and the oracle tests
+hold its output to this kernel's.  It shares only the result type
+(WCandidate) and the window signal (WindowExhausted) with it.
 
 This is the one inherently ORDER-SEQUENTIAL piece of the reference algorithm
 (global occupancy bitmask across score-ordered candidates, SURVEY.md section
-2.5 M1-M3).  It is deliberately formulated over per-occurrence token WINDOWS
-rather than whole documents:
+2.5 M1-M3), formulated over per-occurrence token WINDOWS:
 
     occ = (doc_id, pos, prev | None, window)
     window = doc tokens [pos, pos + W)         (W >= longest possible phrase)
 
-so the distributed layer (operators/bloomspan.py) can gather exactly the
-bounded slices the kernel needs - W tokens per surviving candidate
-occurrence - instead of collecting the corpus.  Post-threshold
-candidates are corpus-statistics-bounded (boilerplate templates, not corpus
-rows); their occurrence lists are what scales, and those are capped/sampled
-upstream with exact support kept separately (see operators/bloomspan.py).
+pyref builds each window from the doc's whole tail, which is exactly the
+whole-corpus semantics of the reference.
 
 Expansion of a candidate never depends on the bitmask (the mask only gates
 skip-before / mark-after, bloom_gram_miner.cpp:633-640,697-702), which is what
-makes the distributed variant (expand all candidates in parallel, then replay
+makes the Spark miner's order (expand all candidates in parallel, then replay
 the sequential selection over aggregated stats) output-equivalent.
 """
 
@@ -36,9 +36,7 @@ class WOcc:
     doc_id: int | str
     pos: int
     # the token at pos-1, or any stand-in for it that is equal exactly when
-    # the tokens are (backward closure only compares it): pyref passes the
-    # token, bloomspan.mine its xxhash64 (equal by chance with p ~ 2^-64);
-    # None when pos == 0
+    # the tokens are (backward closure only compares it); None when pos == 0
     prev: Optional[str | int]
     window: list[str]  # doc tokens [pos, pos+W)
 
@@ -48,8 +46,8 @@ class WCandidate:
     tokens: list[str]
     support: int
     occs: list[WOcc] = field(default_factory=list)
-    # canonical example doc ids (<= 2, sorted); set by bloomspan.mine on
-    # both strategies (the distributed one keeps no occs)
+    # canonical example doc ids (<= 2, sorted); set by bloomspan.mine,
+    # which keeps no occs
     examples: list | None = None
 
     @property
@@ -58,9 +56,8 @@ class WCandidate:
 
 
 class WindowExhausted(RuntimeError):
-    """Raised when expansion would read past the gathered window; the caller
-    must re-gather with a larger W (operators/bloomspan.py doubles W and
-    retries)."""
+    """Raised when expansion would read past the window W; the caller must
+    retry with a larger W (operators/bloomspan.py doubles W and retries)."""
 
 
 def expand_windowed(

@@ -1,61 +1,55 @@
 """BloomSpan Maximal-Frequent-Phrase miner, Spark-first.
 
 Pipeline (SURVEY.md section 7; reference: corpus-miner/_ours/bloom_gram_miner.cpp),
-one Spark action per step, and one code path per step for both strategies:
+one code path, one Spark action per step:
 
   docs(doc_id, tokens)
     -> word gate: ONE collect of the frequent-word aggregate,
        grouped into the 64-bit words of a packed Bloom bitmap
-       (bit_or per word, plus a few word hashes per word)    [shuffles #1-2;
-       small vocabularies gate by the literal hash IN-set,
-       larger ones by the broadcast bitmap (word_gate)]
+       (bit_or per word), placed driver-side and broadcast
+       into the scan (word_gate)                             [shuffles #1-2]
     -> candidate grams: word-gated per-doc-distinct n-gram
        counts, threshold support >= min_docs; ONE collect
        also carries each gram's seed chain hash and in-scan
        gather hash, and the driver numbers the grams         [shuffle #3;
        post-threshold set is corpus-statistics bounded: boilerplate
        TEMPLATES, not corpus rows]
-    -> occurrence gather: in-scan hash IN-set filter over the
-       corpus, ONE flat layout (cid, doc_id, pos, prev_h,
-       c1..cW, s1..sW) that both strategies read             [NO shuffle]
-  strategy='distributed':
     -> greedy expansion: ONE path-tree edge aggregation over
        all depths (path_edges): each doc row builds and
-       dedups its own edges from the same in-scan filter,
+       dedups its own edges from an in-scan hash IN-set filter,
        then count(*) keyed by the next token's string,
        HAVING sup >= min_docs before collect                  [shuffle #4]
+    -> driver walk: max-support frequent edges from each seed hash
     -> occurrence transfer: ONE Arrow transfer of per-occurrence
        (cid, doc, pos, prev hash, is_final) from the gather
+       (gather_windows: the same in-scan filter, flat layout
+       (cid, doc_id, pos, prev_h, c1..cW))                   [NO shuffle]
     -> sequential selection: score order + occupancy bitmask
        + backward closure on (cid, doc, pos) integer tuples   [driver, numpy]
     (no cache: the edge scan and the transfer each read the corpus)
-  strategy='driver':
-    -> ONE Arrow transfer of (cid, doc_id, pos, prev_h, s1..sW), then the
-       exact sequential kernel (core/expand.py) on the driver
 
-On both strategies `prev` (the backward-closure input) is the 64-bit hash of
-the token before the occurrence, so two distinct preceding tokens can only
-be taken for one with probability ~2^-64 (the same caveat as the chain
-hashes of the distributed walk).
+`prev` (the backward-closure input) is the 64-bit hash of the token before
+the occurrence, so two distinct preceding tokens can only be taken for one
+with probability ~2^-64 (the same caveat as the chain hashes of the walk).
+The exact pure-Python miner (core/pyref.py, over core/expand.py) is the
+oracle the tests hold this path to.
 
 The selection step is the reference's inherently sequential stage F
 (":595-706").  What reaches the driver is NOT the corpus: the frequent edge
 table (bounded by boilerplate path structure) plus one integer row per
 occurrence OF A SURVIVING CANDIDATE.  At web scale the occurrence lists of
-head phrases grow with the corpus, so ``max_occs_per_gram`` (default "auto"
--> AUTO_MAX_OCCS on the distributed path) caps the gathered postings per
-gram (deterministic xxhash64 DOC sampling at rate cap/support, the same
-doc subsample in the edge scan and the gather) while the EXACT seed df
-keeps coming from the candidate aggregate.  When the cap
-BINDS (support > cap): expansion-edge supports are subsample counts, so the
-frequency threshold scales to the unbiased estimate
-(sup * support / cap >= min_docs) and reported expansion supports are
-rescaled estimates; closure counters, examples and the occupancy bitmask run
-on the same consistent doc subsample (sized >> min_docs for any sane
-threshold).  `stats["occ_cap_sampled_grams"]` records how many grams the cap
-touched; pass ``max_occs_per_gram=None`` for the byte-identical exact
-posture.  Small corpora skip all of this: strategy='driver' transfers the
-gathered windows and runs the exact kernel directly.
+head phrases grow with the corpus, so ``max_occs_per_gram`` (default
+AUTO_MAX_OCCS) caps the gathered postings per gram (deterministic xxhash64
+DOC sampling at rate cap/support, the same doc subsample in the edge scan
+and the gather) while the EXACT seed df keeps coming from the candidate
+aggregate.  When the cap BINDS (support > cap): expansion-edge supports are
+subsample counts, so the frequency threshold scales to the unbiased
+estimate (sup * support / cap >= min_docs) and reported expansion supports
+are rescaled estimates; closure counters, examples and the occupancy
+bitmask run on the same consistent doc subsample (sized >> min_docs for any
+sane threshold).  `stats["occ_cap_sampled_grams"]` records how many grams
+the cap touched; pass ``max_occs_per_gram=None`` for the byte-identical
+exact posture.
 
 ``mine`` runs its Spark jobs under a job group of its own (the caller's
 group is restored on exit) and reports, in ``stats``, ``phase_s`` (wall
@@ -74,12 +68,7 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from boilerplate_buster_spark.core.expand import (
-    WCandidate,
-    WOcc,
-    WindowExhausted,
-    expand_windowed,
-)
+from boilerplate_buster_spark.core.expand import WCandidate, WindowExhausted
 from boilerplate_buster_spark.functions.ngrams import gram_starts
 
 RESULT_SCHEMA = T.StructType(
@@ -129,19 +118,11 @@ def _gramhash_sql(hs_ref: str, i: str, n: int) -> str:
 
 BITMAP_BITS = 1 << 22  # 4 Mbit -> 512 KiB packed; fpr ~ vocab/bits per probe
 
-#: word hashes the word-gate probe carries per 64-bit bitmap word.  A
-#: frequent vocabulary with more first-probe words in one bitmap word gates
-#: through the bitmap even under word_gate_max - just as exact; with <= 2048
-#: words over 65,536 bitmap words that happens with p ~ 1e-5.
-_PROBE_HASHES = 4
-
 
 def _bitmap_words(docs: DataFrame, min_docs: int) -> DataFrame:
-    """(idx, v, n, hs): the 2-probe Bloom bitmap over the words in >=
-    min_docs docs, grouped by its 64-bit words - the one word-gate collect,
-    whose rows `word_gate` turns into the gate.  v is the bit_or of word
-    `idx`'s set bits; n counts the words whose first probe lands in word
-    `idx` and hs holds up to _PROBE_HASHES of their xxhash64 values.  At
+    """(idx, v): the 2-probe Bloom bitmap over the words in >= min_docs
+    docs, grouped by its 64-bit words - the one word-gate collect, whose
+    rows `word_gate` places.  v is the bit_or of word `idx`'s set bits.  At
     most BITMAP_BITS//64 rows, whatever the vocabulary size."""
     from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
 
@@ -149,29 +130,16 @@ def _bitmap_words(docs: DataFrame, min_docs: int) -> DataFrame:
     return (
         word_doc_freq(docs)
         .filter(F.col("df") >= min_docs)
-        .select(
-            F.explode(
-                F.expr(
-                    f"array(named_struct('bit', {b1}, 'h', xxhash64(word)), "
-                    f"named_struct('bit', {b2}, 'h', CAST(NULL AS bigint)))"
-                )
-            ).alias("p")
-        )
-        .groupBy(F.expr("shiftright(p.bit, 6)").alias("idx"))
-        .agg(
-            F.expr("bit_or(shiftleft(CAST(1 AS bigint), CAST(p.bit & 63 AS int)))").alias("v"),
-            F.count("p.h").alias("n"),
-            F.expr(f"slice(collect_list(p.h), 1, {_PROBE_HASHES})").alias("hs"),
-        )
+        .select(F.explode(F.expr(f"array({b1}, {b2})")).alias("bit"))
+        .groupBy(F.expr("shiftright(bit, 6)").alias("idx"))
+        .agg(F.expr("bit_or(shiftleft(CAST(1 AS bigint), CAST(bit & 63 AS int)))").alias("v"))
     )
 
 
-def word_gate(spark: SparkSession, probe: list, word_gate_max: int) -> list[int] | DataFrame:
+def word_gate(spark: SparkSession, probe: list) -> DataFrame:
     """The reference's P3 word-DF gate (bloom_gram_miner.cpp:414-421) from
-    the collected `_bitmap_words` rows: the sorted xxhash64 values of a
-    frequent vocabulary of at most word_gate_max words (a literal IN-set),
-    or else the 2-probe Bloom bitmap packed into a one-row `bf
-    array<bigint>` frame (broadcast into the scan).
+    the collected `_bitmap_words` rows: the 2-probe Bloom bitmap packed into
+    a one-row `bf array<bigint>` frame (broadcast into the scan).
 
     Spark's internal bloom_filter_agg is NOT in the public function registry
     (UNRESOLVED_ROUTINE on 4.1), so the bitmap is built from public ops: the
@@ -182,10 +150,6 @@ def word_gate(spark: SparkSession, probe: list, word_gate_max: int) -> list[int]
     exact."""
     import numpy as np
 
-    n_words = sum(r["n"] for r in probe)
-    hashes = sorted(h for r in probe for h in r["hs"])
-    if n_words <= word_gate_max and len(hashes) == n_words:
-        return hashes
     packed = np.zeros(BITMAP_BITS // 64, dtype=np.int64)
     if probe:
         packed[np.array([r["idx"] for r in probe], dtype=np.int64)] = np.array(
@@ -209,7 +173,7 @@ def _bitmap_probe(x: str) -> str:
 
 
 def candidate_grams(
-    docs: DataFrame, n: int, min_docs: int, gate: list[int] | DataFrame
+    docs: DataFrame, n: int, min_docs: int, gate: DataFrame
 ) -> tuple[DataFrame, Observation]:
     """(gram, support): n-grams in >= min_docs DISTINCT docs (stages A-D),
     and the Observation of the M5 seed counters (total, acc).
@@ -223,8 +187,8 @@ def candidate_grams(
         map-side -> the agg is a plain count, no distinct rewrite/Expand);
       * the word gate `gate` (see word_gate): every token of a qualifying
         gram is itself in >= min_docs docs, so grams touching any rare word
-        are dropped at the scan - by the literal hash IN-set, or by the
-        broadcast packed bitmap.
+        are dropped at the scan by the broadcast packed bitmap, probed once
+        per TOKEN (not once per gram position).
 
     The seed counters ride the candidate collect via df.observe()
     (CollectMetrics blocks the threshold-filter pushdown, so `total` counts
@@ -232,23 +196,10 @@ def candidate_grams(
     the returned plan - obs.get on a never-executed plan blocks forever.
     """
     t = "tokens"
-    if isinstance(gate, DataFrame):
-        # bitmap probes per TOKEN (not per gram position), broadcast 1-row bf
-        src_df = docs.crossJoin(F.broadcast(gate)).select(
-            F.col(t),
-            F.expr(f"transform({t}, x -> {_bitmap_probe('x')})").alias("_ok"),
-        )
-    else:
-        # membership on 64-bit token hashes, computed ONCE per token -
-        # literal IN-lists are linear scans in codegen, so comparing longs
-        # (not strings) and testing each token once (not once per gram)
-        # keeps the gate ~free.  Hash false positives only ADD grams; the
-        # exact threshold below keeps the result exact.
-        hset = ", ".join(map(str, gate)) or "0"
-        src_df = docs.select(
-            F.col(t),
-            F.expr(f"transform({t}, x -> xxhash64(x) IN ({hset}))").alias("_ok"),
-        )
+    src_df = docs.crossJoin(F.broadcast(gate)).select(
+        F.col(t),
+        F.expr(f"transform({t}, x -> {_bitmap_probe('x')})").alias("_ok"),
+    )
     conj = " AND ".join(f"element_at(_ok, i + {k})" for k in range(n))
     per_doc = src_df.select(
         F.explode(
@@ -402,9 +353,8 @@ def gather_windows(
     window: int,
     max_occs_per_gram: int | None = None,
 ) -> DataFrame:
-    """Per-occurrence windows for every candidate gram, in the one flat
-    layout both strategies read: (cid, doc_id, pos, prev_h, c1..cW,
-    s1..sW).
+    """Per-occurrence rows for every candidate gram, in one flat layout:
+    (cid, doc_id, pos, prev_h, c1..cW).
 
     `cands` is the (cid, gram, support) frame and `cand_hashes` the in-scan
     gather hashes of its grams (``_gramhash_sql`` over each gram's token
@@ -413,15 +363,14 @@ def gather_windows(
     ZERO shuffles on the main path: the candidate set is corpus-statistics
     small (post-threshold boilerplate templates), so occurrence discovery is
     a literal IN-set filter INSIDE the doc scan (`_gather_positions`) - one
-    codegen pass over the corpus, windows sliced in place, then a broadcast
+    codegen pass over the corpus, chains hashed in place, then a broadcast
     map-side join attaches cid/support.  A candidate set above _INSCAN_MAX
     falls back to every position and a shuffle join on gram.
 
     prev_h = xxhash64 of the token before the occurrence, NULL at pos 0
-    (backward-closure input, ":675-695"); s<i> = token i of the W-token
-    window from the occurrence start, NULL past the doc's end (expansion
-    input); c<i> = rolling prefix hash of window[0..i) (the distributed
-    strategy's final-occurrence flag).
+    (backward-closure input, ":675-695"); c<i> = rolling prefix hash of the
+    i tokens from the occurrence start, NULL past the doc's end (the
+    final-occurrence flag).
     """
     t = "tokens"
     # the exact gram-string join drops the gather filter's hash false
@@ -444,9 +393,8 @@ def gather_windows(
         # already joined in
         occ = occ.filter(F.expr(_doc_sample_sql("support", max_occs_per_gram)))
     # FLAT COLUMNS, no arrays: the final-occurrence flag reads the c
-    # columns of the final lengths only, and the driver strategy's select
-    # prunes the c columns away - column pruning that array columns cannot
-    # give.  c<i> is the fold of the per-token hashes.
+    # columns of the final lengths only - column pruning that an array
+    # column cannot give.  c<i> is the fold of the per-token hashes.
     # string expressions: one selectExpr parses them all in one call
     return occ.selectExpr(
         "cid",
@@ -455,27 +403,23 @@ def gather_windows(
         # pos is 0-based; element_at is 1-based, so index `pos` IS pos-1
         "IF(pos > 0, element_at(_hs, pos), NULL) AS prev_h",
         f"slice({_chain_sql('_hs', 'ipos', window)}, 2, {window}) AS _chain",
-        t,
-        "ipos",
     ).selectExpr(
         "cid", "doc_id", "pos", "prev_h",
         *(f"try_element_at(_chain, {i}) AS c{i}" for i in range(1, window + 1)),
-        *(f"try_element_at({t}, ipos + {i} - 1) AS s{i}" for i in range(1, window + 1)),
     )
 
 
-#: distributed-strategy default for max_occs_per_gram ("auto"): per-gram
-#: Bernoulli DOC sampling at rate cap/support bounds the gathered postings
-#: and the driver transfer.  SEED supports stay exact (they come from the
-#: candidate aggregate); when the cap binds, expansion thresholds scale to
-#: the unbiased support estimate (see _mine_distributed) and the
-#: bitmask/closure run over the sampled docs (a deterministic, consistent
-#: subsample - must be sized >> min_docs, which 100k is for any
-#: sane boilerplate threshold).  At web scale head phrases have occurrence
-#: counts proportional to the corpus, so an uncapped gather is a transfer
-#: cliff.  Pass None explicitly for the byte-identical posture (the pytest
-#: goldens and equivalence tests run far below the cap, where "auto" is
-#: exact anyway).
+#: default for max_occs_per_gram: per-gram Bernoulli DOC sampling at rate
+#: cap/support bounds the gathered postings and the driver transfer.  SEED
+#: supports stay exact (they come from the candidate aggregate); when the
+#: cap binds, expansion thresholds scale to the unbiased support estimate
+#: (see _mine_distributed) and the bitmask/closure run over the sampled
+#: docs (a deterministic, consistent subsample - must be sized >> min_docs,
+#: which 100k is for any sane boilerplate threshold).  At web scale head
+#: phrases have occurrence counts proportional to the corpus, so an
+#: uncapped gather is a transfer cliff.  Pass None explicitly for the
+#: byte-identical posture (the pytest goldens and equivalence tests run far
+#: below the cap, where the default is exact anyway).
 AUTO_MAX_OCCS = 100_000
 
 
@@ -521,11 +465,6 @@ class _PhaseClock:
         self._t = now
 
 
-#: strategy="auto" picks the driver strategy below this many candidate
-#: occurrences (lower-bounded by the summed seed supports)
-AUTO_DRIVER_OCCS = 150_000
-
-
 def mine(
     spark: SparkSession,
     docs: DataFrame,
@@ -533,43 +472,38 @@ def mine(
     ngrams: int,
     min_l: int | None = None,
     window: int = 16,
-    max_occs_per_gram: int | None | str = "auto",
-    strategy: str = "auto",
-    word_gate_max: int = 2048,
+    max_occs_per_gram: int | None = AUTO_MAX_OCCS,
+    strategy: str = "distributed",
     stats: dict | None = None,
 ) -> list[WCandidate]:
     """Run the full miner over docs(doc_id, tokens); returns the final
     phrase list (driver-side, small).
 
-    Job plan (module docstring): one word-gate collect, one candidate
-    collect, then per window size one gather of the flat occurrence layout
-    and the strategy's actions over it.
-    strategy='distributed': greedy expansion runs as ONE path-tree edge
+    Job plan (module docstring), one path for every corpus: one word-gate
+    collect, one candidate collect, then per window size ONE path-tree edge
     aggregation with one exchange (path_edges: all depths counted together,
     each doc's edges deduped in its row; sub-threshold edges never leave the
-    cluster; each edge carries its token string), then the driver replays
-    the greedy walk over the frequent edges and the sequential
-    occupancy-mask selection over integer (gram, doc, pos) tuples from one
-    Arrow transfer of the gather.  Nothing is cached: 4 shuffles in all.
-    strategy='driver': one Arrow transfer of the windows, and the whole
-    kernel runs driver-side (exact same outputs; the transfer dominates on
-    large corpora).  'auto' (default) picks by total candidate-occurrence
-    count (< AUTO_DRIVER_OCCS -> driver).  Both retry with doubled W if a
-    phrase outgrows the gathered windows.
+    cluster; each edge carries its token string), the driver's replay of
+    the greedy walk over the frequent edges, and one Arrow transfer of the
+    gather for the sequential occupancy-mask selection over integer (gram,
+    doc, pos) tuples.  Nothing is cached: 4 shuffles in all.  A phrase that
+    outgrows the window W raises WindowExhausted, and the edges and the
+    transfer run again at 2W.  `strategy` has the one value "distributed";
+    any other raises ValueError.
 
     The word gate is ONE bounded collect (`_bitmap_words`): the
     frequent-word aggregate grouped by the 64-bit words of the packed Bloom
-    bitmap.  `word_gate` turns it into a literal hash IN-set for a
-    frequent-word set of at most word_gate_max words, and into the broadcast
-    bitmap for a larger one - never a full word collect.  Candidate ids are
-    assigned driver-side in gram order after the candidate collect.  Every
-    cache is released on every exit path.
+    bitmap, which `word_gate` places and broadcasts - never a full word
+    collect.  Candidate ids are assigned driver-side in gram order after
+    the candidate collect.  Every cache is released on every exit path.
 
     `stats` (optional dict) receives the M5 mining-statistics table
     (bloom_gram_miner.cpp:447-454,710-718): seed totals, accepted/rejected,
     %reduction, phrases_total, phrases_6plus, selection counters - plus
-    phase_s (wall seconds per phase) and spark_jobs (jobs this call ran,
-    counted under its own job group)."""
+    occ_cap_sampled_grams, phase_s (wall seconds per phase) and spark_jobs
+    (jobs this call ran, counted under its own job group)."""
+    if strategy != "distributed":
+        raise ValueError(f"strategy must be 'distributed', got {strategy!r}")
     if min_l is None:
         min_l = ngrams  # main.cpp:67
 
@@ -582,12 +516,12 @@ def mine(
     clock = _PhaseClock()
     with _own_job_group(spark, stats, clock):
         probe = _bitmap_words(docs, min_docs).collect()
-        gate = word_gate(spark, probe, word_gate_max)
+        gate = word_gate(spark, probe)
         clock.lap("words")
 
         cands, seeds = candidate_grams(docs, ngrams, min_docs, gate)
-        # one tiny collect serves strategy choice, candidate ids, seed
-        # supports, the rolling seed hash and the in-scan gather hash
+        # one tiny collect serves candidate ids, seed supports, the rolling
+        # seed hash and the in-scan gather hash
         cand_rows = _with_seed_hashes(cands, ngrams).collect()
         if stats is not None:
             seed_row = seeds.get  # the collect above ran the observed plan
@@ -602,40 +536,29 @@ def mine(
         clock.lap("candidates")
         if stats is not None:
             stats.setdefault("candidates_after_merge", len(cand_rows))
-        if not cand_rows:
-            if stats is not None:
-                stats.update(phrases_total=0, phrases_6plus=0)
-            return []
-        cand_hashes = [r[4] for r in cand_rows]
-        if strategy == "auto":
-            # support (distinct docs) lower-bounds occurrences; good
-            # enough to pick the execution strategy
-            total_occs = sum(r[2] for r in cand_rows)
-            strategy = "driver" if total_occs < AUTO_DRIVER_OCCS else "distributed"
-        if max_occs_per_gram == "auto":
-            max_occs_per_gram = AUTO_MAX_OCCS if strategy == "distributed" else None
-        if stats is not None:
             stats["occ_cap_sampled_grams"] = sum(
                 1
                 for r in cand_rows
                 if max_occs_per_gram is not None and r[2] > max_occs_per_gram
             )
+        if not cand_rows:
+            if stats is not None:
+                stats.update(
+                    phrases_total=0, phrases_6plus=0,
+                    selection_skipped_covered=0, selection_dropped_closure=0,
+                )
+            return []
+        cand_hashes = [r[4] for r in cand_rows]
         while True:
             try:
                 gathered = gather_windows(
                     docs, cands, cand_hashes, ngrams, window, max_occs_per_gram
                 )
-                if strategy == "distributed":
-                    out = _mine_distributed(
-                        docs, gathered, cand_rows, min_docs, min_l, window,
-                        stats=stats, max_occs_per_gram=max_occs_per_gram,
-                        clock=clock,
-                    )
-                else:
-                    out = _mine_driver(
-                        gathered, cand_rows, min_docs, min_l, window, stats=stats
-                    )
-                    clock.lap("expand")
+                out = _mine_distributed(
+                    docs, gathered, cand_rows, min_docs, min_l, window,
+                    stats=stats, max_occs_per_gram=max_occs_per_gram,
+                    clock=clock,
+                )
                 if stats is not None:
                     stats.update(
                         phrases_total=len(out),
@@ -644,41 +567,6 @@ def mine(
                 return out
             except WindowExhausted:
                 window *= 2
-
-
-def _mine_driver(
-    gathered: DataFrame, cand_rows: list, min_docs: int, min_l: int, window: int,
-    stats: dict | None = None,
-) -> list[WCandidate]:
-    """Transfer the windows in one Arrow batch and run the exact sequential
-    kernel driver-side.  `cand_rows`: (cid, gram, support, h0, gh) per
-    candidate; only candidates with gathered occurrences enter the kernel.
-    Examples are the first 2 of each phrase's sorted final-occurrence docs,
-    as on the distributed strategy."""
-    s_cols = [f"s{i}" for i in range(1, window + 1)]
-    rows = gathered.select("cid", "doc_id", "pos", "prev_h", *s_cols).toArrow()
-    # integers through to_pylist: the nullable BIGINT prev_h stays an exact
-    # int, where numpy or pandas would make it float64; strings through
-    # numpy, ~20x faster than to_pylist
-    ints = zip(*(rows.column(c).to_pylist() for c in ("cid", "pos", "prev_h")))
-    doc_ids, *s_vals = (
-        rows.column(c).to_numpy(zero_copy_only=False) for c in ("doc_id", *s_cols)
-    )
-    gram_support = {cid: (gram, support) for cid, gram, support, _, _ in cand_rows}
-    occs: dict[int, list[WOcc]] = defaultdict(list)
-    for (cid, pos, prev), doc, win in zip(ints, doc_ids, zip(*s_vals)):
-        # the s<i> past the doc's end are NULL padding
-        end = win.index(None) if None in win else window
-        occs[cid].append(WOcc(doc, pos, prev, list(win[:end])))
-    cands = []
-    for cid, lst in occs.items():
-        lst.sort(key=lambda o: (o.doc_id, o.pos))  # canonical occ order
-        gram, support = gram_support[cid]
-        cands.append(WCandidate(gram.split(" "), support, lst))
-    out = expand_windowed(cands, min_docs, min_l, window=window, stats=stats)
-    for p in out:
-        p.examples = sorted({o.doc_id for o in p.occs})[:2]
-    return out
 
 
 def _mine_distributed(
@@ -717,8 +605,8 @@ def _mine_distributed(
 
     Because the prefix hash c_d encodes the ENTIRE path, counting all depths
     together is exact: edges of different prefixes can never merge (modulo
-    the documented 2^-64 chain-collision caveat, guarded by the
-    driver/distributed equivalence tests).  Sub-threshold edges - the
+    the documented 2^-64 chain-collision caveat, guarded by the pyref
+    equivalence tests).  Sub-threshold edges - the
     overwhelming majority on noise candidates - are filtered before collect,
     so driver transfer is bounded by the FREQUENT path structure (boilerplate
     templates), not the corpus.
@@ -744,6 +632,9 @@ def _mine_distributed(
         for cid, gram, support, h0, _ in cand_rows
     }
     n = len(cand_rows[0][1].split(" "))
+    if n >= window:
+        # a seed fills the window: its chains cannot hold the next token
+        raise WindowExhausted(f"seed length {n} reaches window W={window}")
 
     # ---- one-shot path-tree edge aggregation over ALL depths ----
     # When the per-gram occurrence cap sampled a head gram's docs at rate
@@ -938,9 +829,9 @@ def _mine_distributed(
 def phrases_to_df(spark: SparkSession, phrases: list[WCandidate]) -> DataFrame:
     """Canonical result DataFrame (deterministic projection of the CSV sink,
     corpus_miner.cpp:529-561): example_docs = each phrase's `examples`, which
-    `mine` sets on both strategies to the first 2 of the sorted unique doc
-    set (deviation: reference uses hash-set order).  A local relation (see
-    _driver_frame), rows in the sorted order."""
+    `mine` sets to the first 2 of the sorted unique doc set (deviation:
+    reference uses hash-set order).  A local relation (see _driver_frame),
+    rows in the sorted order."""
     data = [(p.text, p.support, len(p.tokens), list(p.examples)[:2]) for p in phrases]
     data.sort(key=lambda r: (-r[1] * r[2], -r[1], r[0]))
     return _driver_frame(spark, data, RESULT_SCHEMA)

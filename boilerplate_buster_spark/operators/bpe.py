@@ -196,7 +196,7 @@ def train_bpe(
     this IS the tokenizer model).  Stops early when the best remaining
     pair falls under ``min_count``.
 
-    strategy='auto' (the miner's precedent): the corpus aggregates to
+    strategy='auto': the corpus aggregates to
     word counts either way (one shuffle); when the VOCABULARY fits
     ``driver_max_vocab`` the k merge rounds run driver-side over the
     collected counts (each distributed round costs ~2 s of fixed job

@@ -111,22 +111,18 @@ def _phrase_set(phrases):
 
 
 def test_driver_and_distributed_strategies_equal(spark):
-    """Both execution strategies must produce identical phrase sets on the
-    reference fixture corpora."""
-    from boilerplate_buster_spark.operators.bloomspan import mine
-
+    """The miner's phrase sets on the reference fixture corpora equal the
+    pure-Python oracle's."""
     for corpus, (md, n) in {"test1": (3, 3), "test-supersimple": (2, 2)}.items():
         df = corpus_df(spark, corpus)
-        a = _phrase_set(mine(spark, df, min_docs=md, ngrams=n, strategy="driver"))
-        b = _phrase_set(mine(spark, df, min_docs=md, ngrams=n, strategy="distributed"))
-        assert a == b, corpus
+        docs = [tokenize(t) for _, t in load_dir_corpus_text(REF_TESTS / corpus)]
+        want = _phrase_set(pyref.bloomspan_mine(docs, min_docs=md, ngrams=n))
+        assert _phrase_set(bloomspan.mine(spark, df, min_docs=md, ngrams=n)) == want, corpus
 
 
 def test_driver_and_distributed_strategies_equal_random_corpus(spark):
-    """Both execution strategies must produce identical phrase sets on a
-    seeded random corpus (no fixture files needed)."""
-    from boilerplate_buster_spark.operators.bloomspan import mine
-
+    """The miner's phrase set on a seeded random corpus equals the
+    pure-Python oracle's (no fixture files needed)."""
     rng = random.Random(99)
     vocab = [f"t{j}" for j in range(12)]
     texts = [" ".join(rng.choice(vocab) for _ in range(rng.randrange(5, 35)))
@@ -134,9 +130,10 @@ def test_driver_and_distributed_strategies_equal_random_corpus(spark):
     df = spark.createDataFrame(
         [(str(i), t) for i, t in enumerate(texts)], ["doc_id", "text"]
     ).select("doc_id", tokens("text").alias("tokens"))
-    a = _phrase_set(mine(spark, df, min_docs=3, ngrams=2, strategy="driver"))
-    b = _phrase_set(mine(spark, df, min_docs=3, ngrams=2, strategy="distributed"))
-    assert a and a == b
+    want = _phrase_set(
+        pyref.bloomspan_mine([tokenize(t) for t in texts], min_docs=3, ngrams=2))
+    got = _phrase_set(bloomspan.mine(spark, df, min_docs=3, ngrams=2))
+    assert want and got == want
 
 
 def test_mine_over_persisted_text_repr_equals_unpersisted(spark):

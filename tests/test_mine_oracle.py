@@ -1,15 +1,15 @@
 """Seeded equivalence suite for the BloomSpan miner, with no fixture files.
 
-Every corpus is generated in plain Python.  On each one the mined rows
-(phrase, freq, length, example_docs) must be identical across:
+Every corpus is generated in plain Python.  On each one the rows ``mine``
+returns (phrase, freq, length, example_docs) must be identical to the
+pure-Python oracle ``pyref.bloomspan_mine``'s:
 
-  * the pure-Python oracle ``pyref.bloomspan_mine``;
-  * ``mine(strategy="driver")`` and ``mine(strategy="distributed")``;
-  * the literal hash IN-set word gate and the packed-bitmap word gate (the
-    bitmap is forced by a ``word_gate_max`` below the frequent vocabulary);
-  * ``max_occs_per_gram=None`` and a cap above every support;
-  * the driver strategy at ``window=4``, shorter than the longest phrase,
-    so it re-gathers at a doubled window.
+  * with ``max_occs_per_gram=None`` and with a cap above every support;
+  * at ``window=4``, shorter than the longest phrase, so the miner
+    retries at a doubled window;
+  * with the candidate set above ``_INSCAN_MAX`` (patched to 0), where
+    the edge scan reads every gram start and the gather joins on the gram
+    string without a broadcast hint.
 
 Corpora: small-vocabulary random texts, which produce support ties in the
 seed order and in the greedy expansion; site/template corpora shaped
@@ -125,28 +125,46 @@ def test_miners_agree_with_pyref(spark, name):
     assert want, name
     kw = dict(min_docs=min_docs, ngrams=ngrams)
     runs = {
-        "driver": dict(strategy="driver", max_occs_per_gram=None),
-        "distributed": dict(strategy="distributed", max_occs_per_gram=None),
-        # the frequent vocabulary is > 1 word on every corpus here
-        "distributed-bitmap-gate": dict(
-            strategy="distributed", max_occs_per_gram=None, word_gate_max=1),
+        "no-cap": dict(max_occs_per_gram=None),
         # no gram has more supporting docs than the corpus has docs
-        "distributed-cap-above-support": dict(
-            strategy="distributed", max_occs_per_gram=len(docs)),
-        "driver-bitmap-gate": dict(
-            strategy="driver", max_occs_per_gram=None, word_gate_max=1),
+        "cap-above-support": dict(max_occs_per_gram=len(docs)),
         # a window shorter than the longest phrase: WindowExhausted, then a
-        # re-gather at 8 (and 16), whose windows end NULL-padded past a
-        # doc's end
-        "driver-window-retry": dict(
-            strategy="driver", max_occs_per_gram=None, window=4),
+        # retry at 8 (and 16), whose chains end NULL-padded past a doc's end
+        "window-retry": dict(max_occs_per_gram=None, window=4),
     }
     for label, extra in runs.items():
         got = _mined_rows(spark, df, **kw, **extra)
         assert got == want, (name, label)
 
 
-@pytest.mark.parametrize("strategy", ["driver", "distributed"])
+def test_inscan_fallback_equals_pyref(spark, monkeypatch):
+    """Above _INSCAN_MAX candidates the gather filter is every gram start:
+    path_edges counts the edges of every position (the driver drops the
+    seeds no candidate has) and gather_windows joins the grams without a
+    broadcast hint.  The rows stay the oracle's."""
+    monkeypatch.setattr(bloomspan, "_INSCAN_MAX", 0)
+    assert " IN (" not in bloomspan._gather_positions([1, 2], 3)
+    make, min_docs, ngrams = CORPORA["sites-s2"]
+    docs = make()
+    df = spark.createDataFrame(
+        list(zip(_names(len(docs)), docs)), "doc_id string, tokens array<string>"
+    )
+    want = _oracle_rows(docs, min_docs, ngrams)
+    assert want
+    got = _mined_rows(spark, df, min_docs=min_docs, ngrams=ngrams,
+                      max_occs_per_gram=None)
+    assert got == want
+
+
+def test_mine_rejects_any_other_strategy(spark):
+    docs = spark.createDataFrame([("d0", ["a", "b"])], "doc_id string, tokens array<string>")
+    for strategy in ("driver", "auto"):
+        with pytest.raises(ValueError, match="distributed"):
+            bloomspan.mine(spark, docs, min_docs=1, ngrams=2, strategy=strategy)
+
+
+# "distributed" is the one value `mine` accepts for strategy
+@pytest.mark.parametrize("strategy", ["distributed"])
 def test_closure_counts_prev_hashes_exactly(spark, monkeypatch, strategy):
     """The backward-closure counter compares preceding-token hashes as
     exact 64-bit ints.  The gathered prev hashes of "x" and "y" are set to
@@ -187,7 +205,7 @@ def test_capped_edges_count_the_gathered_doc_sample(spark):
     df = spark.createDataFrame(
         list(zip(_names(len(docs)), docs)), "doc_id string, tokens array<string>"
     )
-    gate = bloomspan.word_gate(spark, bloomspan._bitmap_words(df, 5).collect(), 2048)
+    gate = bloomspan.word_gate(spark, bloomspan._bitmap_words(df, 5).collect())
     grams, _ = bloomspan.candidate_grams(df, n, 5, gate)
     cand_rows, cands = bloomspan._number_candidates(
         spark, bloomspan._with_seed_hashes(grams, n).collect()
@@ -196,10 +214,14 @@ def test_capped_edges_count_the_gathered_doc_sample(spark):
     gathered = bloomspan.gather_windows(
         df, cands, [r[4] for r in cand_rows], n, window, max_occs_per_gram=cap
     )
+    # the token after each gathered occurrence's seed, from the doc
+    nxt = F.expr(f"try_element_at(tokens, pos + {n + 1})").alias("tok")
     want = {
         (r["cid"], r["tok"]): r["docs"]
-        for r in gathered.filter(f"s{n + 1} IS NOT NULL")
-        .groupBy("cid", F.col(f"s{n + 1}").alias("tok"))
+        for r in gathered.join(df, "doc_id")
+        .select("cid", "doc_id", nxt)
+        .filter("tok IS NOT NULL")
+        .groupBy("cid", "tok")
         .agg(F.countDistinct("doc_id").alias("docs"))
         .collect()
     }

@@ -47,9 +47,7 @@ def test_failed_mine_releases_every_cache(spark, monkeypatch, where):
     stats: dict = {}
     with pytest.raises(RuntimeError, match="injected failure"):
         bloomspan.mine(
-            spark, docs, min_docs=3, ngrams=3, strategy="distributed",
-            word_gate_max=1,  # bitmap word gate
-            stats=stats,
+            spark, docs, min_docs=3, ngrams=3, stats=stats,
         )
     assert _persistent_rdds(spark) == before
     json.dumps(stats)  # no live Observation left behind
@@ -60,7 +58,7 @@ def test_window_retry_releases_every_cache(spark):
     before = _persistent_rdds(spark)
     stats: dict = {}
     out = bloomspan.mine(
-        spark, docs, min_docs=3, ngrams=3, strategy="distributed",
+        spark, docs, min_docs=3, ngrams=3,
         window=4, stats=stats,  # the 9-token phrase needs two retries
     )
     assert [(p.text, p.support) for p in out] == [(" ".join(TEMPLATE), 8)]
@@ -72,8 +70,7 @@ def test_mine_runs_under_its_own_job_group(spark):
     sc.setJobGroup("caller-group", "caller work")
     try:
         stats: dict = {}
-        bloomspan.mine(spark, _docs(spark), min_docs=3, ngrams=3,
-                       strategy="distributed", stats=stats)
+        bloomspan.mine(spark, _docs(spark), min_docs=3, ngrams=3, stats=stats)
         assert sc.getLocalProperty("spark.jobGroup.id") == "caller-group"
         assert sc.getLocalProperty("spark.job.description") == "caller work"
         assert sc.statusTracker().getJobIdsForGroup("caller-group") == []

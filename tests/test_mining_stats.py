@@ -1,10 +1,12 @@
 """M5 mining-statistics table (reference bloom_gram_miner.cpp:447-454,
 710-718): seed totals, accepted/rejected + %reduction, phrase counts,
-selection counters - emitted by both mining strategies and committed into
-the pipeline checkpoint snapshot."""
+selection counters - emitted by ``bloomspan.mine`` and committed into the
+pipeline checkpoint snapshot."""
 
 from __future__ import annotations
 
+from boilerplate_buster_spark.core import pyref
+from boilerplate_buster_spark.core.expand import WCandidate, WOcc, expand_windowed
 from boilerplate_buster_spark.operators import bloomspan
 from boilerplate_buster_spark.plans.pipeline import run_extraction_pipeline
 from boilerplate_buster_spark.sources.pages import pages_df_local
@@ -16,13 +18,31 @@ STATS_KEYS = {
 }
 
 
-def _fixture_docs(spark):
+def _fixture_rows():
     boiler = "all rights reserved contact us for details"
     rows = []
     for i in range(12):
         noise = " ".join(f"n{i}x{j}" for j in range(6))
         rows.append((i, f"{noise} {boiler} tail{i}".split(" ")))
-    return spark.createDataFrame(rows, "doc_id long, tokens array<string>")
+    return rows
+
+
+def _fixture_docs(spark):
+    return spark.createDataFrame(_fixture_rows(), "doc_id long, tokens array<string>")
+
+
+def _kernel_stats(docs: list[list[str]], min_docs: int, ngrams: int):
+    """(phrase texts, selection counters) of the oracle's kernel,
+    expand_windowed, over whole-doc windows (as pyref builds them)."""
+    cands = [
+        WCandidate(list(g), s, [WOcc(d, p, docs[d][p - 1] if p else None, docs[d][p:])
+                                for d, p in occs])
+        for g, s, occs in pyref.ngram_candidates(docs, ngrams, min_docs)
+    ]
+    stats: dict = {}
+    out = expand_windowed(cands, min_docs, ngrams,
+                          window=max(map(len, docs)) + 1, stats=stats)
+    return sorted(p.text for p in out), stats
 
 
 def _check(stats, expect_6plus: int):
@@ -35,19 +55,30 @@ def _check(stats, expect_6plus: int):
 
 
 def test_stats_driver_and_distributed_agree(spark):
-    docs = _fixture_docs(spark)
-    out = {}
-    for strat in ("driver", "distributed"):
-        stats: dict = {}
-        phrases = bloomspan.mine(
-            spark, docs, min_docs=10, ngrams=3, strategy=strat, stats=stats
-        )
-        _check(stats, expect_6plus=1)  # the 7-token boilerplate phrase
-        # wall time and job count are per-run facts, not mining statistics
-        assert stats.pop("spark_jobs") > 0
-        assert set(stats.pop("phase_s")) >= {"words", "candidates"}
-        out[strat] = (sorted(p.text for p in phrases), stats)
-    assert out["driver"] == out["distributed"]
+    """mine's phrases and selection counters equal those of the oracle's
+    sequential kernel (expand_windowed) on the same corpus."""
+    stats: dict = {}
+    phrases = bloomspan.mine(spark, _fixture_docs(spark), min_docs=10, ngrams=3,
+                             stats=stats)
+    _check(stats, expect_6plus=1)  # the 7-token boilerplate phrase
+    # wall time and job count are per-run facts, not mining statistics
+    assert stats.pop("spark_jobs") > 0
+    assert set(stats.pop("phase_s")) >= {"words", "candidates"}
+    texts, kernel = _kernel_stats([t for _, t in _fixture_rows()], 10, 3)
+    assert sorted(p.text for p in phrases) == texts
+    assert {k: stats[k] for k in kernel} == kernel
+    assert set(kernel) == {"selection_skipped_covered", "selection_dropped_closure"}
+
+
+def test_stats_keys_when_no_candidate_survives(spark):
+    """A mine that finds no candidate gram still reports every key."""
+    stats: dict = {}
+    assert bloomspan.mine(spark, _fixture_docs(spark), min_docs=13, ngrams=3,
+                          stats=stats) == []
+    assert STATS_KEYS <= set(stats), sorted(STATS_KEYS - set(stats))
+    assert stats["candidates_after_merge"] == stats["phrases_total"] == 0
+    assert stats["selection_skipped_covered"] == stats["selection_dropped_closure"] == 0
+    assert stats["occ_cap_sampled_grams"] == 0
 
 
 def test_pipeline_snapshot_carries_mining_stats(spark, tmp_path):
@@ -90,8 +121,7 @@ def test_capped_sampling_scales_expansion_threshold(spark):
     docs = spark.createDataFrame(rows, "doc_id long, tokens array<string>")
     stats: dict = {}
     phrases = bloomspan.mine(
-        spark, docs, min_docs=20, ngrams=3, strategy="distributed",
-        max_occs_per_gram=8, stats=stats,
+        spark, docs, min_docs=20, ngrams=3, max_occs_per_gram=8, stats=stats,
     )
     assert stats["occ_cap_sampled_grams"] >= 1
     texts = {p.text for p in phrases}

@@ -43,9 +43,7 @@ def test_cap_binds_on_the_gathered_rows(spark, corpus):
     """Direct branch assertion: the per-gram doc-sampling filter drops
     rows on this corpus (not just 'the flag was set')."""
     # the word gate, candidate collect and numbering `mine` runs
-    gate = bloomspan.word_gate(
-        spark, bloomspan._bitmap_words(corpus, MIN_DOCS).collect(), 2048
-    )
+    gate = bloomspan.word_gate(spark, bloomspan._bitmap_words(corpus, MIN_DOCS).collect())
     grams, _ = bloomspan.candidate_grams(corpus, 3, MIN_DOCS, gate)
     cand_rows, cands = bloomspan._number_candidates(
         spark, bloomspan._with_seed_hashes(grams, 3).collect()
@@ -73,7 +71,6 @@ def test_capped_distributed_matches_exact_run(spark, corpus):
         corpus,
         min_docs=MIN_DOCS,
         ngrams=3,
-        strategy="distributed",
         max_occs_per_gram=None,
         stats=stats_exact,
     )
@@ -83,7 +80,6 @@ def test_capped_distributed_matches_exact_run(spark, corpus):
         corpus,
         min_docs=MIN_DOCS,
         ngrams=3,
-        strategy="distributed",
         max_occs_per_gram=CAP,
         stats=stats_cap,
     )

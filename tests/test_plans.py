@@ -45,25 +45,23 @@ def test_ngram_df_dedups_before_shuffle(spark):
     assert plan.count("HashAggregate") >= 2
 
 
-def _word_gate(spark, docs, min_docs, word_gate_max):
+def _word_gate(spark, docs, min_docs):
     """The gate `mine` builds, from the same word-gate collect."""
-    probe = bloomspan._bitmap_words(docs, min_docs).collect()
-    return bloomspan.word_gate(spark, probe, word_gate_max)
+    return bloomspan.word_gate(spark, bloomspan._bitmap_words(docs, min_docs).collect())
 
 
 def test_candidate_grams_dedup_and_gate_before_shuffle(spark):
     docs = toy_docs(spark)
-    gate = _word_gate(spark, docs, 1, 2048)
-    assert isinstance(gate, list)  # the literal hash IN-set
-    plan = explain_str(bloomspan.candidate_grams(docs, 2, 1, gate)[0], mode="simple")
+    plan = explain_str(bloomspan.candidate_grams(docs, 2, 1, _word_gate(spark, docs, 1))[0],
+                       mode="simple")
     # distinct-doc support WITHOUT a distinct-aggregate rewrite: per-doc
     # array_distinct collapses repeats map-side, the agg is a plain count
     # with partial aggregation before the exchange
     assert "array_distinct" in plan
     assert plan.count("HashAggregate") >= 2
     assert "partial_count" in plan or "count(1)" in plan
-    # the reference's word-DF gate (P3) runs inside the scan: per-token
-    # xxhash64 membership materialized once as the _ok boolean array
+    # the reference's word-DF gate (P3) runs inside the scan: both xxhash64
+    # bitmap probes per token, materialized once as the _ok boolean array
     assert "xxhash64" in plan
     assert "_ok" in plan
 
@@ -88,7 +86,7 @@ def test_edge_aggregate_is_one_exchange_over_no_cache(spark, monkeypatch):
         [(f"d{i}", [f"a{i}"] + tpl + [f"b{i}"] + tpl[:4]) for i in range(6)],
         "doc_id string, tokens array<string>",
     )
-    out = bloomspan.mine(spark, docs, min_docs=3, ngrams=3, strategy="distributed")
+    out = bloomspan.mine(spark, docs, min_docs=3, ngrams=3)
     assert [p.text for p in out] == [" ".join(tpl)]
     assert len(plans) == 1
     assert plans[0].count("Exchange hashpartitioning") == 1
@@ -160,8 +158,8 @@ def test_strip_pass_from_raw_pages_is_one_map(spark):
 
 def test_word_bitmap_gate_stays_jvm_side(spark):
     docs = toy_docs(spark)
-    bm = _word_gate(spark, docs, 1, 0)  # 4 frequent words > 0: the bitmap
-    plan = explain_str(bloomspan.candidate_grams(docs, 2, 1, bm)[0], mode="simple")
+    plan = explain_str(bloomspan.candidate_grams(docs, 2, 1, _word_gate(spark, docs, 1))[0],
+                       mode="simple")
     # broadcast the 1-row bitmap; probes are shift/and expressions in the
     # scan projection - no Python, no shuffle before the gram aggregate
     assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan

@@ -1,7 +1,6 @@
-"""P3 word-DF gate at scale: when the frequent-word set exceeds
-word_gate_max, mining must switch to the broadcast packed-bitmap gate +
-distributed winner resolution (no unbounded driver collect) and produce the
-IDENTICAL phrase set as the literal IN-set/dict path."""
+"""P3 word-DF gate: mining gates words through the broadcast packed bitmap
+(no unbounded driver collect), at any vocabulary size, and produces the
+IDENTICAL phrase set as the pure-Python oracle."""
 
 from __future__ import annotations
 
@@ -9,12 +8,13 @@ import random
 
 from pyspark.sql import functions as F
 
+from boilerplate_buster_spark.core import pyref
 from boilerplate_buster_spark.operators import bloomspan
 
 
 def _big_vocab_corpus(seed=11, n_pool=2200, n_docs=44, n_template_docs=10):
     """Every pool word appears in EXACTLY 2 docs (so min_docs=2 makes the
-    whole pool frequent -> frequent-word set > the 2048 gate cap), at random
+    whole pool of 2,200 words frequent), at random
     positions (so noise bigrams are mostly support-1); a fixed template is
     injected into n_template_docs docs and is the expected dominant phrase."""
     rng = random.Random(seed)
@@ -41,12 +41,8 @@ def test_bitmap_gate_path_equals_dict_gate_path(spark):
         [(i, toks) for i, toks in enumerate(docs)],
         "doc_id long, tokens array<string>",
     )
-    # force the distributed strategy on both sides so the bitmap path's
-    # distributed winner resolution is exercised too
-    kw = dict(min_docs=2, ngrams=2, strategy="distributed")
-    via_bitmap = bloomspan.mine(spark, df, word_gate_max=2048, **kw)
-    via_dict = bloomspan.mine(spark, df, word_gate_max=10**9, **kw)
-    assert _rows(via_bitmap) == _rows(via_dict)
+    via_bitmap = bloomspan.mine(spark, df, min_docs=2, ngrams=2)
+    assert _rows(via_bitmap) == _rows(pyref.bloomspan_mine(docs, min_docs=2, ngrams=2))
     texts = {p.text for p in via_bitmap}
     assert "alpha beta gamma delta epsilon" in texts
 
@@ -57,8 +53,8 @@ def test_packed_bitmap_has_no_false_negatives(spark):
     docs = spark.createDataFrame(
         list(enumerate([w] for w in words)), "doc_id long, tokens array<string>"
     )
-    # the word-gate collect and gate `mine` runs; 3000 words > 2048: bitmap
-    bm = bloomspan.word_gate(spark, bloomspan._bitmap_words(docs, 1).collect(), 2048)
+    # the word-gate collect and gate `mine` runs
+    bm = bloomspan.word_gate(spark, bloomspan._bitmap_words(docs, 1).collect())
     probe = bloomspan._bitmap_probe("x")
     out = (
         fw_df.crossJoin(F.broadcast(bm))
@@ -69,8 +65,8 @@ def test_packed_bitmap_has_no_false_negatives(spark):
 
 
 def test_small_vocab_probe_does_not_trigger_bitmap(spark):
-    # below the cap the limit-probe collects the full set -> dict path; the
-    # mined output is the same either way (sanity on the probe plumbing)
+    # a frequent vocabulary of 8 words gates through the same bitmap as a
+    # large one (sanity on the probe plumbing at the small end)
     df = spark.createDataFrame(
         [(i, ("the quick brown fox jumps over the lazy dog num%d" % i).split())
          for i in range(8)],
@@ -89,13 +85,11 @@ def test_occurrence_cap_binding_still_mines_phrase(spark):
     rows = [(i, [f"a{i}", f"b{i}"] + boiler + [f"c{i}"]) for i in range(300)]
     df = spark.createDataFrame(rows, "doc_id long, tokens array<string>")
     capped = bloomspan.mine(
-        spark, df, min_docs=20, ngrams=3,
-        strategy="distributed", max_occs_per_gram=60,
+        spark, df, min_docs=20, ngrams=3, max_occs_per_gram=60,
     )
     assert [p.text for p in capped] == ["one two three four five"]
     assert 20 <= capped[0].support <= 300
     exact = bloomspan.mine(
-        spark, df, min_docs=20, ngrams=3,
-        strategy="distributed", max_occs_per_gram=None,
+        spark, df, min_docs=20, ngrams=3, max_occs_per_gram=None,
     )
     assert [(p.text, p.support) for p in exact] == [("one two three four five", 300)]
