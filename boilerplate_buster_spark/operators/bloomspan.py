@@ -10,23 +10,30 @@ one code path, one Spark action per step:
        into the scan (word_gate)                             [shuffles #1-2]
     -> candidate grams: word-gated per-doc-distinct n-gram
        counts, threshold support >= min_docs; ONE collect
-       also carries each gram's seed chain hash and in-scan
-       gather hash, and the driver numbers the grams         [shuffle #3;
+       also carries each gram's seed chain hash and the two
+       bitmap bits of its gather hash; the driver numbers the
+       grams and packs the bits into the gather gate, a
+       second broadcast bitmap (_number_candidates)          [shuffle #3;
        post-threshold set is corpus-statistics bounded: boilerplate
        TEMPLATES, not corpus rows]
     -> greedy expansion: ONE path-tree edge aggregation over
        all depths (path_edges): each doc row builds and
-       dedups its own edges from an in-scan hash IN-set filter,
-       then count(*) keyed by the next token's string,
-       HAVING sup >= min_docs before collect                  [shuffle #4]
+       dedups its own edges from its occurrences
+       (_occurrences: gate-probed gram starts, window chains,
+       the capped-gram doc sample), then count(*) keyed by
+       the next token's string, HAVING sup >= min_docs
+       before collect                                         [shuffle #4]
     -> driver walk: max-support frequent edges from each seed hash
     -> occurrence transfer: ONE Arrow transfer of per-occurrence
-       (cid, doc, pos, prev hash, is_final) from the gather
-       (gather_windows: the same in-scan filter, flat layout
-       (cid, doc_id, pos, prev_h, c1..cW))                   [NO shuffle]
+       (cid, doc_id, pos, prev hash, is_final) from the same
+       occurrences, joined on their seed hash to the walk's
+       (seed, cid, final length, final hash) frame
+       (gather_windows)                                       [NO shuffle]
     -> sequential selection: score order + occupancy bitmask
        + backward closure on (cid, doc, pos) integer tuples   [driver, numpy]
-    (no cache: the edge scan and the transfer each read the corpus)
+    (no cache: the edge scan and the transfer each read the corpus; the
+    candidates reach both scans as broadcast frames - the one literal left
+    is the support map of the grams the occurrence cap samples)
 
 `prev` (the backward-closure input) is the 64-bit hash of the token before
 the occurrence, so two distinct preceding tokens can only be taken for one
@@ -81,19 +88,20 @@ RESULT_SCHEMA = T.StructType(
 )
 # schemas of the frames the miner builds on the driver (see _driver_frame)
 _BITMAP_SCHEMA = T.StructType([T.StructField("bf", T.ArrayType(T.LongType()))])
-_CANDS_SCHEMA = T.StructType([
+_FINALS_SCHEMA = T.StructType([
+    T.StructField("seed", T.LongType()),
     T.StructField("cid", T.IntegerType()),
-    T.StructField("gram", T.StringType()),
-    T.StructField("support", T.LongType()),
+    T.StructField("flen", T.IntegerType()),
+    T.StructField("fh", T.LongType()),
 ])
 
 
 def _driver_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
     """A frame of driver-side rows (they come from Spark results, so no
     per-row schema verification).  Built from a pyarrow Table, the frame is
-    a local relation - an empty one too - so reading or broadcasting it runs
-    no Spark job; a row list would be parallelized and unpickled by Python
-    workers in a job of its own."""
+    a local relation - an empty one too - so reading it runs no Spark job
+    (a broadcast of it, under AQE, is a short job of its own); a row list
+    would be parallelized and unpickled by Python workers in a job."""
     import pyarrow as pa
     from pyspark.sql.pandas.types import to_arrow_schema
 
@@ -106,8 +114,8 @@ def _driver_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) 
 def _gramhash_sql(hs_ref: str, i: str, n: int) -> str:
     """Order-sensitive combine of n consecutive 64-bit token hashes
     (xor of per-position rotations) - used for in-scan candidate membership;
-    collisions only ADD occurrence rows, removed by the exact gram-string
-    join right after."""
+    collisions only ADD occurrence rows, whose seed chain hash no candidate
+    has."""
     terms = []
     for k in range(n):
         e = f"element_at({hs_ref}, {i} + {k})"
@@ -119,6 +127,14 @@ def _gramhash_sql(hs_ref: str, i: str, n: int) -> str:
 BITMAP_BITS = 1 << 22  # 4 Mbit -> 512 KiB packed; fpr ~ vocab/bits per probe
 
 
+def _bitmap_bits(x: str, n_bits: int | str | None = None) -> list[str]:
+    """SQL: the two bit indices of value `x` (an SQL expression, string or
+    bigint) in a packed Bloom bitmap of `n_bits` bits (default BITMAP_BITS)
+    - the bits a gate sets, and the bits `_bitmap_probe` tests."""
+    m = BITMAP_BITS if n_bits is None else n_bits
+    return [f"pmod(xxhash64({x}), {m})", f"pmod(xxhash64({x}, 7), {m})"]
+
+
 def _bitmap_words(docs: DataFrame, min_docs: int) -> DataFrame:
     """(idx, v): the 2-probe Bloom bitmap over the words in >= min_docs
     docs, grouped by its 64-bit words - the one word-gate collect, whose
@@ -126,14 +142,24 @@ def _bitmap_words(docs: DataFrame, min_docs: int) -> DataFrame:
     most BITMAP_BITS//64 rows, whatever the vocabulary size."""
     from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
 
-    b1, b2 = f"pmod(xxhash64(word), {BITMAP_BITS})", f"pmod(xxhash64(word, 7), {BITMAP_BITS})"
     return (
         word_doc_freq(docs)
         .filter(F.col("df") >= min_docs)
-        .select(F.explode(F.expr(f"array({b1}, {b2})")).alias("bit"))
+        .select(F.explode(F.expr(f"array({', '.join(_bitmap_bits('word'))})")).alias("bit"))
         .groupBy(F.expr("shiftright(bit, 6)").alias("idx"))
         .agg(F.expr("bit_or(shiftleft(CAST(1 AS bigint), CAST(bit & 63 AS int)))").alias("v"))
     )
+
+
+def _bitmap_frame(spark: SparkSession, n_bits: int, idx, v) -> DataFrame:
+    """The packed bitmap of `n_bits` bits whose 64-bit word idx[k] has the
+    bits v[k] set (or'ed over repeated words), as a one-row
+    `bf array<bigint>` frame."""
+    import numpy as np
+
+    packed = np.zeros(n_bits // 64, dtype=np.int64)
+    np.bitwise_or.at(packed, np.asarray(idx, dtype=np.int64), np.asarray(v, dtype=np.int64))
+    return _driver_frame(spark, [(packed,)], _BITMAP_SCHEMA)
 
 
 def word_gate(spark: SparkSession, probe: list) -> DataFrame:
@@ -148,28 +174,19 @@ def word_gate(spark: SparkSession, probe: list) -> DataFrame:
     full word collect), the driver places them.  False positives only ADD
     candidate grams; the exact support threshold keeps the mined set
     exact."""
-    import numpy as np
-
-    packed = np.zeros(BITMAP_BITS // 64, dtype=np.int64)
-    if probe:
-        packed[np.array([r["idx"] for r in probe], dtype=np.int64)] = np.array(
-            [r["v"] for r in probe], dtype=np.int64
-        )
-    return _driver_frame(spark, [(packed,)], _BITMAP_SCHEMA)
+    return _bitmap_frame(spark, BITMAP_BITS, [r["idx"] for r in probe], [r["v"] for r in probe])
 
 
 def _bitmap_probe(x: str) -> str:
-    """SQL predicate: token `x` passes both bitmap probes (bf column in scope).
-    shiftright on bigint is arithmetic, which still lands the target bit at
-    position 0 before the & 1 mask - bit 63 included."""
-    tests = []
-    for probe in ("xxhash64(x)", "xxhash64(x, 7)"):
-        h = f"pmod({probe}, {BITMAP_BITS})"
-        tests.append(
-            f"((shiftright(element_at(bf, cast(shiftright({h}, 6) AS int) + 1), "
-            f"cast({h} & 63 AS int)) & 1) = 1)"
-        )
-    return " AND ".join(tests)
+    """SQL predicate: value `x` (an SQL expression) passes both probes of
+    the bitmap bf (in scope), at bf's own size.  shiftright on bigint is
+    arithmetic, which still lands the target bit at position 0 before the
+    & 1 mask - bit 63 included."""
+    return " AND ".join(
+        f"((shiftright(element_at(bf, cast(shiftright({b}, 6) AS int) + 1), "
+        f"cast({b} & 63 AS int)) & 1) = 1)"
+        for b in _bitmap_bits(x, "size(bf) * 64")
+    )
 
 
 def candidate_grams(
@@ -219,55 +236,47 @@ def candidate_grams(
 
 
 def _with_seed_hashes(cands: DataFrame, n: int) -> DataFrame:
-    """(gram, support, h0, gh): the candidate collect.  h0 is the rolling
-    seed hash (the chain value of the gram itself), gh the in-scan gather
-    hash (_gramhash_sql over the gram's token hashes)."""
+    """(gram, support, h0, bits): the candidate collect.  h0 is the rolling
+    seed hash (the chain value of the gram itself), bits the two bitmap bits
+    (`_bitmap_bits`) of the in-scan gather hash (_gramhash_sql over the
+    gram's token hashes): the same SQL the scans' gate probe runs, so the
+    driver never hashes anything itself."""
+    gh = _gramhash_sql("_hs", "1", n)
     return cands.select(
         "gram", "support",
         F.expr("transform(split(gram, ' '), x -> xxhash64(x))").alias("_hs"),
     ).select(
         "gram", "support",
         F.expr("aggregate(_hs, cast(0 AS bigint), (acc, h) -> xxhash64(acc, h))").alias("h0"),
-        F.expr(_gramhash_sql("_hs", "1", n)).alias("gh"),
+        F.expr(f"array({', '.join(_bitmap_bits(gh))})").alias("bits"),
     )
 
 
 def _number_candidates(spark: SparkSession, rows: list) -> tuple[list[tuple], DataFrame]:
-    """(cid, gram, support, h0, gh) per collected `_with_seed_hashes` row,
-    cid = rank in gram order, and the (cid, gram, support) frame that
-    gather_windows joins."""
-    cand_rows = [(cid, *r) for cid, r in enumerate(sorted(rows), start=1)]
-    return cand_rows, _driver_frame(spark, [r[:3] for r in cand_rows], _CANDS_SCHEMA)
+    """(cid, gram, support, h0) per collected `_with_seed_hashes` row, cid =
+    rank in gram order, and the gather gate: the packed bitmap of their
+    gather-hash bits.  It has 64 bits per candidate (~0.1% false positives
+    per gram start) up to BITMAP_BITS, since Spark copies it with every doc
+    row the scans' lambdas read; a bit at BITMAP_BITS, masked to a smaller
+    power of two, is the bit at that size."""
+    import numpy as np
 
-
-#: candidate sets up to this size are found by a literal hash IN-set in the
-#: doc scan; a larger one would hit the plan-size limit
-_INSCAN_MAX = 65536
-
-
-def _gather_positions(cand_hashes: list[int], n: int) -> str:
-    """SQL: the 1-based gram starts of `tokens` whose in-scan gather hash
-    (``_gramhash_sql`` over the per-token hashes `_hs`) is a candidate's -
-    the one occurrence filter of gather_windows and path_edges.  Per-token
-    hashes are computed once per doc and compared as longs (string IN-lists
-    are linear scans in codegen; long compares are ~free).  Hash false
-    positives only ADD positions.  Above _INSCAN_MAX candidates: every
-    gram start."""
-    all_pos = gram_starts("tokens", n)
-    if len(cand_hashes) > _INSCAN_MAX:
-        return all_pos
-    hset = ", ".join(str(h) for h in cand_hashes) or "0"
-    return f"filter({all_pos}, i -> ({_gramhash_sql('_hs', 'i', n)}) IN ({hset}))"
+    rows = sorted(rows)
+    n_bits = min(BITMAP_BITS, 1 << max(6, (64 * len(rows) - 1).bit_length()))
+    bits = np.array([b for r in rows for b in r["bits"]], dtype=np.int64) & (n_bits - 1)
+    gate = _bitmap_frame(spark, n_bits, bits >> 6, np.int64(1) << (bits & 63))
+    return [(cid, r["gram"], r["support"], r["h0"]) for cid, r in enumerate(rows, start=1)], gate
 
 
 def _doc_sample_sql(support: str, cap: int) -> str:
     """SQL predicate: keep a doc's occurrences of a gram of `support`
     distinct docs iff hash_frac(doc_id) < cap/support - deterministic
-    per-gram DOC sampling, so every scan that applies it (gather_windows,
-    path_edges) sees one doc subsample.  Expected docs kept per gram ~ cap;
-    a gram at or under the cap (or `support` 0) keeps everything.  A pure
-    in-scan filter: a row_number() window partitioned by gram is a skew
-    hotspot (few keys, corpus-sized partitions) exactly when the cap binds."""
+    per-gram DOC sampling, applied once in `_occurrences`, so both scans
+    (path_edges, gather_windows) see one doc subsample.  Expected docs kept
+    per gram ~ cap; a gram at or under the cap (or `support` 0) keeps
+    everything.  A pure in-scan filter: a row_number() window partitioned by
+    gram is a skew hotspot (few keys, corpus-sized partitions) exactly when
+    the cap binds."""
     m = 1 << 20
     return f"pmod(xxhash64(doc_id), {m}) * {support} < cast({cap} AS bigint) * {m}"
 
@@ -282,8 +291,48 @@ def _chain_sql(hs_ref: str, i: str, window: int) -> str:
     )
 
 
+def _occurrences(
+    docs: DataFrame,
+    gate: DataFrame,
+    cand_rows: list,
+    n: int,
+    window: int,
+    max_occs_per_gram: int | None,
+) -> tuple[DataFrame, str]:
+    """The doc scan (doc_id, tokens, _hs, bf) and the SQL expression, over
+    it, of each doc's candidate occurrences, array<struct<i, ch>> - the one
+    occurrence expression of path_edges and gather_windows: the gram starts
+    i whose gather hash (`_gramhash_sql` over the token hashes _hs) passes
+    both probes of the gate bitmap bf, each with its window chain ch
+    (`_chain_sql`; element n+1 is the seed hash c_n), and for a candidate
+    over `max_occs_per_gram` only its doc sample (`_doc_sample_sql`, the
+    support looked up by seed hash).  False positives only ADD occurrences
+    whose seed hash is no candidate's.  An expression, not a column: Spark
+    infers a non-empty filter for an explode of a column and pushes it
+    below the projection as a second copy of the expression."""
+    t = "tokens"
+    occs = (
+        f"transform(filter({gram_starts(t, n)}, "
+        f"i -> {_bitmap_probe(_gramhash_sql('_hs', 'i', n))}), "
+        f"i -> named_struct('i', i, 'ch', {_chain_sql('_hs', 'i', window)}))"
+    )
+    cap = max_occs_per_gram
+    capped = [(h0, s) for _, _, s, h0 in cand_rows if cap is not None and s > cap]
+    if capped:
+        # the capped grams' supports by seed hash; every other gram (and a
+        # false positive) reads 0 and keeps all its docs
+        sup_map = ", ".join(f"{h}L, {s}L" for h, s in capped)
+        sup = f"coalesce(try_element_at(map({sup_map}), element_at(o.ch, {n + 1})), 0L)"
+        occs = f"filter({occs}, o -> {_doc_sample_sql(sup, cap)})"
+    scan = docs.selectExpr(
+        "doc_id", t, f"transform({t}, x -> xxhash64(x)) AS _hs"
+    ).crossJoin(F.broadcast(gate))
+    return scan, occs
+
+
 def path_edges(
     docs: DataFrame,
+    gate: DataFrame,
     cand_rows: list,
     n: int,
     window: int,
@@ -298,29 +347,13 @@ def path_edges(
     last token is tok, for d = n .. window-1; seed = c_n is the candidate's
     seed chain hash (h0 of its `_with_seed_hashes` row).
 
-    ONE exchange.  Each doc row builds its own edges before any explode:
-    its positions that pass the gather filter (`_gather_positions` over
-    `cand_rows`' gather hashes), the window chain of each, and
-    the capped grams' doc sample (`_doc_sample_sql`).  nxt hashes the whole
-    path, so it fixes the edge: sorting the row's edges by nxt and dropping
-    adjacent repeats leaves each edge once per doc, and a plain count(*) is
-    the distinct-doc support.  Gather-hash false positives carry a seed
-    hash that no candidate has; the caller drops those edges."""
-    t = "tokens"
-    occs = (
-        f"transform({_gather_positions([r[4] for r in cand_rows], n)}, "
-        f"i -> named_struct('i', i, 'ch', {_chain_sql('_hs', 'i', window)}))"
-    )
-    capped = [
-        (r[3], r[2]) for r in cand_rows
-        if max_occs_per_gram is not None and r[2] > max_occs_per_gram
-    ]
-    if capped:
-        # the capped grams' supports by seed hash; every other gram (and a
-        # false positive) reads 0 and keeps all its docs
-        sup_map = ", ".join(f"{h}L, {s}L" for h, s in capped)
-        sup = f"coalesce(try_element_at(map({sup_map}), element_at(o.ch, {n + 1})), 0L)"
-        occs = f"filter({occs}, o -> {_doc_sample_sql(sup, max_occs_per_gram)})"
+    ONE exchange.  Each doc row builds its own edges from its occurrences
+    (`_occurrences`) before any explode.  nxt hashes the whole path, so it
+    fixes the edge: sorting the row's edges by nxt and dropping adjacent
+    repeats leaves each edge once per doc, and a plain count(*) is the
+    distinct-doc support.  False-positive occurrences carry a seed hash
+    that no candidate has; the caller drops those edges."""
+    scan, occs = _occurrences(docs, gate, cand_rows, n, window, max_occs_per_gram)
     # c_k is element k+1 of a chain; a depth d has an edge while the chain
     # holds c_{d+1}
     edges = (
@@ -328,11 +361,10 @@ def path_edges(
         f"filter(sequence({n}, {window - 1}), d -> d + 2 <= size(o.ch)), "
         f"d -> named_struct('nxt', element_at(o.ch, d + 2), "
         f"'seed', element_at(o.ch, {n + 1}), 'd', d, "
-        f"'cur', element_at(o.ch, d + 1), 'tok', element_at({t}, o.i + d)))))"
+        f"'cur', element_at(o.ch, d + 1), 'tok', element_at(tokens, o.i + d)))))"
     )
     return (
-        docs.selectExpr("doc_id", t, f"transform({t}, x -> xxhash64(x)) AS _hs")
-        .selectExpr(f"array_sort({edges}) AS _e")
+        scan.selectExpr(f"array_sort({edges}) AS _e")
         .selectExpr(
             "explode(filter(_e, (e, k) -> k = 0 OR e.nxt != element_at(_e, k).nxt)) AS e"
         )
@@ -347,65 +379,38 @@ def path_edges(
 
 def gather_windows(
     docs: DataFrame,
-    cands: DataFrame,
-    cand_hashes: list[int],
+    gate: DataFrame,
+    cand_rows: list,
+    finals: list[tuple],
     n: int,
     window: int,
     max_occs_per_gram: int | None = None,
 ) -> DataFrame:
-    """Per-occurrence rows for every candidate gram, in one flat layout:
-    (cid, doc_id, pos, prev_h, c1..cW).
-
-    `cands` is the (cid, gram, support) frame and `cand_hashes` the in-scan
-    gather hashes of its grams (``_gramhash_sql`` over each gram's token
-    hashes), both from the one candidate collect (`_number_candidates`).
-
-    ZERO shuffles on the main path: the candidate set is corpus-statistics
-    small (post-threshold boilerplate templates), so occurrence discovery is
-    a literal IN-set filter INSIDE the doc scan (`_gather_positions`) - one
-    codegen pass over the corpus, chains hashed in place, then a broadcast
-    map-side join attaches cid/support.  A candidate set above _INSCAN_MAX
-    falls back to every position and a shuffle join on gram.
-
-    prev_h = xxhash64 of the token before the occurrence, NULL at pos 0
-    (backward-closure input, ":675-695"); c<i> = rolling prefix hash of the
-    i tokens from the occurrence start, NULL past the doc's end (the
-    final-occurrence flag).
-    """
-    t = "tokens"
-    # the exact gram-string join drops the gather filter's hash false
-    # positives; a huge candidate set (every position) shuffle-joins on
-    # gram (AQE handles skew)
-    build = F.broadcast(cands) if len(cand_hashes) <= _INSCAN_MAX else cands
-    occ = (
-        docs.selectExpr("doc_id", t, f"transform({t}, x -> xxhash64(x)) AS _hs")
+    """(cid, doc_id, pos, prev_h, is_final) per occurrence of a candidate:
+    `_occurrences`' rows (path_edges counts the same), joined on their seed
+    hash c_n to `finals`, one (seed, cid, flen, fh) row per candidate - the
+    length and chain hash of its final phrase after the walk.  The join
+    drops false positives; Spark plans it from the size of the local frame
+    (a broadcast hash join under autoBroadcastJoinThreshold).  is_final:
+    c_flen = fh.  pos is 0-based; prev_h = xxhash64 of the token before,
+    NULL at pos 0 (backward-closure input, ":675-695")."""
+    scan, occs = _occurrences(docs, gate, cand_rows, n, window, max_occs_per_gram)
+    fin = _driver_frame(docs.sparkSession, finals, _FINALS_SCHEMA)
+    return (
+        scan.selectExpr("doc_id", "_hs", f"explode({occs}) AS o")
         .selectExpr(
-            "doc_id", t, "_hs", f"explode({_gather_positions(cand_hashes, n)}) AS ipos"
+            "doc_id", "_hs", "o.i AS ipos", "o.ch AS ch", f"element_at(o.ch, {n + 1}) AS seed"
         )
+        .join(fin, "seed")
         .selectExpr(
-            "doc_id", t, "_hs", "ipos", "ipos - 1 AS pos",
-            f"array_join(slice({t}, ipos, {n}), ' ') AS gram",
+            "cid",
+            "CAST(doc_id AS STRING) AS doc_id",
+            "ipos - 1 AS pos",
+            # element_at is 1-based: index ipos - 1 is the token before
+            "IF(ipos > 1, element_at(_hs, ipos - 1), NULL) AS prev_h",
+            # a chain shorter than the final phrase is no final occurrence
+            "coalesce(try_element_at(ch, flen + 1) = fh, false) AS is_final",
         )
-        .join(build, "gram")
-    )
-    if max_occs_per_gram is not None:
-        # the EXACT distinct-doc support from the candidate aggregate is
-        # already joined in
-        occ = occ.filter(F.expr(_doc_sample_sql("support", max_occs_per_gram)))
-    # FLAT COLUMNS, no arrays: the final-occurrence flag reads the c
-    # columns of the final lengths only - column pruning that an array
-    # column cannot give.  c<i> is the fold of the per-token hashes.
-    # string expressions: one selectExpr parses them all in one call
-    return occ.selectExpr(
-        "cid",
-        "CAST(doc_id AS STRING) AS doc_id",
-        "pos",
-        # pos is 0-based; element_at is 1-based, so index `pos` IS pos-1
-        "IF(pos > 0, element_at(_hs, pos), NULL) AS prev_h",
-        f"slice({_chain_sql('_hs', 'ipos', window)}, 2, {window}) AS _chain",
-    ).selectExpr(
-        "cid", "doc_id", "pos", "prev_h",
-        *(f"try_element_at(_chain, {i}) AS c{i}" for i in range(1, window + 1)),
     )
 
 
@@ -485,8 +490,11 @@ def mine(
     each doc's edges deduped in its row; sub-threshold edges never leave the
     cluster; each edge carries its token string), the driver's replay of
     the greedy walk over the frequent edges, and one Arrow transfer of the
-    gather for the sequential occupancy-mask selection over integer (gram,
-    doc, pos) tuples.  Nothing is cached: 4 shuffles in all.  A phrase that
+    occurrences (gather_windows) for the sequential occupancy-mask selection
+    over integer (gram, doc, pos) tuples.  The candidates reach both doc
+    scans as broadcast frames: a packed bitmap of their gather hashes gates
+    the gram starts, and the transfer joins the walk's final phrases on the
+    seed hash.  Nothing is cached: 4 shuffles in all.  A phrase that
     outgrows the window W raises WindowExhausted, and the edges and the
     transfer run again at 2W.  `strategy` has the one value "distributed";
     any other raises ValueError.
@@ -495,7 +503,7 @@ def mine(
     frequent-word aggregate grouped by the 64-bit words of the packed Bloom
     bitmap, which `word_gate` places and broadcasts - never a full word
     collect.  Candidate ids are assigned driver-side in gram order after
-    the candidate collect.  Every cache is released on every exit path.
+    the candidate collect, which also brings the gather gate's bits.
 
     `stats` (optional dict) receives the M5 mining-statistics table
     (bloom_gram_miner.cpp:447-454,710-718): seed totals, accepted/rejected,
@@ -521,7 +529,7 @@ def mine(
 
         cands, seeds = candidate_grams(docs, ngrams, min_docs, gate)
         # one tiny collect serves candidate ids, seed supports, the rolling
-        # seed hash and the in-scan gather hash
+        # seed hash and the gather gate's bits
         cand_rows = _with_seed_hashes(cands, ngrams).collect()
         if stats is not None:
             seed_row = seeds.get  # the collect above ran the observed plan
@@ -532,10 +540,10 @@ def mine(
                 seeds_rejected=total - acc,
                 pct_reduction=round(100.0 * (total - acc) / total, 2) if total else 0.0,
             )
-        cand_rows, cands = _number_candidates(spark, cand_rows)
+        cand_rows, gate = _number_candidates(spark, cand_rows)
         clock.lap("candidates")
         if stats is not None:
-            stats.setdefault("candidates_after_merge", len(cand_rows))
+            stats["candidates_after_merge"] = len(cand_rows)
             stats["occ_cap_sampled_grams"] = sum(
                 1
                 for r in cand_rows
@@ -548,14 +556,10 @@ def mine(
                     selection_skipped_covered=0, selection_dropped_closure=0,
                 )
             return []
-        cand_hashes = [r[4] for r in cand_rows]
         while True:
             try:
-                gathered = gather_windows(
-                    docs, cands, cand_hashes, ngrams, window, max_occs_per_gram
-                )
                 out = _mine_distributed(
-                    docs, gathered, cand_rows, min_docs, min_l, window,
+                    docs, gate, cand_rows, min_docs, min_l, window,
                     stats=stats, max_occs_per_gram=max_occs_per_gram,
                     clock=clock,
                 )
@@ -571,7 +575,7 @@ def mine(
 
 def _mine_distributed(
     docs: DataFrame,
-    gathered: DataFrame,
+    gate: DataFrame,
     cand_rows: list,
     min_docs: int,
     min_l: int,
@@ -583,14 +587,16 @@ def _mine_distributed(
 ) -> list[WCandidate]:
     """Distributed greedy expansion + vectorized driver-side mask selection.
 
-    `cand_rows`: (cid, gram, support, h0, gh) per candidate.  Two Spark
-    actions, neither over a cache:
+    `cand_rows`: (cid, gram, support, h0) per candidate; `gate`: their
+    broadcast gather bitmap.  Two Spark actions, neither over a cache, both
+    reading the occurrences of `_occurrences`:
 
       edges: path_edges over `docs` - per-doc deduped path-tree edges,
              count(*) per (seed, d, c_{d+1}, token) HAVING sup >= the
              lowest threshold; ONE exchange      <- noise edges die cluster-side
       occurrences: one Arrow transfer of (cid, doc_id, pos, prev_h,
-             is_final) from `gathered` (the gather_windows plan, recomputed)
+             is_final) from gather_windows, whose seed-hash join takes the
+             walk's final phrases as a (seed, cid, flen, fh) frame
 
     Expansion of a candidate never depends on the occupancy bitmask (the mask
     only gates skip-before/mark-after, bloom_gram_miner.cpp:633-640,697-702),
@@ -627,9 +633,10 @@ def _mine_distributed(
             "tokens": gram.split(" "),
             "support": support,
             "seed_support": support,
+            "seed": h0,
             "h": h0,
         }
-        for cid, gram, support, h0, _ in cand_rows
+        for cid, gram, support, h0 in cand_rows
     }
     n = len(cand_rows[0][1].split(" "))
     if n >= window:
@@ -642,29 +649,24 @@ def _mine_distributed(
     # subsample - so the frequency threshold is applied to the UNBIASED
     # estimate sup * support / cap >= min_docs, i.e. the per-cid
     # threshold DROPS to ceil(min_docs * cap / support) for capped grams.
-    # Comparing sampled supports against the raw min_docs (the round-2
-    # behavior) made a head gram's continuation survive only at
-    # ~support/cap times the intended df - silently truncating greedy
-    # expansion.  The cluster filters at the lowest threshold; the exact
-    # per-cid one applies below.
+    # The cluster filters at the lowest threshold; the exact per-cid one
+    # applies below.
     cap = max_occs_per_gram
     capped_sup = {
-        cid: support
-        for cid, _, support, _, _ in cand_rows
-        if cap is not None and support > cap
+        cid: support for cid, _, support, _ in cand_rows if cap is not None and support > cap
     }
     thr_by_cid = {
         cid: max(1, -(-min_docs * cap // sup)) for cid, sup in capped_sup.items()
     }
     edge_rows = path_edges(
-        docs, cand_rows, n, window, cap, min([min_docs, *thr_by_cid.values()])
+        docs, gate, cand_rows, n, window, cap, min([min_docs, *thr_by_cid.values()])
     ).collect()
     clock.lap("edges")
 
-    cid_by_seed = {h0: cid for cid, _, _, h0, _ in cand_rows}
+    cid_by_seed = {h0: cid for cid, _, _, h0 in cand_rows}
     by_cur: dict[tuple, list] = defaultdict(list)
     for seed, d, nxt, tok, sup, cur in edge_rows:
-        cid = cid_by_seed.get(seed)  # None: a gather-hash false positive
+        cid = cid_by_seed.get(seed)  # None: a gate false positive
         if cid is not None and sup >= thr_by_cid.get(cid, min_docs):
             by_cur[(cid, d, cur)].append((sup, tok, nxt))
 
@@ -694,27 +696,17 @@ def _mine_distributed(
             st["support"] = min(st["seed_support"], max(min_docs, est))
     clock.lap("walk")
 
-    # ---- flag FINAL occurrences: c_f is a final chain hash of length f.
-    # A path's first n tokens are its candidate's gram, so a hash of one
-    # candidate's final phrase never matches another candidate's
-    # occurrence: one literal hash set per final length, no per-cid
-    # lookup, and only the c columns of lengths that occur are read ----
-    fin_by_len: dict[int, list[int]] = defaultdict(list)
-    for st in state.values():
-        fin_by_len[len(st["tokens"])].append(st["h"])
-    is_final = " OR ".join(
-        f"c{f} IN ({', '.join(f'{h}L' for h in hs)})" for f, hs in sorted(fin_by_len.items())
-    )
-    flagged = gathered.withColumn("is_final", F.coalesce(F.expr(is_final), F.lit(False)))
-
     # single Arrow transfer: (cid, doc_id, pos, prev hash, is_final) - the
     # occurrence rows the sequential selection needs anyway also serve
     # the closure counters AND the canonical example docs, so no further
-    # cluster jobs run after this point.  The nullable BIGINT prev_h
-    # arrives as pandas Int64, exact: float64 (toPandas' default) would
-    # merge hashes that differ only in their low bits.
+    # cluster jobs run after this point.  The walk's final phrase of each
+    # candidate rides in as one (seed, cid, final length, final hash) row.
+    # The nullable BIGINT prev_h arrives as pandas Int64, exact: float64
+    # (toPandas' default) would merge hashes that differ only in their low
+    # bits.
+    finals = [(st["seed"], cid, len(st["tokens"]), st["h"]) for cid, st in state.items()]
     pdf = (
-        flagged.select("cid", "doc_id", "pos", "prev_h", "is_final")
+        gather_windows(docs, gate, cand_rows, finals, n, window, cap)
         .toArrow()
         .to_pandas(types_mapper={pa.int64(): pd.Int64Dtype()}.get)
     )

@@ -110,7 +110,7 @@ def _phrase_set(phrases):
     return {(p.text, p.support, len(p.tokens)) for p in phrases}
 
 
-def test_driver_and_distributed_strategies_equal(spark):
+def test_mine_equals_pyref_on_fixtures(spark):
     """The miner's phrase sets on the reference fixture corpora equal the
     pure-Python oracle's."""
     for corpus, (md, n) in {"test1": (3, 3), "test-supersimple": (2, 2)}.items():
@@ -120,7 +120,7 @@ def test_driver_and_distributed_strategies_equal(spark):
         assert _phrase_set(bloomspan.mine(spark, df, min_docs=md, ngrams=n)) == want, corpus
 
 
-def test_driver_and_distributed_strategies_equal_random_corpus(spark):
+def test_mine_equals_pyref_on_random_corpus(spark):
     """The miner's phrase set on a seeded random corpus equals the
     pure-Python oracle's (no fixture files needed)."""
     rng = random.Random(99)

@@ -7,9 +7,9 @@ pure-Python oracle ``pyref.bloomspan_mine``'s:
   * with ``max_occs_per_gram=None`` and with a cap above every support;
   * at ``window=4``, shorter than the longest phrase, so the miner
     retries at a doubled window;
-  * with the candidate set above ``_INSCAN_MAX`` (patched to 0), where
-    the edge scan reads every gram start and the gather joins on the gram
-    string without a broadcast hint.
+  * with a saturated 64-bit gate bitmap (``BITMAP_BITS`` patched), where
+    nearly every gram start passes both gates and both doc scans must
+    drop the false positives.
 
 Corpora: small-vocabulary random texts, which produce support ties in the
 seed order and in the greedy expansion; site/template corpora shaped
@@ -137,18 +137,39 @@ def test_miners_agree_with_pyref(spark, name):
         assert got == want, (name, label)
 
 
-def test_inscan_fallback_equals_pyref(spark, monkeypatch):
-    """Above _INSCAN_MAX candidates the gather filter is every gram start:
-    path_edges counts the edges of every position (the driver drops the
-    seeds no candidate has) and gather_windows joins the grams without a
-    broadcast hint.  The rows stay the oracle's."""
-    monkeypatch.setattr(bloomspan, "_INSCAN_MAX", 0)
-    assert " IN (" not in bloomspan._gather_positions([1, 2], 3)
+def _gathered_candidates(spark, df, n, min_docs):
+    """The candidate rows and the gather gate `mine` builds: word gate,
+    candidate collect, numbering."""
+    words = bloomspan.word_gate(spark, bloomspan._bitmap_words(df, min_docs).collect())
+    grams, _ = bloomspan.candidate_grams(df, n, min_docs, words)
+    return bloomspan._number_candidates(
+        spark, bloomspan._with_seed_hashes(grams, n).collect()
+    )
+
+
+def _seed_finals(cand_rows, n):
+    """gather_windows' (seed, cid, flen, fh) rows with each candidate's
+    final phrase its seed gram: c_n is the seed hash."""
+    return [(r[3], r[0], n, r[3]) for r in cand_rows]
+
+
+def test_saturated_gate_equals_pyref(spark, monkeypatch):
+    """A 64-bit bitmap is saturated: nearly every gram start passes the
+    word gate and the gather gate, so path_edges counts the edges of seeds
+    no candidate has (the driver walk drops them) and the seed join of
+    gather_windows drops their occurrences.  The rows stay the oracle's."""
+    monkeypatch.setattr(bloomspan, "BITMAP_BITS", 64)
     make, min_docs, ngrams = CORPORA["sites-s2"]
     docs = make()
     df = spark.createDataFrame(
         list(zip(_names(len(docs)), docs)), "doc_id string, tokens array<string>"
     )
+    cand_rows, gate = _gathered_candidates(spark, df, ngrams, min_docs)
+    scan, occs = bloomspan._occurrences(df, gate, cand_rows, ngrams, 16, None)
+    gathered = bloomspan.gather_windows(
+        df, gate, cand_rows, _seed_finals(cand_rows, ngrams), ngrams, 16
+    )
+    assert scan.selectExpr(f"explode({occs})").count() > gathered.count()
     want = _oracle_rows(docs, min_docs, ngrams)
     assert want
     got = _mined_rows(spark, df, min_docs=min_docs, ngrams=ngrams,
@@ -205,14 +226,10 @@ def test_capped_edges_count_the_gathered_doc_sample(spark):
     df = spark.createDataFrame(
         list(zip(_names(len(docs)), docs)), "doc_id string, tokens array<string>"
     )
-    gate = bloomspan.word_gate(spark, bloomspan._bitmap_words(df, 5).collect())
-    grams, _ = bloomspan.candidate_grams(df, n, 5, gate)
-    cand_rows, cands = bloomspan._number_candidates(
-        spark, bloomspan._with_seed_hashes(grams, n).collect()
-    )
+    cand_rows, gate = _gathered_candidates(spark, df, n, 5)
     assert any(r[2] > cap for r in cand_rows)
     gathered = bloomspan.gather_windows(
-        df, cands, [r[4] for r in cand_rows], n, window, max_occs_per_gram=cap
+        df, gate, cand_rows, _seed_finals(cand_rows, n), n, window, max_occs_per_gram=cap
     )
     # the token after each gathered occurrence's seed, from the doc
     nxt = F.expr(f"try_element_at(tokens, pos + {n + 1})").alias("tok")
@@ -228,7 +245,7 @@ def test_capped_edges_count_the_gathered_doc_sample(spark):
     cid_by_seed = {r[3]: r[0] for r in cand_rows}
     got = {
         (cid_by_seed[r["seed"]], r["tok"]): r["sup"]
-        for r in bloomspan.path_edges(df, cand_rows, n, window, cap, 1)
+        for r in bloomspan.path_edges(df, gate, cand_rows, n, window, cap, 1)
         .filter(f"d = {n}")
         .collect()
         if r["seed"] in cid_by_seed

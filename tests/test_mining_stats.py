@@ -54,7 +54,7 @@ def _check(stats, expect_6plus: int):
     assert stats["phrases_6plus"] == expect_6plus
 
 
-def test_stats_driver_and_distributed_agree(spark):
+def test_stats_mine_and_kernel_agree(spark):
     """mine's phrases and selection counters equal those of the oracle's
     sequential kernel (expand_windowed) on the same corpus."""
     stats: dict = {}
@@ -79,6 +79,16 @@ def test_stats_keys_when_no_candidate_survives(spark):
     assert stats["candidates_after_merge"] == stats["phrases_total"] == 0
     assert stats["selection_skipped_covered"] == stats["selection_dropped_closure"] == 0
     assert stats["occ_cap_sampled_grams"] == 0
+
+
+def test_reused_stats_dict_reports_the_last_mine(spark):
+    """A stats dict passed to a second mine holds that mine's counts,
+    candidates_after_merge included."""
+    stats: dict = {}
+    bloomspan.mine(spark, _fixture_docs(spark), min_docs=10, ngrams=3, stats=stats)
+    assert stats["candidates_after_merge"] > 0
+    bloomspan.mine(spark, _fixture_docs(spark), min_docs=13, ngrams=3, stats=stats)
+    assert stats["candidates_after_merge"] == stats["seeds_accepted"] == 0
 
 
 def test_pipeline_snapshot_carries_mining_stats(spark, tmp_path):

@@ -43,17 +43,18 @@ def test_cap_binds_on_the_gathered_rows(spark, corpus):
     """Direct branch assertion: the per-gram doc-sampling filter drops
     rows on this corpus (not just 'the flag was set')."""
     # the word gate, candidate collect and numbering `mine` runs
-    gate = bloomspan.word_gate(spark, bloomspan._bitmap_words(corpus, MIN_DOCS).collect())
-    grams, _ = bloomspan.candidate_grams(corpus, 3, MIN_DOCS, gate)
-    cand_rows, cands = bloomspan._number_candidates(
+    words = bloomspan.word_gate(spark, bloomspan._bitmap_words(corpus, MIN_DOCS).collect())
+    grams, _ = bloomspan.candidate_grams(corpus, 3, MIN_DOCS, words)
+    cand_rows, gate = bloomspan._number_candidates(
         spark, bloomspan._with_seed_hashes(grams, 3).collect()
     )
-    hashes = [r[4] for r in cand_rows]
+    # each candidate's seed gram as its final phrase (c_3 is the seed hash)
+    finals = [(r[3], r[0], 3, r[3]) for r in cand_rows]
     uncapped = bloomspan.gather_windows(
-        corpus, cands, hashes, 3, 16, max_occs_per_gram=None
+        corpus, gate, cand_rows, finals, 3, 16, max_occs_per_gram=None
     ).count()
     capped = bloomspan.gather_windows(
-        corpus, cands, hashes, 3, 16, max_occs_per_gram=CAP
+        corpus, gate, cand_rows, finals, 3, 16, max_occs_per_gram=CAP
     ).count()
     assert capped < uncapped, (
         f"cap={CAP} did not drop any of the {uncapped} gathered occurrence "
@@ -61,7 +62,7 @@ def test_cap_binds_on_the_gathered_rows(spark, corpus):
     )
     # the sample keeps roughly cap/support of the docs, and always enough
     # to clear the scaled expansion threshold
-    assert capped >= len(cands.collect())  # at least one row per gram
+    assert capped >= len(cand_rows)  # at least one row per gram
 
 
 def test_capped_distributed_matches_exact_run(spark, corpus):

@@ -8,6 +8,7 @@ from __future__ import annotations
 
 import contextlib
 import io
+import re
 
 from pyspark.sql import functions as F
 
@@ -92,6 +93,46 @@ def test_edge_aggregate_is_one_exchange_over_no_cache(spark, monkeypatch):
     assert plans[0].count("Exchange hashpartitioning") == 1
     assert "InMemoryRelation" not in plans[0]
     assert "InMemoryTableScan" not in plans[0]
+
+
+def test_candidates_reach_the_doc_scans_as_broadcast_frames(spark, monkeypatch):
+    """The edge collect and the occurrence transfer of a mine get their
+    candidates from broadcast frames, not from literals: neither plan holds
+    an IN-set or a candidate hash, the gather bitmap is probed before the
+    explode, and the transfer joins on the bigint seed hash with a
+    broadcast hash join."""
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    plans = {}
+    orig_collect, orig_arrow = DataFrame.collect, DataFrame.toArrow
+
+    def collect(self):
+        if {"tok", "nxt"} <= set(self.columns):
+            plans["edges"] = explain_str(self, mode="simple")
+        return orig_collect(self)
+
+    def to_arrow(self):
+        if "is_final" in self.columns:
+            plans["transfer"] = explain_str(self, mode="simple")
+        return orig_arrow(self)
+
+    monkeypatch.setattr(DataFrame, "collect", collect)
+    monkeypatch.setattr(DataFrame, "toArrow", to_arrow)
+    tpl = "alpha beta gamma delta epsilon zeta".split()
+    docs = spark.createDataFrame(
+        [(f"d{i}", [f"a{i}"] + tpl + [f"b{i}"] + tpl[:4]) for i in range(6)],
+        "doc_id string, tokens array<string>",
+    )
+    out = bloomspan.mine(spark, docs, min_docs=3, ngrams=3, max_occs_per_gram=None)
+    assert [p.text for p in out] == [" ".join(tpl)]
+    assert set(plans) == {"edges", "transfer"}
+    for name, plan in plans.items():
+        assert "INSET" not in plan and " IN (" not in plan, name
+        # a 64-bit hash literal has up to 20 digits
+        assert not re.search(r"\d{12,}", plan), name
+        gen = plan.index("Generate")
+        assert "shiftright" in plan[gen:] and "shiftright" not in plan[:gen], name
+    assert re.search(r"BroadcastHashJoin \[seed#\d+L\], \[seed#\d+L\]", plans["transfer"])
 
 
 def test_parquet_pushdown_and_pruning(spark):

@@ -35,7 +35,7 @@ def _rows(phrases):
     return sorted((p.text, p.support, len(p.tokens)) for p in phrases)
 
 
-def test_bitmap_gate_path_equals_dict_gate_path(spark):
+def test_bitmap_gate_mine_equals_pyref(spark):
     docs = _big_vocab_corpus()
     df = spark.createDataFrame(
         [(i, toks) for i, toks in enumerate(docs)],
@@ -64,7 +64,7 @@ def test_packed_bitmap_has_no_false_negatives(spark):
     assert all(r["ok"] for r in out)  # Bloom filters never false-negative
 
 
-def test_small_vocab_probe_does_not_trigger_bitmap(spark):
+def test_small_vocab_gates_through_bitmap(spark):
     # a frequent vocabulary of 8 words gates through the same bitmap as a
     # large one (sanity on the probe plumbing at the small end)
     df = spark.createDataFrame(
