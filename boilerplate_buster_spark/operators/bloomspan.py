@@ -4,16 +4,15 @@ Pipeline (SURVEY.md section 7; reference: corpus-miner/_ours/bloom_gram_miner.cp
 one code path, one Spark action per step:
 
   docs(doc_id, tokens)
-    -> word gate: ONE collect of the frequent-word aggregate,
-       grouped into the 64-bit words of a packed Bloom bitmap
-       (bit_or per word), placed driver-side and broadcast
-       into the scan (word_gate)                             [shuffles #1-2]
+    -> word gate: ONE collect of the frequent words' bitmap
+       words (functions/bitmap.py), sized driver-side to the
+       frequent words and broadcast into the scan            [shuffles #1-2]
     -> candidate grams: word-gated per-doc-distinct n-gram
        counts, threshold support >= min_docs; ONE collect
        also carries each gram's seed chain hash and the two
-       bitmap bits of its gather hash; the driver numbers the
-       grams and packs the bits into the gather gate, a
-       second broadcast bitmap (_number_candidates)          [shuffle #3;
+       bitmap cells of its gather hash; the driver numbers
+       the grams and sizes the gather gate, a second
+       bitmap, to them (_number_candidates)                  [shuffle #3;
        post-threshold set is corpus-statistics bounded: boilerplate
        TEMPLATES, not corpus rows]
     -> greedy expansion: ONE path-tree edge aggregation over
@@ -76,7 +75,16 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from boilerplate_buster_spark.core.expand import WCandidate, WindowExhausted
+from boilerplate_buster_spark.functions.bitmap import (
+    bitmap_cells,
+    bitmap_gate,
+    bitmap_probe,
+    bitmap_words,
+    driver_frame,
+    gram_hash,
+)
 from boilerplate_buster_spark.functions.ngrams import gram_starts
+from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
 
 RESULT_SCHEMA = T.StructType(
     [
@@ -86,107 +94,13 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("example_docs", T.ArrayType(T.StringType()), False),
     ]
 )
-# schemas of the frames the miner builds on the driver (see _driver_frame)
-_BITMAP_SCHEMA = T.StructType([T.StructField("bf", T.ArrayType(T.LongType()))])
+# schema of the finals frame the miner builds on the driver (see driver_frame)
 _FINALS_SCHEMA = T.StructType([
     T.StructField("seed", T.LongType()),
     T.StructField("cid", T.IntegerType()),
     T.StructField("flen", T.IntegerType()),
     T.StructField("fh", T.LongType()),
 ])
-
-
-def _driver_frame(spark: SparkSession, rows: list[tuple], schema: T.StructType) -> DataFrame:
-    """A frame of driver-side rows (they come from Spark results, so no
-    per-row schema verification).  Built from a pyarrow Table, the frame is
-    a local relation - an empty one too - so reading it runs no Spark job
-    (a broadcast of it, under AQE, is a short job of its own); a row list
-    would be parallelized and unpickled by Python workers in a job."""
-    import pyarrow as pa
-    from pyspark.sql.pandas.types import to_arrow_schema
-
-    cols = list(zip(*rows)) if rows else [[] for _ in schema.names]
-    return spark.createDataFrame(
-        pa.table(dict(zip(schema.names, cols)), schema=to_arrow_schema(schema))
-    )
-
-
-def _gramhash_sql(hs_ref: str, i: str, n: int) -> str:
-    """Order-sensitive combine of n consecutive 64-bit token hashes
-    (xor of per-position rotations) - used for in-scan candidate membership;
-    collisions only ADD occurrence rows, whose seed chain hash no candidate
-    has."""
-    terms = []
-    for k in range(n):
-        e = f"element_at({hs_ref}, {i} + {k})"
-        sh = (k * 21) % 61
-        terms.append(e if sh == 0 else f"shiftleft({e}, {sh})")
-    return " ^ ".join(terms)
-
-
-BITMAP_BITS = 1 << 22  # 4 Mbit -> 512 KiB packed; fpr ~ vocab/bits per probe
-
-
-def _bitmap_bits(x: str, n_bits: int | str | None = None) -> list[str]:
-    """SQL: the two bit indices of value `x` (an SQL expression, string or
-    bigint) in a packed Bloom bitmap of `n_bits` bits (default BITMAP_BITS)
-    - the bits a gate sets, and the bits `_bitmap_probe` tests."""
-    m = BITMAP_BITS if n_bits is None else n_bits
-    return [f"pmod(xxhash64({x}), {m})", f"pmod(xxhash64({x}, 7), {m})"]
-
-
-def _bitmap_words(docs: DataFrame, min_docs: int) -> DataFrame:
-    """(idx, v): the 2-probe Bloom bitmap over the words in >= min_docs
-    docs, grouped by its 64-bit words - the one word-gate collect, whose
-    rows `word_gate` places.  v is the bit_or of word `idx`'s set bits.  At
-    most BITMAP_BITS//64 rows, whatever the vocabulary size."""
-    from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
-
-    return (
-        word_doc_freq(docs)
-        .filter(F.col("df") >= min_docs)
-        .select(F.explode(F.expr(f"array({', '.join(_bitmap_bits('word'))})")).alias("bit"))
-        .groupBy(F.expr("shiftright(bit, 6)").alias("idx"))
-        .agg(F.expr("bit_or(shiftleft(CAST(1 AS bigint), CAST(bit & 63 AS int)))").alias("v"))
-    )
-
-
-def _bitmap_frame(spark: SparkSession, n_bits: int, idx, v) -> DataFrame:
-    """The packed bitmap of `n_bits` bits whose 64-bit word idx[k] has the
-    bits v[k] set (or'ed over repeated words), as a one-row
-    `bf array<bigint>` frame."""
-    import numpy as np
-
-    packed = np.zeros(n_bits // 64, dtype=np.int64)
-    np.bitwise_or.at(packed, np.asarray(idx, dtype=np.int64), np.asarray(v, dtype=np.int64))
-    return _driver_frame(spark, [(packed,)], _BITMAP_SCHEMA)
-
-
-def word_gate(spark: SparkSession, probe: list) -> DataFrame:
-    """The reference's P3 word-DF gate (bloom_gram_miner.cpp:414-421) from
-    the collected `_bitmap_words` rows: the 2-probe Bloom bitmap packed into
-    a one-row `bf array<bigint>` frame (broadcast into the scan).
-
-    Spark's internal bloom_filter_agg is NOT in the public function registry
-    (UNRESOLVED_ROUTINE on 4.1), so the bitmap is built from public ops: the
-    cluster ORs the bits of each 64-bit bitmap word (at most BITMAP_BITS//64
-    rows, NEVER bounded by vocabulary size - the driver-memory cliff of a
-    full word collect), the driver places them.  False positives only ADD
-    candidate grams; the exact support threshold keeps the mined set
-    exact."""
-    return _bitmap_frame(spark, BITMAP_BITS, [r["idx"] for r in probe], [r["v"] for r in probe])
-
-
-def _bitmap_probe(x: str) -> str:
-    """SQL predicate: value `x` (an SQL expression) passes both probes of
-    the bitmap bf (in scope), at bf's own size.  shiftright on bigint is
-    arithmetic, which still lands the target bit at position 0 before the
-    & 1 mask - bit 63 included."""
-    return " AND ".join(
-        f"((shiftright(element_at(bf, cast(shiftright({b}, 6) AS int) + 1), "
-        f"cast({b} & 63 AS int)) & 1) = 1)"
-        for b in _bitmap_bits(x, "size(bf) * 64")
-    )
 
 
 def candidate_grams(
@@ -202,10 +116,11 @@ def candidate_grams(
     preserving):
       * per-doc array_distinct on the gram list (intra-doc repeats collapse
         map-side -> the agg is a plain count, no distinct rewrite/Expand);
-      * the word gate `gate` (see word_gate): every token of a qualifying
-        gram is itself in >= min_docs docs, so grams touching any rare word
-        are dropped at the scan by the broadcast packed bitmap, probed once
-        per TOKEN (not once per gram position).
+      * the word gate `gate` (a functions/bitmap.py gate of the words in
+        >= min_docs docs): every token of a qualifying gram is itself in
+        >= min_docs docs, so grams touching any rare word are dropped at the
+        scan by the broadcast bitmap, probed once per TOKEN (not once per
+        gram position).
 
     The seed counters ride the candidate collect via df.observe()
     (CollectMetrics blocks the threshold-filter pushdown, so `total` counts
@@ -215,7 +130,7 @@ def candidate_grams(
     t = "tokens"
     src_df = docs.crossJoin(F.broadcast(gate)).select(
         F.col(t),
-        F.expr(f"transform({t}, x -> {_bitmap_probe('x')})").alias("_ok"),
+        F.expr(f"transform({t}, x -> {bitmap_probe('x')})").alias("_ok"),
     )
     conj = " AND ".join(f"element_at(_ok, i + {k})" for k in range(n))
     per_doc = src_df.select(
@@ -236,35 +151,28 @@ def candidate_grams(
 
 
 def _with_seed_hashes(cands: DataFrame, n: int) -> DataFrame:
-    """(gram, support, h0, bits): the candidate collect.  h0 is the rolling
-    seed hash (the chain value of the gram itself), bits the two bitmap bits
-    (`_bitmap_bits`) of the in-scan gather hash (_gramhash_sql over the
+    """(gram, support, h0, cells): the candidate collect.  h0 is the rolling
+    seed hash (the chain value of the gram itself), cells the two bitmap
+    cells (`bitmap_cells`) of the in-scan gather hash (`gram_hash` over the
     gram's token hashes): the same SQL the scans' gate probe runs, so the
     driver never hashes anything itself."""
-    gh = _gramhash_sql("_hs", "1", n)
+    gh = gram_hash("_hs", "1", n)
     return cands.select(
         "gram", "support",
         F.expr("transform(split(gram, ' '), x -> xxhash64(x))").alias("_hs"),
     ).select(
         "gram", "support",
         F.expr("aggregate(_hs, cast(0 AS bigint), (acc, h) -> xxhash64(acc, h))").alias("h0"),
-        F.expr(f"array({', '.join(_bitmap_bits(gh))})").alias("bits"),
+        F.expr(bitmap_cells(gh)).alias("cells"),
     )
 
 
 def _number_candidates(spark: SparkSession, rows: list) -> tuple[list[tuple], DataFrame]:
     """(cid, gram, support, h0) per collected `_with_seed_hashes` row, cid =
-    rank in gram order, and the gather gate: the packed bitmap of their
-    gather-hash bits.  It has 64 bits per candidate (~0.1% false positives
-    per gram start) up to BITMAP_BITS, since Spark copies it with every doc
-    row the scans' lambdas read; a bit at BITMAP_BITS, masked to a smaller
-    power of two, is the bit at that size."""
-    import numpy as np
-
+    rank in gram order, and the gather gate: the bitmap of their gather
+    hashes, from the collected cells."""
     rows = sorted(rows)
-    n_bits = min(BITMAP_BITS, 1 << max(6, (64 * len(rows) - 1).bit_length()))
-    bits = np.array([b for r in rows for b in r["bits"]], dtype=np.int64) & (n_bits - 1)
-    gate = _bitmap_frame(spark, n_bits, bits >> 6, np.int64(1) << (bits & 63))
+    gate = bitmap_gate(spark, [c for r in rows for c in r["cells"]])
     return [(cid, r["gram"], r["support"], r["h0"]) for cid, r in enumerate(rows, start=1)], gate
 
 
@@ -302,7 +210,7 @@ def _occurrences(
     """The doc scan (doc_id, tokens, _hs, bf) and the SQL expression, over
     it, of each doc's candidate occurrences, array<struct<i, ch>> - the one
     occurrence expression of path_edges and gather_windows: the gram starts
-    i whose gather hash (`_gramhash_sql` over the token hashes _hs) passes
+    i whose gather hash (`gram_hash` over the token hashes _hs) passes
     both probes of the gate bitmap bf, each with its window chain ch
     (`_chain_sql`; element n+1 is the seed hash c_n), and for a candidate
     over `max_occs_per_gram` only its doc sample (`_doc_sample_sql`, the
@@ -313,7 +221,7 @@ def _occurrences(
     t = "tokens"
     occs = (
         f"transform(filter({gram_starts(t, n)}, "
-        f"i -> {_bitmap_probe(_gramhash_sql('_hs', 'i', n))}), "
+        f"i -> {bitmap_probe(gram_hash('_hs', 'i', n))}), "
         f"i -> named_struct('i', i, 'ch', {_chain_sql('_hs', 'i', window)}))"
     )
     cap = max_occs_per_gram
@@ -395,7 +303,7 @@ def gather_windows(
     c_flen = fh.  pos is 0-based; prev_h = xxhash64 of the token before,
     NULL at pos 0 (backward-closure input, ":675-695")."""
     scan, occs = _occurrences(docs, gate, cand_rows, n, window, max_occs_per_gram)
-    fin = _driver_frame(docs.sparkSession, finals, _FINALS_SCHEMA)
+    fin = driver_frame(docs.sparkSession, finals, _FINALS_SCHEMA)
     return (
         scan.selectExpr("doc_id", "_hs", f"explode({occs}) AS o")
         .selectExpr(
@@ -499,11 +407,11 @@ def mine(
     transfer run again at 2W.  `strategy` has the one value "distributed";
     any other raises ValueError.
 
-    The word gate is ONE bounded collect (`_bitmap_words`): the
-    frequent-word aggregate grouped by the 64-bit words of the packed Bloom
-    bitmap, which `word_gate` places and broadcasts - never a full word
-    collect.  Candidate ids are assigned driver-side in gram order after
-    the candidate collect, which also brings the gather gate's bits.
+    The word gate is ONE bounded collect (`bitmap_words` of the frequent
+    words), which `bitmap_gate` sizes to the frequent words and places -
+    never a full word collect.  Candidate ids are assigned driver-side in
+    gram order after the candidate collect, which also brings the gather
+    gate's cells.
 
     `stats` (optional dict) receives the M5 mining-statistics table
     (bloom_gram_miner.cpp:447-454,710-718): seed totals, accepted/rejected,
@@ -523,13 +431,13 @@ def mine(
 
     clock = _PhaseClock()
     with _own_job_group(spark, stats, clock):
-        probe = _bitmap_words(docs, min_docs).collect()
-        gate = word_gate(spark, probe)
+        probe = bitmap_words(word_doc_freq(docs).filter(F.col("df") >= min_docs), "word").collect()
+        gate = bitmap_gate(spark, probe)
         clock.lap("words")
 
         cands, seeds = candidate_grams(docs, ngrams, min_docs, gate)
         # one tiny collect serves candidate ids, seed supports, the rolling
-        # seed hash and the gather gate's bits
+        # seed hash and the gather gate's cells
         cand_rows = _with_seed_hashes(cands, ngrams).collect()
         if stats is not None:
             seed_row = seeds.get  # the collect above ran the observed plan
@@ -822,11 +730,11 @@ def phrases_to_df(spark: SparkSession, phrases: list[WCandidate]) -> DataFrame:
     """Canonical result DataFrame (deterministic projection of the CSV sink,
     corpus_miner.cpp:529-561): example_docs = each phrase's `examples`, which
     `mine` sets to the first 2 of the sorted unique doc set (deviation:
-    reference uses hash-set order).  A local relation (see _driver_frame),
+    reference uses hash-set order).  A local relation (see driver_frame),
     rows in the sorted order."""
     data = [(p.text, p.support, len(p.tokens), list(p.examples)[:2]) for p in phrases]
     data.sort(key=lambda r: (-r[1] * r[2], -r[1], r[0]))
-    return _driver_frame(spark, data, RESULT_SCHEMA)
+    return driver_frame(spark, data, RESULT_SCHEMA)
 
 
 def mine_df(spark: SparkSession, docs: DataFrame, **kw) -> DataFrame:

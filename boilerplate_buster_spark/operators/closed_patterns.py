@@ -18,32 +18,25 @@ Scale posture of the level-wise loop (one hash-aggregate per length k, two
 broadcast anti-joins between adjacent levels, terminates at the longest
 frequent phrase):
 
-  * ANTI-MONOTONE IN-SCAN GATE (packed-bitmap probe): a frequent
-    (k+1)-gram's prefix k-gram is necessarily frequent (every occurrence of
-    the extension contains one of the prefix), so level k+1 enumerates ONLY
-    windows whose leading k-gram hash survives level k.  The surviving hash
-    set is packed driver-side into a Bloom bitmap (one array<bigint> row,
-    broadcast - same machinery as bloomspan.word_gate's bitmap) and each
-    window position pays ONE hash-combine + ONE bit probe.  Round 3 used a
-    literal 64-bit IN-set here; literal IN-lists are LINEAR SCANS in codegen
-    (O(survivors) per position - measured 2.1x slower than ungated at sf0.1
-    where levels are small), so the bitmap probe is what makes the gate free
-    at small scale while keeping the pruning that wins at large scale.
-    Noise windows die before the explode, so the per-level aggregate input
-    shrinks with the frequent set instead of rescanning every corpus
-    position at every depth.  Hash collisions / Bloom false positives are
-    harmless AND exact: a gram's prefix hash is a single fixed value, so the
-    probe admits ALL of its windows or NONE - admitted grams are counted
-    exactly, and a falsely-admitted gram is simply one more aggregate row
-    that fails (or legitimately passes) the exact min_sup threshold.  Gate
-    sets above `_INSCAN_MAX` fall back to the ungated full enumeration
-    (bounds the driver collect; levels that big prune little anyway).
+  * ANTI-MONOTONE IN-SCAN GATE: a frequent (k+1)-gram's prefix k-gram is
+    necessarily frequent (every occurrence of the extension contains one of
+    the prefix), so level k+1 enumerates ONLY windows whose leading k-gram
+    passes a gate of level k's grams - the bitmap gate of
+    functions/bitmap.py that bloomspan's scans probe too: one bounded
+    collect per level (`bitmap_words` over the grams' `gram_hash`, at most
+    BITMAP_BITS // 64 rows however many grams survive), sized at 64 bits
+    per gram, broadcast, and probed once per window position over the
+    per-token hashes.  Noise windows die before the explode, so the
+    per-level aggregate input shrinks with the frequent set.  Gate false
+    positives are harmless AND exact: a gram's prefix hash is one fixed
+    value, so the gate admits ALL of its windows or NONE - admitted grams
+    are counted exactly, and a falsely admitted gram is one more aggregate
+    row that meets (or fails) the exact threshold on its own.
     ADAPTIVE: the gate only engages when the corpus has at least
-    `_GATE_MIN_WINDOWS` token positions - below that the gate's FIXED
-    per-level cost (one survivor-hash collect job + a bitmap broadcast,
-    ~0.3-0.5 s of Spark job latency each level) exceeds what a full small
-    scan costs, measured 1.7x on the sf0.1 bench; above it the per-level
-    fixed cost is noise and the pruning dominates.
+    `_GATE_MIN_WINDOWS` token positions (counted by an Observation on the
+    level-1 scan) - below that the gate's FIXED per-level cost (one collect
+    job + a broadcast, ~0.3-0.5 s of Spark job latency each level) exceeds
+    what a full small scan costs, measured 1.7x on the sf0.1 bench.
   * STRING-PERSISTED CORPUS: the corpus is cached as ONE space-joined string
     column and re-split per level - Spark's columnar cache of array<string>
     re-reads ~8x slower than recomputing split() (measured; see
@@ -59,11 +52,20 @@ pinned by the cross-check tests against the reference binary
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from collections.abc import Callable
+
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from boilerplate_buster_spark.operators.bloomspan import _gramhash_sql
+from boilerplate_buster_spark.functions.bitmap import (
+    bitmap_gate,
+    bitmap_probe,
+    bitmap_words,
+    driver_frame,
+    gram_hash,
+)
+from boilerplate_buster_spark.functions.ngrams import gram_starts
 
 CLOSED_SCHEMA = T.StructType(
     [
@@ -72,9 +74,6 @@ CLOSED_SCHEMA = T.StructType(
         T.StructField("length", T.IntegerType(), False),
     ]
 )
-
-#: driver-collect cap for the gate hash set; above it levels run ungated.
-_INSCAN_MAX = 65536
 
 #: minimum corpus token-position count before the in-scan gate engages;
 #: below this the per-level fixed overhead (collect job + broadcast) beats
@@ -86,100 +85,59 @@ _GATE_MIN_WINDOWS = 2_000_000
 _TOKS = "CASE WHEN _t = '' THEN array() ELSE split(_t, ' ') END"
 
 
-def _gram_hashes(level: DataFrame, k: int, n_rows: int) -> list[int] | None:
-    """xxhash64-combined gram hashes of a (gram, ...) level frame, for the
-    next level's in-scan gate; None when the set exceeds the collect cap."""
-    if not 0 < n_rows <= _INSCAN_MAX:
-        return None
-    gh = _gramhash_sql("_hs", "1", k)
-    return [
-        r["gh"]
-        for r in level.select(
-            F.expr("transform(split(gram, ' '), x -> xxhash64(x))").alias("_hs")
-        )
-        .select(F.expr(gh).alias("gh"))
-        .collect()
-    ]
+def _first_level(
+    txt: DataFrame, counts: Callable[[DataFrame], DataFrame]
+) -> tuple[DataFrame, bool]:
+    """Level 1, `counts(txt)`, persisted and computed, and whether the gate
+    engages: an Observation on that scan counts the corpus' token
+    positions, so the choice costs no job of its own."""
+    positions = Observation()
+    cur = counts(txt.observe(positions, F.sum(F.size(F.expr(_TOKS))).alias("n"))).persist()
+    cur.count()
+    return cur, (positions.get["n"] or 0) >= _GATE_MIN_WINDOWS
 
 
-def _corpus_big_enough(txt: DataFrame) -> bool:
-    """Engage the in-scan gate only above `_GATE_MIN_WINDOWS` token
-    positions (see module docstring ADAPTIVE note); one cheap agg over the
-    persisted string column."""
-    if _GATE_MIN_WINDOWS <= 0:
-        return True
-    n = txt.select(
-        F.sum(F.size(F.expr(_TOKS))).alias("n")
-    ).first()["n"]
-    return (n or 0) >= _GATE_MIN_WINDOWS
+def _level_gate(spark: SparkSession, level: DataFrame, k: int) -> DataFrame:
+    """The next level's gate: the bitmap of the `gram_hash`es of a (gram,
+    ...) level frame of k-grams, from one bounded collect."""
+    hs = level.select(F.expr("transform(split(gram, ' '), x -> xxhash64(x))").alias("_hs"))
+    return bitmap_gate(spark, bitmap_words(hs, gram_hash("_hs", "1", k)).collect())
 
 
-def _gate_bitmap(spark: SparkSession, hashes: list[int]) -> tuple[int, DataFrame]:
-    """(bits, 1-row DataFrame `_bf array<bigint>`): the level's surviving
-    gram hashes packed into a single-probe Bloom bitmap, driver-side (the
-    hashes are already collected and `_INSCAN_MAX`-bounded).  Sized at
-    >= 32 bits per entry (fpr ~3%), power of two in [2^16, 2^22] - at the
-    top that is 64 KiB packed, a trivial broadcast."""
-    import numpy as np
-
-    bits = 1 << 16
-    while bits < 32 * len(hashes) and bits < (1 << 22):
-        bits <<= 1
-    packed = np.zeros(bits // 64, dtype=np.uint64)
-    for h in hashes:
-        b = h % bits
-        packed[b >> 6] |= np.uint64(1) << np.uint64(b & 63)
-    vals = [int(v) for v in packed.view(np.int64)]
-    return bits, spark.createDataFrame([(vals,)], "_bf array<bigint>")
-
-
-def _pos_expr(k: int, gate_bits: int | None) -> str:
-    """SQL for the 1-based window start positions of k-grams over `_tk`
-    (with `_hs` = per-token xxhash64 and `_bf` = packed gate bitmap in scope
-    when gated): all positions, or only those whose leading (k-1)-gram hash
-    probes set in the previous level's bitmap."""
-    pos = (
-        f"slice(sequence(1, greatest(size(_tk) - {k} + 1, 1)), "
-        f"1, greatest(size(_tk) - {k} + 1, 0))"
-    )
-    if gate_bits is not None:
-        b = f"pmod({_gramhash_sql('_hs', 'i', k - 1)}, {gate_bits})"
-        probe = (
-            f"(shiftright(element_at(_bf, cast(shiftright({b}, 6) AS int) + 1), "
-            f"cast({b} & 63 AS int)) & 1) = 1"
-        )
-        pos = f"filter({pos}, i -> {probe})"
-    return pos
-
-
-def _with_tokens(
-    txt: DataFrame, bitmap_df: DataFrame | None, extra: list[str]
-) -> DataFrame:
+def _with_tokens(txt: DataFrame, gate: DataFrame | None, extra: list[str]) -> DataFrame:
     """Two-step select so the split() array (and token hashes, when gated)
     materialize ONCE per row - CollapseProject would otherwise inline the
-    split into every reference.  When gated, the broadcast 1-row bitmap
-    rides in as a `_bf` column (BroadcastNestedLoopJoin of a 1-row side -
+    split into every reference.  When gated, the broadcast 1-row gate rides
+    in as a `bf` column (BroadcastNestedLoopJoin of a 1-row side -
     effectively free)."""
     base = txt.select(*extra, F.expr(_TOKS).alias("_tk"))
-    if bitmap_df is not None:
-        base = base.crossJoin(F.broadcast(bitmap_df)).select(
-            *extra, "_tk", "_bf",
+    if gate is not None:
+        base = base.crossJoin(F.broadcast(gate)).select(
+            *extra, "_tk", "bf",
             F.expr("transform(_tk, x -> xxhash64(x))").alias("_hs"),
         )
     return base
 
 
+def _pos_expr(k: int, gated: bool) -> str:
+    """SQL for the 1-based window start positions of k-grams over `_tk`: all
+    of them, or (gated) those whose leading (k-1)-gram passes the gate."""
+    pos = gram_starts("_tk", k)
+    if gated:
+        pos = f"filter({pos}, i -> {bitmap_probe(gram_hash('_hs', 'i', k - 1))})"
+    return pos
+
+
 def _gram_counts(
-    txt: DataFrame, k: int, min_sup: int, gate: tuple[int, DataFrame] | None
+    txt: DataFrame, k: int, min_sup: int, gate: DataFrame | None
 ) -> DataFrame:
     """(gram, freq): occurrence counts of k-grams with freq >= min_sup,
     enumerated only at gate-surviving positions (see module docstring)."""
-    gate_bits, bitmap_df = gate if gate is not None else (None, None)
-    base = _with_tokens(txt, bitmap_df, [])
+    base = _with_tokens(txt, gate, [])
     grams = base.select(
         F.explode(
             F.expr(
-                f"transform({_pos_expr(k, gate_bits)}, "
+                f"transform({_pos_expr(k, gate is not None)}, "
                 f"i -> array_join(slice(_tk, i, {k}), ' '))"
             )
         ).alias("gram")
@@ -205,16 +163,11 @@ def closed_contiguous_patterns(
     txt = docs.select(F.array_join(F.col(tokens_col), " ").alias("_t")).persist()
     out_rows: list[tuple[str, int, int]] = []
 
-    cur = _gram_counts(txt, 1, min_sup, None).persist()
-    cur_n = cur.count()
-    # corpus size (token positions) decides whether gating pays; one cheap
-    # agg over the already-persisted string column
-    gate_on = _corpus_big_enough(txt)
+    cur, gate_on = _first_level(txt, lambda t: _gram_counts(t, 1, min_sup, None))
     k = 1
     try:
         while k <= max_len:
-            hashes = _gram_hashes(cur, k, cur_n) if gate_on else None
-            gate = _gate_bitmap(spark, hashes) if hashes is not None else None
+            gate = _level_gate(spark, cur, k) if gate_on else None
             nxt = _gram_counts(txt, k + 1, min_sup, gate).persist()
             nxt_n = nxt.count()
 
@@ -247,7 +200,7 @@ def closed_contiguous_patterns(
                 ]
 
             cur.unpersist()
-            cur, cur_n = nxt, nxt_n
+            cur = nxt
             if nxt_n == 0:
                 break
             k += 1
@@ -255,7 +208,7 @@ def closed_contiguous_patterns(
         cur.unpersist()
         txt.unpersist()
     out_rows.sort(key=lambda r: (-r[1] * r[2], -r[1], r[0]))
-    return spark.createDataFrame(out_rows, CLOSED_SCHEMA)
+    return driver_frame(spark, out_rows, CLOSED_SCHEMA)
 
 
 # aliases mirroring the reference's algorithm names
@@ -264,20 +217,19 @@ clospan_mine_df = closed_contiguous_patterns
 
 
 def _doc_gram_counts(
-    txt: DataFrame, k: int, id_col: str, gate: tuple[int, DataFrame] | None
+    txt: DataFrame, k: int, id_col: str, gate: DataFrame | None
 ) -> DataFrame:
     """(gram, df, ext_docs): distinct-doc frequency of gate-surviving
     k-grams, plus the distinct-doc count of EXTENDABLE occurrences (not at
     doc end) - the reference PrefixSpan emits a pattern only if its projected
     database is non-empty (corpus_miner.cpp:170-182), i.e. some occurrence
     can extend."""
-    gate_bits, bitmap_df = gate if gate is not None else (None, None)
-    base = _with_tokens(txt, bitmap_df, [id_col])
+    base = _with_tokens(txt, gate, [id_col])
     pairs = base.select(
         F.col(id_col),
         F.explode(
             F.expr(
-                f"array_distinct(transform({_pos_expr(k, gate_bits)}, "
+                f"array_distinct(transform({_pos_expr(k, gate is not None)}, "
                 f"i -> struct(array_join(slice(_tk, i, {k}), ' ') AS gram, "
                 f"IF(i + {k} <= size(_tk), 1, 0) AS ext)))"
             )
@@ -320,18 +272,13 @@ def prefixspan_patterns(
     ).persist()
     out_rows: list[tuple[str, int, int]] = []
 
-    cur = (
-        _doc_gram_counts(txt, 1, id_col, None)
-        .filter(F.col("df") >= min_docs)
-        .persist()
+    cur, gate_on = _first_level(
+        txt, lambda t: _doc_gram_counts(t, 1, id_col, None).filter(F.col("df") >= min_docs)
     )
-    cur_n = cur.count()
-    gate_on = _corpus_big_enough(txt)
     k = 1
     try:
         while k <= max_len:
-            hashes = _gram_hashes(cur, k, cur_n) if gate_on else None
-            gate = _gate_bitmap(spark, hashes) if hashes is not None else None
+            gate = _level_gate(spark, cur, k) if gate_on else None
             nxt = (
                 _doc_gram_counts(txt, k + 1, id_col, gate)
                 .filter(F.col("df") >= min_docs)
@@ -359,7 +306,7 @@ def prefixspan_patterns(
                 out_rows += [(r["gram"], r["df"], k) for r in emit.collect()]
 
             cur.unpersist()
-            cur, cur_n = nxt, nxt_n
+            cur = nxt
             if nxt_n == 0:
                 break
             k += 1
@@ -367,4 +314,4 @@ def prefixspan_patterns(
         cur.unpersist()
         txt.unpersist()
     out_rows.sort(key=lambda r: (-r[1] * r[2], -r[1], r[0]))
-    return spark.createDataFrame(out_rows, CLOSED_SCHEMA)
+    return driver_frame(spark, out_rows, CLOSED_SCHEMA)

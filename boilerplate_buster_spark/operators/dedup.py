@@ -603,7 +603,16 @@ def fuzzy_pairs(
     contract oracle brute-forces the cross join, so equality PROVES the
     blocking complete on real data.  Per-row fan-out is length+1
     variants: linear in corpus characters, one shuffle on the variant
-    key (same shape as LSH banding)."""
+    key (same shape as LSH banding).
+
+    Hot-bucket assumption: all rows that share a variant are collected
+    into ONE array row and expanded to pairs in that row, so a variant
+    held by m rows costs one task O(m^2) pairs and the whole m-member
+    array (thousands of identical titles make one such bucket).  There is
+    no bucket cap and no drop ledger (unlike `prefix_jaccard_pairs` and
+    `lsh_candidate_pairs_with_drop_count`): the result stays complete, and
+    inputs are assumed to hold no variant shared by more rows than one
+    task can pair."""
     if max_dist != 1:
         raise ValueError("deletion-neighborhood blocking implemented for k=1")
     t = text_col

@@ -72,8 +72,8 @@ def test_spark_bide_short_and_empty(spark):
 
 def test_gate_equivalence_and_plan(spark, monkeypatch):
     """The anti-monotone in-scan gate must not change results (gated vs
-    forced-ungated), and the gated level plan must carry the 64-bit IN-set
-    filter BEFORE the explode (Generate)."""
+    ungated), and the gated level plan must probe the broadcast bitmap gate
+    BEFORE the explode (Generate)."""
     from boilerplate_buster_spark.operators import closed_patterns as cp
 
     df = corpus_df(spark, "test1")
@@ -82,7 +82,7 @@ def test_gate_equivalence_and_plan(spark, monkeypatch):
         (r["phrase"], r["freq"], r["length"])
         for r in closed_contiguous_patterns(spark, df, min_sup=3, min_l=2).collect()
     }
-    monkeypatch.setattr(cp, "_INSCAN_MAX", 0)  # force every level ungated
+    monkeypatch.setattr(cp, "_GATE_MIN_WINDOWS", 2_000_000)  # every level ungated
     ungated = {
         (r["phrase"], r["freq"], r["length"])
         for r in closed_contiguous_patterns(spark, df, min_sup=3, min_l=2).collect()
@@ -91,10 +91,11 @@ def test_gate_equivalence_and_plan(spark, monkeypatch):
     monkeypatch.undo()
 
     # plan shape: a gated level filters window positions by a packed-bitmap
-    # probe (pmod + element_at on the broadcast _bf row) inside the
+    # probe (pmod + element_at on the broadcast bf row) inside the
     # projection feeding the explode - NOT a literal IN-list (linear scan)
     txt = df.select(tokens_col_to_text(df))
-    lvl = cp._gram_counts(txt, 2, 3, gate=cp._gate_bitmap(spark, [123, 456]))
+    gate = cp._level_gate(spark, cp._gram_counts(txt, 1, 3, None), 1)
+    lvl = cp._gram_counts(txt, 2, 3, gate=gate)
     plan = lvl._jdf.queryExecution().optimizedPlan().toString()
     assert "Generate" in plan
     assert "xxhash64" in plan
@@ -120,9 +121,8 @@ def test_prefixspan_gate_equivalence(spark, monkeypatch):
         .select("doc_id", tokens("text").alias("tokens"))
     )
     runs = {}
-    monkeypatch.setattr(cp, "_GATE_MIN_WINDOWS", 0)  # force-gate small corpus
-    for label, cap in (("gated", 65536), ("ungated", 0)):
-        monkeypatch.setattr(cp, "_INSCAN_MAX", cap)
+    for label, min_windows in (("gated", 0), ("ungated", 2_000_000)):
+        monkeypatch.setattr(cp, "_GATE_MIN_WINDOWS", min_windows)
         runs[label] = {
             (r["phrase"], r["freq"], r["length"])
             for r in prefixspan_patterns(

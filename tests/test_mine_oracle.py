@@ -7,7 +7,7 @@ pure-Python oracle ``pyref.bloomspan_mine``'s:
   * with ``max_occs_per_gram=None`` and with a cap above every support;
   * at ``window=4``, shorter than the longest phrase, so the miner
     retries at a doubled window;
-  * with a saturated 64-bit gate bitmap (``BITMAP_BITS`` patched), where
+  * with a saturated 64-bit gate bitmap (``bitmap.BITMAP_BITS`` patched), where
     nearly every gram start passes both gates and both doc scans must
     drop the false positives.
 
@@ -28,7 +28,9 @@ import pytest
 from pyspark.sql import functions as F
 
 from boilerplate_buster_spark.core import pyref
+from boilerplate_buster_spark.functions import bitmap
 from boilerplate_buster_spark.operators import bloomspan
+from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
 
 GLOBAL_TEMPLATES = (
     "skip to main content home shop deals help account cart",
@@ -140,7 +142,8 @@ def test_miners_agree_with_pyref(spark, name):
 def _gathered_candidates(spark, df, n, min_docs):
     """The candidate rows and the gather gate `mine` builds: word gate,
     candidate collect, numbering."""
-    words = bloomspan.word_gate(spark, bloomspan._bitmap_words(df, min_docs).collect())
+    freq = word_doc_freq(df).filter(F.col("df") >= min_docs)
+    words = bitmap.bitmap_gate(spark, bitmap.bitmap_words(freq, "word").collect())
     grams, _ = bloomspan.candidate_grams(df, n, min_docs, words)
     return bloomspan._number_candidates(
         spark, bloomspan._with_seed_hashes(grams, n).collect()
@@ -158,7 +161,7 @@ def test_saturated_gate_equals_pyref(spark, monkeypatch):
     word gate and the gather gate, so path_edges counts the edges of seeds
     no candidate has (the driver walk drops them) and the seed join of
     gather_windows drops their occurrences.  The rows stay the oracle's."""
-    monkeypatch.setattr(bloomspan, "BITMAP_BITS", 64)
+    monkeypatch.setattr(bitmap, "BITMAP_BITS", 64)
     make, min_docs, ngrams = CORPORA["sites-s2"]
     docs = make()
     df = spark.createDataFrame(

@@ -15,8 +15,11 @@ with supports equal to the documented rescaled-estimate surface.
 from __future__ import annotations
 
 import pytest
+from pyspark.sql import functions as F
 
+from boilerplate_buster_spark.functions import bitmap
 from boilerplate_buster_spark.operators import bloomspan
+from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
 
 P1 = "alpha bravo charlie delta echo foxtrot".split()
 P2 = "golf hotel india juliet kilo lima".split()
@@ -43,7 +46,8 @@ def test_cap_binds_on_the_gathered_rows(spark, corpus):
     """Direct branch assertion: the per-gram doc-sampling filter drops
     rows on this corpus (not just 'the flag was set')."""
     # the word gate, candidate collect and numbering `mine` runs
-    words = bloomspan.word_gate(spark, bloomspan._bitmap_words(corpus, MIN_DOCS).collect())
+    freq = word_doc_freq(corpus).filter(F.col("df") >= MIN_DOCS)
+    words = bitmap.bitmap_gate(spark, bitmap.bitmap_words(freq, "word").collect())
     grams, _ = bloomspan.candidate_grams(corpus, 3, MIN_DOCS, words)
     cand_rows, gate = bloomspan._number_candidates(
         spark, bloomspan._with_seed_hashes(grams, 3).collect()

@@ -12,6 +12,7 @@ import re
 
 from pyspark.sql import functions as F
 
+from boilerplate_buster_spark.functions import bitmap
 from boilerplate_buster_spark.operators import bloomspan, corpus_stats
 
 
@@ -48,7 +49,8 @@ def test_ngram_df_dedups_before_shuffle(spark):
 
 def _word_gate(spark, docs, min_docs):
     """The gate `mine` builds, from the same word-gate collect."""
-    return bloomspan.word_gate(spark, bloomspan._bitmap_words(docs, min_docs).collect())
+    freq = corpus_stats.word_doc_freq(docs).filter(F.col("df") >= min_docs)
+    return bitmap.bitmap_gate(spark, bitmap.bitmap_words(freq, "word").collect())
 
 
 def test_candidate_grams_dedup_and_gate_before_shuffle(spark):

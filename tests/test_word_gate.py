@@ -9,7 +9,9 @@ import random
 from pyspark.sql import functions as F
 
 from boilerplate_buster_spark.core import pyref
+from boilerplate_buster_spark.functions import bitmap
 from boilerplate_buster_spark.operators import bloomspan
+from boilerplate_buster_spark.operators.corpus_stats import word_doc_freq
 
 
 def _big_vocab_corpus(seed=11, n_pool=2200, n_docs=44, n_template_docs=10):
@@ -54,8 +56,9 @@ def test_packed_bitmap_has_no_false_negatives(spark):
         list(enumerate([w] for w in words)), "doc_id long, tokens array<string>"
     )
     # the word-gate collect and gate `mine` runs
-    bm = bloomspan.word_gate(spark, bloomspan._bitmap_words(docs, 1).collect())
-    probe = bloomspan._bitmap_probe("x")
+    freq = word_doc_freq(docs).filter("df >= 1")
+    bm = bitmap.bitmap_gate(spark, bitmap.bitmap_words(freq, "word").collect())
+    probe = bitmap.bitmap_probe("x")
     out = (
         fw_df.crossJoin(F.broadcast(bm))
         .select(F.expr(f"transform(array(word), x -> {probe})[0]").alias("ok"))
