@@ -15,23 +15,21 @@ one code path, one Spark action per step:
        bitmap, to them (_number_candidates)                  [shuffle #3;
        post-threshold set is corpus-statistics bounded: boilerplate
        TEMPLATES, not corpus rows]
-    -> greedy expansion: ONE path-tree edge aggregation over
-       all depths (path_edges): each doc row builds and
-       dedups its own edges from its occurrences
+    -> edges and occurrences: ONE Arrow transfer
+       (edges_and_occurrences) over one occurrence expression
        (_occurrences: gate-probed gram starts, window chains,
-       the capped-gram doc sample), then count(*) keyed by
-       the next token's string, HAVING sup >= min_docs
-       before collect                                         [shuffle #4]
-    -> driver walk: max-support frequent edges from each seed hash
-    -> occurrence transfer: ONE Arrow transfer of per-occurrence
-       (cid, doc_id, pos, prev hash, is_final) from the same
-       occurrences, joined on their seed hash to the walk's
-       (seed, cid, final length, final hash) frame
-       (gather_windows)                                       [NO shuffle]
+       the capped-gram doc sample): the path-tree edges of all
+       depths, each doc row building and deduping its own,
+       count(*) keyed by the next token's string, HAVING
+       sup >= min_docs before the transfer                    [shuffle #4]
+       - unioned with one (seed, doc_id, pos, prev hash, chain)
+       row per occurrence                                     [NO shuffle]
+    -> driver walk: max-support frequent edges from each seed hash;
+       then each occurrence's cid by seed hash and its final flag
     -> sequential selection: score order + occupancy bitmask
        + backward closure on (cid, doc, pos) integer tuples   [driver, numpy]
-    (no cache: the edge scan and the transfer each read the corpus; the
-    candidates reach both scans as broadcast frames - the one literal left
+    (no cache: both branches of the one action read the corpus; the
+    candidates reach them as one broadcast bitmap - the one literal left
     is the support map of the grams the occurrence cap samples)
 
 `prev` (the backward-closure input) is the 64-bit hash of the token before
@@ -46,8 +44,8 @@ table (bounded by boilerplate path structure) plus one integer row per
 occurrence OF A SURVIVING CANDIDATE.  At web scale the occurrence lists of
 head phrases grow with the corpus, so ``max_occs_per_gram`` (default
 AUTO_MAX_OCCS) caps the gathered postings per gram (deterministic xxhash64
-DOC sampling at rate cap/support, the same doc subsample in the edge scan
-and the gather) while the EXACT seed df keeps coming from the candidate
+DOC sampling at rate cap/support, the same doc subsample in the edges and
+the occurrence rows) while the EXACT seed df keeps coming from the candidate
 aggregate.  When the cap BINDS (support > cap): expansion-edge supports are
 subsample counts, so the frequency threshold scales to the unbiased
 estimate (sup * support / cap >= min_docs) and reported expansion supports
@@ -94,13 +92,6 @@ RESULT_SCHEMA = T.StructType(
         T.StructField("example_docs", T.ArrayType(T.StringType()), False),
     ]
 )
-# schema of the finals frame the miner builds on the driver (see driver_frame)
-_FINALS_SCHEMA = T.StructType([
-    T.StructField("seed", T.LongType()),
-    T.StructField("cid", T.IntegerType()),
-    T.StructField("flen", T.IntegerType()),
-    T.StructField("fh", T.LongType()),
-])
 
 
 def candidate_grams(
@@ -179,8 +170,8 @@ def _number_candidates(spark: SparkSession, rows: list) -> tuple[list[tuple], Da
 def _doc_sample_sql(support: str, cap: int) -> str:
     """SQL predicate: keep a doc's occurrences of a gram of `support`
     distinct docs iff hash_frac(doc_id) < cap/support - deterministic
-    per-gram DOC sampling, applied once in `_occurrences`, so both scans
-    (path_edges, gather_windows) see one doc subsample.  Expected docs kept
+    per-gram DOC sampling, applied once in `_occurrences`, so the edges
+    and the occurrence rows see one doc subsample.  Expected docs kept
     per gram ~ cap; a gram at or under the cap (or `support` 0) keeps
     everything.  A pure in-scan filter: a row_number() window partitioned by
     gram is a skew hotspot (few keys, corpus-sized partitions) exactly when
@@ -209,7 +200,7 @@ def _occurrences(
 ) -> tuple[DataFrame, str]:
     """The doc scan (doc_id, tokens, _hs, bf) and the SQL expression, over
     it, of each doc's candidate occurrences, array<struct<i, ch>> - the one
-    occurrence expression of path_edges and gather_windows: the gram starts
+    occurrence expression of edges_and_occurrences: the gram starts
     i whose gather hash (`gram_hash` over the token hashes _hs) passes
     both probes of the gate bitmap bf, each with its window chain ch
     (`_chain_sql`; element n+1 is the seed hash c_n), and for a candidate
@@ -238,7 +229,7 @@ def _occurrences(
     return scan, occs
 
 
-def path_edges(
+def edges_and_occurrences(
     docs: DataFrame,
     gate: DataFrame,
     cand_rows: list,
@@ -247,8 +238,10 @@ def path_edges(
     max_occs_per_gram: int | None,
     min_sup: int,
 ) -> DataFrame:
-    """(seed, d, nxt, tok, sup, cur): the path-tree edges of every candidate
-    gram's occurrences, counted over distinct docs, HAVING sup >= min_sup.
+    """The one frame a mine collects per window size: the path-tree edges
+    (seed, d, nxt, tok, sup, cur) of every candidate gram's occurrences,
+    counted over distinct docs, HAVING sup >= min_sup; and one row
+    (seed, doc_id, pos, prev_h, ch) per occurrence, whose d is NULL.
 
     An edge is one step of a greedy walk: from the length-d path prefix with
     rolling hash cur = c_d to the length-(d+1) prefix nxt = c_{d+1}, whose
@@ -259,8 +252,14 @@ def path_edges(
     (`_occurrences`) before any explode.  nxt hashes the whole path, so it
     fixes the edge: sorting the row's edges by nxt and dropping adjacent
     repeats leaves each edge once per doc, and a plain count(*) is the
-    distinct-doc support.  False-positive occurrences carry a seed hash
-    that no candidate has; the caller drops those edges."""
+    distinct-doc support.
+
+    An occurrence row holds pos (0-based), prev_h = xxhash64 of the token
+    before (NULL at pos 0; backward-closure input, ":675-695") and
+    ch = [c_n, c_{n+1}, ..]: its chain from the seed hash on, which tells
+    the driver whether it is an occurrence of the walk's final phrase.
+    False-positive occurrences carry a seed hash that no candidate has; the
+    driver drops their edges and rows."""
     scan, occs = _occurrences(docs, gate, cand_rows, n, window, max_occs_per_gram)
     # c_k is element k+1 of a chain; a depth d has an edge while the chain
     # holds c_{d+1}
@@ -271,7 +270,7 @@ def path_edges(
         f"'seed', element_at(o.ch, {n + 1}), 'd', d, "
         f"'cur', element_at(o.ch, d + 1), 'tok', element_at(tokens, o.i + d)))))"
     )
-    return (
+    counted = (
         scan.selectExpr(f"array_sort({edges}) AS _e")
         .selectExpr(
             "explode(filter(_e, (e, k) -> k = 0 OR e.nxt != element_at(_e, k).nxt)) AS e"
@@ -283,43 +282,15 @@ def path_edges(
         .agg(F.count("*").alias("sup"), F.first("e.cur").alias("cur"))
         .filter(F.col("sup") >= min_sup)
     )
-
-
-def gather_windows(
-    docs: DataFrame,
-    gate: DataFrame,
-    cand_rows: list,
-    finals: list[tuple],
-    n: int,
-    window: int,
-    max_occs_per_gram: int | None = None,
-) -> DataFrame:
-    """(cid, doc_id, pos, prev_h, is_final) per occurrence of a candidate:
-    `_occurrences`' rows (path_edges counts the same), joined on their seed
-    hash c_n to `finals`, one (seed, cid, flen, fh) row per candidate - the
-    length and chain hash of its final phrase after the walk.  The join
-    drops false positives; Spark plans it from the size of the local frame
-    (a broadcast hash join under autoBroadcastJoinThreshold).  is_final:
-    c_flen = fh.  pos is 0-based; prev_h = xxhash64 of the token before,
-    NULL at pos 0 (backward-closure input, ":675-695")."""
-    scan, occs = _occurrences(docs, gate, cand_rows, n, window, max_occs_per_gram)
-    fin = driver_frame(docs.sparkSession, finals, _FINALS_SCHEMA)
-    return (
-        scan.selectExpr("doc_id", "_hs", f"explode({occs}) AS o")
-        .selectExpr(
-            "doc_id", "_hs", "o.i AS ipos", "o.ch AS ch", f"element_at(o.ch, {n + 1}) AS seed"
-        )
-        .join(fin, "seed")
-        .selectExpr(
-            "cid",
-            "CAST(doc_id AS STRING) AS doc_id",
-            "ipos - 1 AS pos",
-            # element_at is 1-based: index ipos - 1 is the token before
-            "IF(ipos > 1, element_at(_hs, ipos - 1), NULL) AS prev_h",
-            # a chain shorter than the final phrase is no final occurrence
-            "coalesce(try_element_at(ch, flen + 1) = fh, false) AS is_final",
-        )
+    occurrences = scan.selectExpr("doc_id", "_hs", f"explode({occs}) AS o").selectExpr(
+        f"element_at(o.ch, {n + 1}) AS seed",
+        "CAST(doc_id AS STRING) AS doc_id",
+        "o.i - 1 AS pos",
+        # element_at is 1-based: index o.i - 1 is the token before
+        "IF(o.i > 1, element_at(_hs, o.i - 1), NULL) AS prev_h",
+        f"slice(o.ch, {n + 1}, {window}) AS ch",
     )
+    return counted.unionByName(occurrences, allowMissingColumns=True)
 
 
 #: default for max_occs_per_gram: per-gram Bernoulli DOC sampling at rate
@@ -393,19 +364,18 @@ def mine(
     phrase list (driver-side, small).
 
     Job plan (module docstring), one path for every corpus: one word-gate
-    collect, one candidate collect, then per window size ONE path-tree edge
-    aggregation with one exchange (path_edges: all depths counted together,
-    each doc's edges deduped in its row; sub-threshold edges never leave the
-    cluster; each edge carries its token string), the driver's replay of
-    the greedy walk over the frequent edges, and one Arrow transfer of the
-    occurrences (gather_windows) for the sequential occupancy-mask selection
-    over integer (gram, doc, pos) tuples.  The candidates reach both doc
-    scans as broadcast frames: a packed bitmap of their gather hashes gates
-    the gram starts, and the transfer joins the walk's final phrases on the
-    seed hash.  Nothing is cached: 4 shuffles in all.  A phrase that
-    outgrows the window W raises WindowExhausted, and the edges and the
-    transfer run again at 2W.  `strategy` has the one value "distributed";
-    any other raises ValueError.
+    collect, one candidate collect, then per window size ONE Arrow transfer
+    (edges_and_occurrences) of the path-tree edges, aggregated with one
+    exchange (all depths counted together, each doc's edges deduped in its
+    row; sub-threshold edges never leave the cluster; each edge carries its
+    token string), and of the occurrence rows.  The driver replays the
+    greedy walk over the frequent edges, then runs the sequential
+    occupancy-mask selection over integer (gram, doc, pos) tuples.  A
+    packed bitmap of the candidates' gather hashes, broadcast, gates the
+    gram starts.  Nothing is cached: 4 shuffles in all.  A phrase that
+    outgrows the window W raises WindowExhausted, and the one transfer runs
+    again at 2W.  `strategy` has the one value "distributed"; any other
+    raises ValueError.
 
     The word gate is ONE bounded collect (`bitmap_words` of the frequent
     words), which `bitmap_gate` sizes to the frequent words and places -
@@ -496,15 +466,13 @@ def _mine_distributed(
     """Distributed greedy expansion + vectorized driver-side mask selection.
 
     `cand_rows`: (cid, gram, support, h0) per candidate; `gate`: their
-    broadcast gather bitmap.  Two Spark actions, neither over a cache, both
-    reading the occurrences of `_occurrences`:
-
-      edges: path_edges over `docs` - per-doc deduped path-tree edges,
-             count(*) per (seed, d, c_{d+1}, token) HAVING sup >= the
-             lowest threshold; ONE exchange      <- noise edges die cluster-side
-      occurrences: one Arrow transfer of (cid, doc_id, pos, prev_h,
-             is_final) from gather_windows, whose seed-hash join takes the
-             walk's final phrases as a (seed, cid, flen, fh) frame
+    broadcast gather bitmap.  ONE Spark action over no cache,
+    edges_and_occurrences over `docs`: per-doc deduped path-tree edges,
+    count(*) per (seed, d, c_{d+1}, token) HAVING sup >= the lowest
+    threshold in ONE exchange (noise edges die cluster-side), and the
+    occurrence rows (seed, doc_id, pos, prev_h, chain), both from
+    `_occurrences`.  After the walk the driver maps each row's seed hash to
+    its cid and flags the occurrences of the final phrase.
 
     Expansion of a candidate never depends on the occupancy bitmask (the mask
     only gates skip-before/mark-after, bloom_gram_miner.cpp:633-640,697-702),
@@ -520,20 +488,20 @@ def _mine_distributed(
     Because the prefix hash c_d encodes the ENTIRE path, counting all depths
     together is exact: edges of different prefixes can never merge (modulo
     the documented 2^-64 chain-collision caveat, guarded by the pyref
-    equivalence tests).  Sub-threshold edges - the
-    overwhelming majority on noise candidates - are filtered before collect,
-    so driver transfer is bounded by the FREQUENT path structure (boilerplate
-    templates), not the corpus.
+    equivalence tests).  Sub-threshold edges - the overwhelming majority on
+    noise candidates - are filtered before the transfer, so the edges that
+    reach the driver are bounded by the FREQUENT path structure
+    (boilerplate templates), not the corpus.
 
     Backward closure (":675-695") and the canonical example docs need no
-    extra cluster jobs: the single Arrow transfer of per-occurrence
-    tuples - which the sequential selection needs regardless - serves the
-    n_pos0 / distinct-prev closure counters and the min-2 example reduction
-    in pandas, before the score-ordered selection with interval-based numpy
-    mask bookkeeping."""
+    extra cluster jobs: the occurrence rows - which the sequential
+    selection needs regardless - serve the n_pos0 / distinct-prev closure
+    counters and the min-2 example reduction in pandas, before the
+    score-ordered selection with interval-based numpy mask bookkeeping."""
     import numpy as np
     import pandas as pd
     import pyarrow as pa
+    import pyarrow.compute as pc
 
     state = {
         cid: {
@@ -541,7 +509,6 @@ def _mine_distributed(
             "tokens": gram.split(" "),
             "support": support,
             "seed_support": support,
-            "seed": h0,
             "h": h0,
         }
         for cid, gram, support, h0 in cand_rows
@@ -566,14 +533,16 @@ def _mine_distributed(
     thr_by_cid = {
         cid: max(1, -(-min_docs * cap // sup)) for cid, sup in capped_sup.items()
     }
-    edge_rows = path_edges(
+    edge_rows = edges_and_occurrences(
         docs, gate, cand_rows, n, window, cap, min([min_docs, *thr_by_cid.values()])
-    ).collect()
+    ).toArrow()
     clock.lap("edges")
 
+    is_edge = pc.is_valid(edge_rows["d"])
+    edges = edge_rows.filter(is_edge).select(["seed", "d", "nxt", "tok", "sup", "cur"])
     cid_by_seed = {h0: cid for cid, _, _, h0 in cand_rows}
     by_cur: dict[tuple, list] = defaultdict(list)
-    for seed, d, nxt, tok, sup, cur in edge_rows:
+    for seed, d, nxt, tok, sup, cur in zip(*edges.to_pydict().values()):
         cid = cid_by_seed.get(seed)  # None: a gate false positive
         if cid is not None and sup >= thr_by_cid.get(cid, min_docs):
             by_cur[(cid, d, cur)].append((sup, tok, nxt))
@@ -604,20 +573,26 @@ def _mine_distributed(
             st["support"] = min(st["seed_support"], max(min_docs, est))
     clock.lap("walk")
 
-    # single Arrow transfer: (cid, doc_id, pos, prev hash, is_final) - the
-    # occurrence rows the sequential selection needs anyway also serve
-    # the closure counters AND the canonical example docs, so no further
-    # cluster jobs run after this point.  The walk's final phrase of each
-    # candidate rides in as one (seed, cid, final length, final hash) row.
-    # The nullable BIGINT prev_h arrives as pandas Int64, exact: float64
-    # (toPandas' default) would merge hashes that differ only in their low
-    # bits.
-    finals = [(st["seed"], cid, len(st["tokens"]), st["h"]) for cid, st in state.items()]
-    pdf = (
-        gather_windows(docs, gate, cand_rows, finals, n, window, cap)
-        .toArrow()
-        .to_pandas(types_mapper={pa.int64(): pd.Int64Dtype()}.get)
+    # ---- the occurrence rows: each seed hash maps to its cid (0, and the
+    # row drops, for a gate false positive); an occurrence is final iff
+    # its chain ch = [c_n, c_{n+1}, ..] reaches index flen - n and holds
+    # the final hash there.  cids run 1..N in state order
+    # (_number_candidates).  The nullable BIGINT prev_h arrives as pandas
+    # Int64, exact: float64 would merge hashes that differ only in their
+    # low bits.
+    occ = edge_rows.filter(pc.invert(is_edge))
+    cid = pd.Series(occ["seed"].to_numpy()).map(cid_by_seed).fillna(0).to_numpy(np.int64)
+    occ, cid = occ.filter(pa.array(cid > 0)), cid[cid > 0]
+    flen = np.array([0, *(len(st["tokens"]) for st in state.values())])[cid]
+    fh = np.array([0, *(st["h"] for st in state.values())], np.int64)[cid]
+    ch = occ["ch"].combine_chunks()
+    off, vals = ch.offsets.to_numpy(), ch.values.to_numpy()
+    at, end = off[:-1] + flen - n, off[1:]
+    pdf = occ.select(["doc_id", "pos", "prev_h"]).to_pandas(
+        types_mapper={pa.int64(): pd.Int64Dtype()}.get
     )
+    pdf["cid"] = cid
+    pdf["is_final"] = (at < end) & (vals[np.minimum(at, end - 1)] == fh)
     clock.lap("occurrences")
 
     # ---- closure counters + example docs, reduced driver-side -------------

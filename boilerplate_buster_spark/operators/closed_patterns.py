@@ -185,10 +185,9 @@ def closed_contiguous_patterns(
                                ", ' ')").alias("sfx"),
                         F.col("freq").alias("ext_freq"),
                     )
-                    kill = (
-                        ext.select(F.col("pfx").alias("gram"), "ext_freq")
-                        .unionAll(ext.select(F.col("sfx").alias("gram"), "ext_freq"))
-                        .distinct()
+                    # a left-anti join ignores duplicate build rows: no distinct
+                    kill = ext.select(F.col("pfx").alias("gram"), "ext_freq").unionAll(
+                        ext.select(F.col("sfx").alias("gram"), "ext_freq")
                     )
                     survivors = cur.join(
                         F.broadcast(kill),

@@ -8,16 +8,18 @@ pure-Python oracle ``pyref.bloomspan_mine``'s:
   * at ``window=4``, shorter than the longest phrase, so the miner
     retries at a doubled window;
   * with a saturated 64-bit gate bitmap (``bitmap.BITMAP_BITS`` patched), where
-    nearly every gram start passes both gates and both doc scans must
-    drop the false positives.
+    nearly every gram start passes both gates and the driver must drop
+    the false positives.
 
 Corpora: small-vocabulary random texts, which produce support ties in the
 seed order and in the greedy expansion; site/template corpora shaped
 like the extraction benchmark's (per-site footers whose every 3-gram holds
 a site token, global templates on a share of pages, hash-unique filler
-words between parts); and repeat corpora, where one doc holds a seed
+words between parts); repeat corpora, where one doc holds a seed
 several times with continuations that share a prefix and then diverge, so
-a doc's path-tree edges repeat within the doc and must count once.
+a doc's path-tree edges repeat within the doc and must count once; and a
+tail corpus, where every doc ends with a seed too near its end for the
+chain to reach the final phrase.
 """
 
 from __future__ import annotations
@@ -86,6 +88,20 @@ def repeat_corpus(seed: int, n_docs: int) -> list[list[str]]:
     return docs
 
 
+def tail_corpus(seed: int, n_docs: int) -> list[list[str]]:
+    """Each doc holds "s1 s2 s3 p q r" and ends with its seed "s1 s2 s3"
+    (sometimes "s1 s2 s3 p"): the chain of that last occurrence ends before
+    it reaches the final phrase, so it is no final occurrence."""
+    rng = random.Random(seed)
+
+    def filler() -> list[str]:
+        return [f"u{rng.getrandbits(64):016x}" for _ in range(rng.randrange(1, 4))]
+
+    return [filler() + "s1 s2 s3 p q r".split() + filler()
+            + ["s1", "s2", "s3"] + ["p"] * rng.randrange(2)
+            for _ in range(n_docs)]
+
+
 CORPORA = {
     "random-v6-s1": (lambda: random_corpus(1, 6, 24), 3, 2),
     "random-v8-s2": (lambda: random_corpus(2, 8, 30), 3, 3),
@@ -94,6 +110,7 @@ CORPORA = {
     "sites-s2": (lambda: sites_corpus(2, 25, 3), 3, 3),
     "repeat-s1": (lambda: repeat_corpus(1, 24), 3, 5),
     "repeat-s2": (lambda: repeat_corpus(2, 30), 2, 8),
+    "tail-s1": (lambda: tail_corpus(1, 20), 3, 3),
 }
 
 
@@ -150,17 +167,11 @@ def _gathered_candidates(spark, df, n, min_docs):
     )
 
 
-def _seed_finals(cand_rows, n):
-    """gather_windows' (seed, cid, flen, fh) rows with each candidate's
-    final phrase its seed gram: c_n is the seed hash."""
-    return [(r[3], r[0], n, r[3]) for r in cand_rows]
-
-
 def test_saturated_gate_equals_pyref(spark, monkeypatch):
     """A 64-bit bitmap is saturated: nearly every gram start passes the
-    word gate and the gather gate, so path_edges counts the edges of seeds
-    no candidate has (the driver walk drops them) and the seed join of
-    gather_windows drops their occurrences.  The rows stay the oracle's."""
+    word gate and the gather gate, so the edge-and-occurrence frame carries
+    edges and occurrence rows of seeds no candidate has (the driver drops
+    both).  The rows stay the oracle's."""
     monkeypatch.setattr(bitmap, "BITMAP_BITS", 64)
     make, min_docs, ngrams = CORPORA["sites-s2"]
     docs = make()
@@ -168,11 +179,10 @@ def test_saturated_gate_equals_pyref(spark, monkeypatch):
         list(zip(_names(len(docs)), docs)), "doc_id string, tokens array<string>"
     )
     cand_rows, gate = _gathered_candidates(spark, df, ngrams, min_docs)
-    scan, occs = bloomspan._occurrences(df, gate, cand_rows, ngrams, 16, None)
-    gathered = bloomspan.gather_windows(
-        df, gate, cand_rows, _seed_finals(cand_rows, ngrams), ngrams, 16
-    )
-    assert scan.selectExpr(f"explode({occs})").count() > gathered.count()
+    frame = bloomspan.edges_and_occurrences(df, gate, cand_rows, ngrams, 16, None, min_docs)
+    seeds = {r[3] for r in cand_rows}
+    occ_seeds = [r["seed"] for r in frame.filter("d IS NULL").select("seed").collect()]
+    assert any(s not in seeds for s in occ_seeds)
     want = _oracle_rows(docs, min_docs, ngrams)
     assert want
     got = _mined_rows(spark, df, min_docs=min_docs, ngrams=ngrams,
@@ -191,7 +201,7 @@ def test_mine_rejects_any_other_strategy(spark):
 @pytest.mark.parametrize("strategy", ["distributed"])
 def test_closure_counts_prev_hashes_exactly(spark, monkeypatch, strategy):
     """The backward-closure counter compares preceding-token hashes as
-    exact 64-bit ints.  The gathered prev hashes of "x" and "y" are set to
+    exact 64-bit ints.  The transferred prev hashes of "x" and "y" are set to
     2**62 and 2**62 + 1, which float64 cannot tell apart: a float64
     transfer makes them one preceding token and drops "p q r s" by
     closure."""
@@ -203,14 +213,15 @@ def test_closure_counts_prev_hashes_exactly(spark, monkeypatch, strategy):
     df = spark.createDataFrame(
         list(zip(_names(len(docs)), docs)), "doc_id string, tokens array<string>"
     )
-    real = bloomspan.gather_windows
+    real = bloomspan.edges_and_occurrences
 
     def near_prev_hashes(*a, **kw):
+        # the edge rows' prev_h is NULL, and stays NULL
         return real(*a, **kw).withColumn("prev_h", F.expr(
             f"CASE prev_h WHEN xxhash64('x') THEN {2**62}L "
             f"WHEN xxhash64('y') THEN {2**62 + 1}L ELSE prev_h END"))
 
-    monkeypatch.setattr(bloomspan, "gather_windows", near_prev_hashes)
+    monkeypatch.setattr(bloomspan, "edges_and_occurrences", near_prev_hashes)
     want = _oracle_rows(docs, 2, 3)
     assert "p q r s" in [r[0] for r in want]
     assert _mined_rows(spark, df, min_docs=2, ngrams=3, strategy=strategy,
@@ -219,9 +230,9 @@ def test_closure_counts_prev_hashes_exactly(spark, monkeypatch, strategy):
 
 def test_capped_edges_count_the_gathered_doc_sample(spark):
     """A binding cap samples each capped gram's docs once: the edge scan
-    counts, per seed and next token, exactly the docs whose occurrences
-    gather_windows keeps - so expansion, closure and the occupancy mask see
-    one subsample."""
+    counts, per seed and next token, exactly the docs whose occurrence rows
+    the same frame carries - so expansion, closure and the occupancy mask
+    see one subsample."""
     cap, n, window = 40, 3, 8
     rng = random.Random(5)
     docs = [[f"w{i}a", "s1", "s2", "s3", *rng.choice(("a b", "a c", "d")).split(),
@@ -231,26 +242,24 @@ def test_capped_edges_count_the_gathered_doc_sample(spark):
     )
     cand_rows, gate = _gathered_candidates(spark, df, n, 5)
     assert any(r[2] > cap for r in cand_rows)
-    gathered = bloomspan.gather_windows(
-        df, gate, cand_rows, _seed_finals(cand_rows, n), n, window, max_occs_per_gram=cap
-    )
-    # the token after each gathered occurrence's seed, from the doc
+    frame = bloomspan.edges_and_occurrences(df, gate, cand_rows, n, window, cap, 1)
+    cid_by_seed = {r[3]: r[0] for r in cand_rows}
+    # the token after each occurrence's seed, from the doc
     nxt = F.expr(f"try_element_at(tokens, pos + {n + 1})").alias("tok")
     want = {
-        (r["cid"], r["tok"]): r["docs"]
-        for r in gathered.join(df, "doc_id")
-        .select("cid", "doc_id", nxt)
+        (cid_by_seed[r["seed"]], r["tok"]): r["docs"]
+        for r in frame.filter("d IS NULL").select("seed", "doc_id", "pos")
+        .join(df, "doc_id")
+        .select("seed", "doc_id", nxt)
         .filter("tok IS NOT NULL")
-        .groupBy("cid", "tok")
+        .groupBy("seed", "tok")
         .agg(F.countDistinct("doc_id").alias("docs"))
         .collect()
+        if r["seed"] in cid_by_seed
     }
-    cid_by_seed = {r[3]: r[0] for r in cand_rows}
     got = {
         (cid_by_seed[r["seed"]], r["tok"]): r["sup"]
-        for r in bloomspan.path_edges(df, gate, cand_rows, n, window, cap, 1)
-        .filter(f"d = {n}")
-        .collect()
+        for r in frame.filter(f"d = {n}").collect()
         if r["seed"] in cid_by_seed
     }
     assert got == want

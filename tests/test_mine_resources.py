@@ -42,8 +42,9 @@ def test_failed_mine_releases_every_cache(spark, monkeypatch, where):
         # the candidate collect is the only one that carries the seed hash
         _fail_when(monkeypatch, "collect", lambda df: "h0" in df.columns)
     else:
-        # after the edge aggregation, in the last Spark action
-        _fail_when(monkeypatch, "toArrow", lambda df: "is_final" in df.columns)
+        # the last Spark action: the edges and the occurrence rows, whose
+        # chain column no other frame has
+        _fail_when(monkeypatch, "toArrow", lambda df: "ch" in df.columns)
     stats: dict = {}
     with pytest.raises(RuntimeError, match="injected failure"):
         bloomspan.mine(

@@ -1,15 +1,16 @@
 """Certify the cap-binding distributed-mining regime (round-6 verdict #2).
 
 ``max_occs_per_gram`` is the 100-TB transfer guard: when a head gram's
-distinct-doc support exceeds the cap, gather_windows keeps a deterministic
-doc subsample at rate cap/support, expansion thresholds scale to the
-unbiased estimate, and closure/bitmask/examples run over the subsample
-(bloomspan.py module docstring).  Every pre-round-7 test ran far below the
-cap, where the path is trivially exact - this file builds a corpus where
-the cap PROVABLY binds and asserts (a) the sampling branch engages on the
-gathered rows themselves, (b) the stats ledger records the capped grams,
-and (c) the emitted phrase SET equals the exact uncapped distributed run,
-with supports equal to the documented rescaled-estimate surface.
+distinct-doc support exceeds the cap, the mine's edge-and-occurrence action
+keeps a deterministic doc subsample at rate cap/support, expansion
+thresholds scale to the unbiased estimate, and closure/bitmask/examples
+run over the subsample (bloomspan.py module docstring).  Every
+pre-round-7 test ran far below the cap, where the path is trivially
+exact - this file builds a corpus where the cap PROVABLY binds and
+asserts (a) the sampling branch engages on the gathered rows themselves,
+(b) the stats ledger records the capped grams, and (c) the emitted phrase
+SET equals the exact uncapped distributed run, with supports equal to the
+documented rescaled-estimate surface.
 """
 
 from __future__ import annotations
@@ -52,14 +53,14 @@ def test_cap_binds_on_the_gathered_rows(spark, corpus):
     cand_rows, gate = bloomspan._number_candidates(
         spark, bloomspan._with_seed_hashes(grams, 3).collect()
     )
-    # each candidate's seed gram as its final phrase (c_3 is the seed hash)
-    finals = [(r[3], r[0], 3, r[3]) for r in cand_rows]
-    uncapped = bloomspan.gather_windows(
-        corpus, gate, cand_rows, finals, 3, 16, max_occs_per_gram=None
-    ).count()
-    capped = bloomspan.gather_windows(
-        corpus, gate, cand_rows, finals, 3, 16, max_occs_per_gram=CAP
-    ).count()
+    # the candidates' occurrence rows of the edge-and-occurrence frame
+    seeds = F.col("seed").isin([r[3] for r in cand_rows])
+
+    def occurrence_rows(cap):
+        frame = bloomspan.edges_and_occurrences(corpus, gate, cand_rows, 3, 16, cap, MIN_DOCS)
+        return frame.filter(F.col("d").isNull() & seeds).count()
+
+    uncapped, capped = occurrence_rows(None), occurrence_rows(CAP)
     assert capped < uncapped, (
         f"cap={CAP} did not drop any of the {uncapped} gathered occurrence "
         f"rows - the corpus no longer exercises the sampling branch"
